@@ -251,11 +251,6 @@ def bench_task13(spark, aux: dict) -> bool:
         rules = mine_constants(
             t, params, constants="object", quasi_binding=True
         )
-        if not hasattr(rules, "_rdfrules_local_pdf"):
-            # distributed path: cut the mining DAG once before the
-            # confidence pass re-reads it (round-2 lever). The local-gate
-            # result is already a materialized LocalTableScan.
-            rules = rules.localCheckpoint()
         conf = confidences_constants(rules, t, injective=True)
         aux["task13_rules"] = (
             conf
@@ -509,13 +504,18 @@ def run_scaling(sf_dir: str, n_low: int = 4, n_docs: int | None = None,
     scaling criterion measures throughput, so compute must dominate fixed
     per-stage scheduling latency (~10 s of serial barriers at any
     parallelism)."""
+    # fixed per-executor shape across both levels (4-core executors when
+    # n_low allows, else 2-core — n_low=2 pairs as [1,2] vs [4,2])
+    cores_per = 4 if n_low % 4 == 0 else 2
+    if cluster and (n_low < cores_per or n_low % cores_per):
+        raise ValueError(
+            f"run_scaling: n_low={n_low} does not split into "
+            f"{cores_per}-core executors; use an even n_low >= 2"
+        )
     n_docs = n_docs or 4 * n_docs_for(sf_of(sf_dir))
     calib = {n: _effective_cores(n) for n in (n_low, n_low * 4)}
     bw = {n: _effective_bandwidth(n) for n in (n_low, n_low * 4)}
     results = {}
-    # fixed per-executor shape across both levels (4-core executors when
-    # n_low allows, else 2-core — n_low=2 pairs as [1,2] vs [4,2])
-    cores_per = 4 if n_low % 4 == 0 else 2
     for cpus in (n_low, n_low * 4):
         env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus))
         if cluster:

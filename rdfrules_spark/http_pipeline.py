@@ -523,21 +523,33 @@ def _discretize(quads: DataFrame, params: dict) -> DataFrame:
     ).dropDuplicates(["s", "p", "o", "g"])
 
 
+#: bound on the distinct numeric predicates DiscretizeInBulk collects when
+#: no ``predicates`` are given (the writers' predicate bound)
+_MAX_BULK_PREDICATES = 4096
+
+
 def _discretize_in_bulk(quads: DataFrame, params: dict) -> DataFrame:
     """DiscretizeInBulk {predicates, task}: per-predicate intervals of the
     same task, applied in ONE broadcast range-join rewrite
     (data/DiscretizeInBulk.scala:15-28 folds over the predicates the same
     driver-side way; the interval tables are tiny). Empty ``predicates`` =
-    every predicate with at least one numeric object."""
+    every predicate with at least one numeric object; more than
+    ``_MAX_BULK_PREDICATES`` of them raise rather than collect unbounded
+    rows to the driver."""
     from rdfrules_spark.operators.discretize import interval_literal
 
     preds = [str(x) for x in params.get("predicates", [])]
     if not preds:
-        preds = sorted(
-            r["p"]
-            for r in quads.where(F.col("o").try_cast("double").isNotNull())
-            .select("p").distinct().collect()
+        rows = (
+            quads.where(F.col("o").try_cast("double").isNotNull())
+            .select("p").distinct().limit(_MAX_BULK_PREDICATES + 1).collect()
         )
+        if len(rows) > _MAX_BULK_PREDICATES:
+            raise PipelineError(
+                f"DiscretizeInBulk: >{_MAX_BULK_PREDICATES} distinct numeric "
+                "predicates; pass explicit predicates"
+            )
+        preds = sorted(r["p"] for r in rows)
     spark = quads.sparkSession
     per = []
     for p in preds:

@@ -45,6 +45,14 @@ Output rows: (head, p, head_const, atoms array<string> sorted, shape,
 support, head_size, head_coverage) — atom string "subj|pred|obj" with vars
 ?a ?b ?c and constants "C=<v>"; identical encoding to the brute oracle
 (mining/brute.mine_brute_constants) used by the tests.
+
+Driver-local gate: at most ``local_threshold`` input triples (default
+``local_constants.LOCAL_TRIPLES_MAX``; 0 forces this distributed plan)
+run the same algebra on the driver (mining/local_constants.py). The
+probe is the collect itself (``local_constants.collect_local``): one
+task that stops after ``local_threshold + 1`` rows, whatever the number
+of input partitions. The rule-count bound of the same gate applies in
+measures_constants.confidences_constants.
 """
 
 from __future__ import annotations
@@ -53,6 +61,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rdfrules_spark.mining.amie import MiningParams, _b, _btid
+from rdfrules_spark.mining.local_constants import (
+    LOCAL_TRIPLES_MAX,
+    collect_local,
+    mine_constants_local,
+)
 
 
 def _const_side(triples: DataFrame, constants: str) -> DataFrame | None:
@@ -199,7 +212,7 @@ def mine_constants(
     constants: str = "anywhere",
     constants_for_predicates: dict | None = None,
     quasi_binding: bool = False,
-    local_threshold: int | None = None,
+    local_threshold: int = LOCAL_TRIPLES_MAX,
 ) -> DataFrame:
     """Complete closed-rule set (lengths 2..max_rule_length, constants per
     `constants` policy) INCLUDING the constant-free shapes, as canonical
@@ -263,35 +276,21 @@ def mine_constants(
     if params.without_predicates is not None:
         triples = triples.where(~F.col("p").isin(params.without_predicates))
 
-    # Adaptive small-input gate (same pattern as canonicalize
-    # .connected_components): at driver-sized inputs the ~60-stage staged
-    # plan below is pure scheduling overhead — run the identical algebra
-    # vectorized on the driver instead. limit(thr+1) bounds the gate probe
-    # so a 100 TB input never pays a full count; above the gate the
-    # distributed path is byte-identical to before.
-    from rdfrules_spark.mining.local_constants import (
-        local_threshold as _gate,
-        mine_constants_local,
-    )
-
-    thr = _gate(local_threshold)
-    if thr and triples.limit(thr + 1).count() <= thr:
-        tpdf = (
-            triples.select("s", "p", "o").toPandas().drop_duplicates()
-        )
+    # Adaptive small-input gate (local_constants.collect_local): at
+    # driver-sized inputs the ~60-stage staged plan below is pure
+    # scheduling overhead — run the identical algebra vectorized on the
+    # driver instead. Above the gate the distributed path is unchanged.
+    tpdf = collect_local(triples.select("s", "p", "o"), local_threshold)
+    if tpdf is not None:
         pdf = mine_constants_local(
-            tpdf, params, constants, constants_for_predicates, quasi_binding
+            tpdf.drop_duplicates(), params, constants,
+            constants_for_predicates, quasi_binding,
         )
-        spark = triples.sparkSession
-        cols = pdf[["head", "p", "atoms", "shape", "support", "head_size",
-                    "head_coverage"]]
-        sdf = spark.createDataFrame(cols, schema=_RULES_SCHEMA)
-        # stash the pandas ruleset on the DataFrame wrapper so a follow-up
-        # confidences_constants under the same gate skips the Arrow
-        # round-trip (bench/pipeline callers also skip localCheckpoint
-        # when they see this attribute — the plan is a LocalTableScan)
-        sdf._rdfrules_local_pdf = cols
-        return sdf
+        return triples.sparkSession.createDataFrame(
+            pdf[["head", "p", "atoms", "shape", "support", "head_size",
+                 "head_coverage"]],
+            schema=_RULES_SCHEMA,
+        )
 
     # size(injectiveMapping): non-reflexive triple count under injective
     # (TripleHashIndex.scala:61-66)

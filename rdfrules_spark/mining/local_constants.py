@@ -6,14 +6,17 @@ fixed scheduling / shuffle-exchange latency on data that fits in driver
 memory — measured 99.7 s for the task13 pipeline (19.7k triples,
 951,333 rules) where the work itself is seconds of vectorized joins.
 This module is the same adaptive-gate pattern as
-canonicalize.connected_components: below ``RDFRULES_LOCAL_MINING_MAX``
-triples (default 200k, env-overridable; ``local_threshold=0`` forces
-distributed) the public entry points ``mine_constants`` /
-``confidences_constants`` collect the triple set once and run the
+canonicalize.connected_components, with one gate: ``collect_local``
+returns a DataFrame as pandas when it has at most ``bound`` rows, else
+None. The bounded collect is the probe, and it is one task whatever the
+number of input partitions. ``mine_constants`` / ``confidences_constants``
+give it two bounds: ``LOCAL_TRIPLES_MAX`` input triples (their
+``local_threshold`` parameter; 0 forces the distributed path) and, for
+confidences, ``LOCAL_RULES_MAX`` rules. Within them they run the
 IDENTICAL staged algebra — same survivor-set gating, same distinct-triple
 / injective laws, same PCA branch machinery — as DuckDB SQL over
 integer-coded terms, with numpy for the per-rule law assembly and the
-canonical-string emission. Above the gate the distributed path is
+canonical-string emission. Above either bound the distributed path is
 untouched — the 100 TB posture always takes the distributed loop.
 
 Engine choice, measured: a pure pandas-merge transliteration of the same
@@ -56,17 +59,35 @@ import os
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 
-_ENV_GATE = "RDFRULES_LOCAL_MINING_MAX"
-_DEFAULT_GATE = 200_000
+#: input triples at or below which constants mining runs on the driver
+LOCAL_TRIPLES_MAX = 200_000
+#: rules at or below which confidences_constants collects the ruleset to
+#: the driver. The largest ruleset any caller mines locally today is
+#: task13 at rule length 3: 1,056,065 rules from the committed export of
+#: its 19,739 triples, before the confidence filter leaves 950,872 (the
+#: reference reports 951,333). 2M keeps it local with ~2x headroom. A
+#: larger ruleset, such as one mined distributed over a small triple set,
+#: takes the distributed confidence path instead of an unbounded collect.
+LOCAL_RULES_MAX = 2_000_000
 
 
-def local_threshold(explicit: int | None = None) -> int:
-    """Resolve the gate: explicit param wins, else env, else default.
-    0 disables the local path."""
-    if explicit is not None:
-        return explicit
-    return int(os.environ.get(_ENV_GATE, _DEFAULT_GATE))
+def collect_local(df: DataFrame, bound: int) -> pd.DataFrame | None:
+    """``df`` as pandas when it has at most ``bound`` rows, else None
+    (always None for ``bound`` <= 0, without running a job).
+
+    The bounded collect is the gate probe. ``coalesce(1)`` makes the
+    ``limit`` one task that stops reading after ``bound + 1`` rows, where
+    a bare ``limit(n).toPandas()`` runs a LocalLimit task on every input
+    partition feeding an exchange. The price: a shuffle-free plan
+    upstream of ``df`` runs in that one task. Arrow (``toPandas``) rather
+    than ``collect()``: on a 4-vCPU VM a 951k-rule collect took ~2.5 s
+    this way and ~9 s unpickling Rows."""
+    if bound <= 0:
+        return None
+    pdf = df.coalesce(1).limit(bound + 1).toPandas()
+    return pdf if len(pdf) <= bound else None
 
 
 # --------------------------------------------------------------------------
@@ -970,9 +991,10 @@ def _parse_rules(rules_pdf: pd.DataFrame, enc: _Enc) -> pd.DataFrame:
     # atoms --------------------------------------------------------------
     atoms = rules_pdf["atoms"].to_numpy()
     n_at = np.asarray([len(a) for a in atoms], dtype=np.int64)
-    flat = np.asarray(
-        [a for row in atoms for a in row], dtype=object
-    )
+    # toPandas gives each rule's atoms as an ndarray; a Python loop over
+    # 1M of them costs ~1 s more than one concatenate
+    flat = (np.concatenate(atoms).astype(object) if n
+            else np.empty(0, dtype=object))
     arow = np.repeat(np.arange(n, dtype=np.int64), n_at)
     offs = np.concatenate([[0], np.cumsum(n_at)[:-1]]) if n else n_at
     apos = (
@@ -1000,7 +1022,7 @@ def _parse_rules(rules_pdf: pd.DataFrame, enc: _Enc) -> pd.DataFrame:
     ua = {
         "is_ca": is_ca, "q": q_codes, "cst": cst_codes,
         "e": np.where(var_at_s, 0, 1).astype(np.int64),
-        "uvar": uvar, "s_var": a_s, "o_var": a_o,
+        "uvar": uvar, "s_var": a_s, "o_var": a_o, "str": astrs,
     }
     # expand to per-rule atom slots (atom0 / atom1), preserving BOTH the
     # array order and the inst/vv sub-orders the Spark parser uses
@@ -1721,9 +1743,13 @@ def confidences_constants_local(
         drop=True
     ).copy()
     kept_rids = R["rid"].to_numpy()
+    # rid = head<-atom0;atom1 from the parsed atom ids (-1 -> "")
+    astr = np.append(R.attrs["ua"]["str"], "")
+    at1 = R["_at1"].to_numpy()
     out["rid"] = _cat(
         out["head"].to_numpy(dtype=object), "<-",
-        np.asarray([";".join(a) for a in out["atoms"]], dtype=object),
+        astr[R["_at0"].to_numpy()],
+        np.where(at1 >= 0, ";", "").astype(object), astr[at1],
     )
     bs = sizes["body_size"].reindex(kept_rids).to_numpy(dtype=np.float64)
     ps = sizes["pca_body_size"].reindex(kept_rids).to_numpy(

@@ -14,12 +14,28 @@ Reference semantics (core:algorithm/amie/RuleCounting.scala):
 Each shape is one aggregation job over the parsed atom components; rules
 are keyed by `rid` (head + canonical body). CWA = support/body_size;
 PCA = support/pca_body_size.
+
+Driver-local gate (``local_constants.collect_local``, the same one
+mining/constants.mine_constants uses): the triples are collected under
+``local_threshold`` (default ``LOCAL_TRIPLES_MAX``) and then the rules
+under ``LOCAL_RULES_MAX``; each bounded collect is its own probe, one
+task whatever the number of input partitions. Within both bounds the
+confidences run on the driver, above either the distributed plan below
+runs. A ruleset mined on the driver therefore makes one Arrow round trip
+(createDataFrame, then this collect).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from rdfrules_spark.mining.local_constants import (
+    LOCAL_RULES_MAX,
+    LOCAL_TRIPLES_MAX,
+    collect_local,
+    confidences_constants_local,
+)
 
 
 def _split(col, i):
@@ -150,7 +166,7 @@ _CONF_SCHEMA = (
 
 def confidences_constants(
     rules: DataFrame, triples: DataFrame, injective: bool = False,
-    local_threshold: int | None = None,
+    local_threshold: int = LOCAL_TRIPLES_MAX,
 ) -> DataFrame:
     """Attach body_size, cwa_confidence, pca_body_size, pca_confidence to
     every canonical rule row (all 9 shapes).
@@ -160,26 +176,19 @@ def confidences_constants(
     variable bindings — RulesetSpec's 105/12/57/810 confidence goldens need
     it even though mining itself counts support non-injectively.
 
-    Adaptive small-input gate (local_constants module): below the gate the
-    identical per-shape algebra runs vectorized on the driver — at tiny
-    inputs the ~40-stage distributed plan below is pure scheduling
-    overhead. The gate probe is limit()-bounded; above it this distributed
-    path is unchanged."""
-    from rdfrules_spark.mining.local_constants import (
-        confidences_constants_local,
-        local_threshold as _gate,
+    Within the driver-local gate (module docstring) the identical
+    per-shape algebra runs vectorized on the driver — at tiny inputs the
+    ~40-stage distributed plan below is pure scheduling overhead."""
+    tpdf = collect_local(triples.select("s", "p", "o"), local_threshold)
+    rules_pdf = None if tpdf is None else collect_local(
+        rules.select("head", "p", "atoms", "shape", "support", "head_size",
+                     "head_coverage"),
+        LOCAL_RULES_MAX,
     )
-
-    thr = _gate(local_threshold)
-    if thr and triples.limit(thr + 1).count() <= thr:
-        tpdf = triples.select("s", "p", "o").toPandas().drop_duplicates()
-        rules_pdf = getattr(rules, "_rdfrules_local_pdf", None)
-        if rules_pdf is None:
-            rules_pdf = rules.select(
-                "head", "p", "atoms", "shape", "support", "head_size",
-                "head_coverage",
-            ).toPandas()
-        out = confidences_constants_local(rules_pdf, tpdf, injective)
+    if rules_pdf is not None:
+        out = confidences_constants_local(
+            rules_pdf, tpdf.drop_duplicates(), injective
+        )
         return triples.sparkSession.createDataFrame(
             out, schema=_CONF_SCHEMA
         )

@@ -368,6 +368,24 @@ def test_discretize_bulk_equals_per_predicate(spark, numeric_tsv):
     assert bulk.where(F.col("p") == "<knows>").collect()[0]["o"] == "<e1>"
 
 
+def test_discretize_bulk_bounds_predicate_collect(spark, tmp_path):
+    """DiscretizeInBulk without ``predicates`` collects the distinct
+    numeric predicates under a bound and fails loudly past it."""
+    path = tmp_path / "wide.tsv"
+    with open(path, "w", encoding="utf-8") as f:
+        for i in range(4097):
+            f.write(f"<e0>\t<p{i}>\t{i}.\n")
+    with pytest.raises(PipelineError, match=">4096 distinct numeric"):
+        run_pipeline_json(spark, [
+            {"name": "LoadGraph",
+             "parameters": {"path": str(path), "settings": "tsvRaw"}},
+            {"name": "DiscretizeInBulk", "parameters": {
+                "predicates": [],
+                "task": {"name": "Equidistance", "bins": 2}}},
+            {"name": "GetQuads"},
+        ])
+
+
 def test_export_then_load_index(spark, tmp_path, yago_triples):
     """ExportIndex -> LoadIndex round-trip (index/ExportIndex.scala,
     LoadIndex.scala): LoadIndex is a valid FIRST task."""

@@ -14,8 +14,11 @@ import random
 
 import pytest
 
+from rdfrules_spark.mining import constants as constants_mod
+from rdfrules_spark.mining import measures_constants as measures_constants_mod
 from rdfrules_spark.mining.amie import MiningParams
 from rdfrules_spark.mining.constants import mine_constants
+from rdfrules_spark.mining.local_constants import collect_local
 from rdfrules_spark.mining.measures_constants import confidences_constants
 
 
@@ -92,3 +95,109 @@ def test_confidences_local_equals_distributed(spark, kg, inj):
     assert set(loc) == set(dist)
     diffs = {k: (loc[k], dist[k]) for k in loc if loc[k] != dist[k]}
     assert not diffs, f"{len(diffs)} mismatches, e.g. {list(diffs.items())[:3]}"
+
+
+def _conf_rows(df):
+    return {
+        r["rid"]: (
+            r["body_size"], r["pca_body_size"],
+            None if r["cwa_confidence"] is None
+            else round(r["cwa_confidence"], 9),
+            None if r["pca_confidence"] is None
+            else round(r["pca_confidence"], 9),
+        )
+        for r in df.collect()
+    }
+
+
+@pytest.fixture(scope="module")
+def kg16(kg):
+    """The same KG spread over 16 partitions."""
+    df = kg.repartition(16).cache()
+    df.count()
+    yield df
+    df.unpersist()
+
+
+def _spy(monkeypatch, module, name):
+    calls = []
+    real = getattr(module, name)
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(module, name, spy)
+    return calls
+
+
+def test_collect_local_bound_is_one_task(spark, kg16):
+    """The bounded collect is the gate probe: exactly ``bound`` rows come
+    back as pandas, ``bound + 1`` give None, and either way the probe is a
+    single task however many partitions the input has."""
+    sc = spark.sparkContext
+    n = kg16.count()
+    assert kg16.rdd.getNumPartitions() == 16
+    for bound, want in ((n, n), (n - 1, None), (n // 4, None)):
+        group = f"collect_local_{bound}"
+        sc.setJobGroup(group, group)
+        try:
+            pdf = collect_local(kg16, bound)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert (None if pdf is None else len(pdf)) == want
+        tracker = sc.statusTracker()
+        # completed, not planned, tasks: a job also lists the skipped
+        # map stage of the input's cached repartition
+        tasks = sum(
+            tracker.getStageInfo(s).numCompletedTasks
+            for j in tracker.getJobIdsForGroup(group)
+            for s in tracker.getJobInfo(j).stageIds
+        )
+        assert tasks == 1, (bound, tasks)
+    assert collect_local(kg16, 0) is None
+
+
+def test_miner_gate_boundary(spark, kg16, monkeypatch):
+    """An input of exactly ``local_threshold`` triples runs on the driver,
+    one triple more runs distributed; both give the same rules."""
+    calls = _spy(monkeypatch, constants_mod, "mine_constants_local")
+    n = kg16.count()
+    params = MiningParams(min_head_size=5, min_support=2,
+                          min_head_coverage=0.05, injective=True)
+
+    def mine(thr):
+        return {_rule_key(r): (r["support"], r["head_size"])
+                for r in mine_constants(kg16, params, constants="object",
+                                        quasi_binding=True,
+                                        local_threshold=thr).collect()}
+
+    at = mine(n)
+    assert len(calls) == 1
+    above = mine(n - 1)
+    assert len(calls) == 1
+    assert at and at == above
+
+
+def test_confidences_rule_bound(spark, kg, monkeypatch):
+    """A ruleset above LOCAL_RULES_MAX falls through to the distributed
+    confidence path, even with the triples below the triple gate, and
+    gives the same rows as the driver-local path."""
+    rules = mine_constants(
+        kg,
+        MiningParams(min_head_size=5, min_support=2,
+                     min_head_coverage=0.05, injective=True),
+        constants="anywhere", quasi_binding=True,
+    ).cache()
+    n_rules = rules.count()
+    calls = _spy(monkeypatch, measures_constants_mod,
+                 "confidences_constants_local")
+    monkeypatch.setattr(measures_constants_mod, "LOCAL_RULES_MAX", n_rules)
+    loc = _conf_rows(confidences_constants(rules, kg, injective=True))
+    assert len(calls) == 1
+    monkeypatch.setattr(measures_constants_mod, "LOCAL_RULES_MAX",
+                        n_rules - 1)
+    dist = _conf_rows(confidences_constants(rules, kg, injective=True))
+    assert len(calls) == 1
+    assert loc and loc == dist
+    rules.unpersist()
