@@ -84,11 +84,24 @@ def build_link_map(statements: DataFrame, candidates: DataFrame) -> DataFrame:
     )
 
 
+#: link-map rows up to which apply_link_map broadcasts the map. This marks
+#: the measured crossover era of the columnar pipeline (round 4): with the
+#: join output persisted once, broadcast wins at BOTH cluster sizes up to
+#: at least 1.63M map rows (6.6 vs 11.7 s at 8x4 executors, 14.4 vs
+#: 19.4 s at 2x4 — two full shuffles of the 25M-row stream cost more than
+#: one driver hash build), and the driver build cost grows ~linearly with
+#: map rows, so the crossover sits at a few million. Entity dictionaries
+#: past that (the 100 TB posture: billions of rows) take the distributed
+#: shuffle-hash path. (Round-3 context: with the join output NOT reused,
+#: the crossover measured at ~1M rows — re-measure when the consumption
+#: pattern changes.)
+BROADCAST_ROWS = 4_000_000
+
+
 def apply_link_map(
     statements: DataFrame,
     link: DataFrame,
     map_rows: int | None = None,
-    broadcast_rows: int = 4_000_000,
 ) -> DataFrame:
     """Map the mention stream through an already-materialized link map —
     the join half of :func:`link_statements`, exposed so callers that need
@@ -96,23 +109,22 @@ def apply_link_map(
     once and share it. Strategy selection is documented on
     :func:`link_statements`; ``map_rows`` is the materialized count (pass
     it when known to avoid a recount)."""
-    if broadcast_rows:
-        if map_rows is None:
-            map_rows = link.count()
-        if map_rows <= broadcast_rows:
-            bl_s = F.broadcast(link)
-            linked = (
-                statements.join(bl_s, statements["s_surf"] == bl_s["surface"])
-                .drop("surface")
-                .withColumnRenamed("iri", "s")
-            )
-            bl_o = F.broadcast(link)
-            return (
-                linked.join(bl_o, linked["o_surf"] == bl_o["surface"])
-                .drop("surface")
-                .withColumnRenamed("iri", "o")
-                .select("doc_id", "stmt_no", "s", "p", "o")
-            )
+    if map_rows is None:
+        map_rows = link.count()
+    if map_rows <= BROADCAST_ROWS:
+        bl_s = F.broadcast(link)
+        linked = (
+            statements.join(bl_s, statements["s_surf"] == bl_s["surface"])
+            .drop("surface")
+            .withColumnRenamed("iri", "s")
+        )
+        bl_o = F.broadcast(link)
+        return (
+            linked.join(bl_o, linked["o_surf"] == bl_o["surface"])
+            .drop("surface")
+            .withColumnRenamed("iri", "o")
+            .select("doc_id", "stmt_no", "s", "p", "o")
+        )
     s_link = link.withColumnRenamed("surface", "s_surf").withColumnRenamed(
         "iri", "s"
     )
@@ -129,21 +141,19 @@ def apply_link_map(
 def link_statements(
     statements: DataFrame,
     candidates: DataFrame,
-    materialize_map: bool = True,
-    broadcast_rows: int = 4_000_000,
 ) -> DataFrame:
     """-> linked(doc_id, stmt_no, s, p, o) with s/o as entity IRIs.
 
-    ``materialize_map``: the link map feeds TWO joins (s-side and o-side);
-    lazily each join-side build would recompute the 2x-surface distinct +
-    groupBy from scratch — one eager cut halves the map-build work. Still
-    fully distributed storage (block manager), valid at any map size.
+    The link map feeds TWO joins (s-side and o-side); lazily each
+    join-side build would recompute the 2x-surface distinct + groupBy
+    from scratch — one eager cut halves the map-build work. Still fully
+    distributed storage (block manager), valid at any map size.
 
     Join strategy is SIZE-ADAPTIVE (the same decision AQE makes, but pinned
     on the exact materialized row count, which we get for free from the
     checkpoint):
 
-    * map fits (<= ``broadcast_rows``): broadcast it. The two broadcast
+    * map fits (<= ``BROADCAST_ROWS``): broadcast it. The two broadcast
       subtrees are kept IDENTICAL (rename after the join, not before) so
       Catalyst's ReusedExchange ships ONE build to executors, and the fact
       stream keeps its checkpoint partitioning — zero shuffle of the
@@ -155,24 +165,9 @@ def link_statements(
     * map too big (entity dictionaries at the 100 TB posture are billions
       of rows): distributed shuffle-hash joins, both sides partitioned —
       per-byte cost, no driver memory exposure.
-
-    The 4M-row default marks the measured crossover era of the columnar
-    pipeline (round 4): with the join output persisted once, broadcast
-    wins at BOTH cluster sizes up to at least 1.63M map rows (6.6 vs
-    11.7 s at 8x4 executors, 14.4 vs 19.4 s at 2x4 — two full shuffles
-    of the 25M-row stream cost more than one driver hash build), and the
-    driver build cost grows ~linearly with map rows, so the crossover
-    sits at a few million. Entity dictionaries past that (the 100 TB
-    posture: billions of rows) take the distributed shuffle-hash path.
-    (Round-3 context: with the join output NOT reused, the crossover
-    measured at ~1M rows — re-measure when the consumption pattern
-    changes.)
     """
-    link = build_link_map(statements, candidates)
-    if materialize_map:
-        link = link.localCheckpoint(eager=True)
-        return apply_link_map(statements, link, broadcast_rows=broadcast_rows)
-    return apply_link_map(statements, link, broadcast_rows=0)
+    link = build_link_map(statements, candidates).localCheckpoint(eager=True)
+    return apply_link_map(statements, link)
 
 
 def split_sameas(linked: DataFrame) -> tuple[DataFrame, DataFrame]:

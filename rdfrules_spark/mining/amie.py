@@ -26,9 +26,7 @@ Scale notes:
   * `B` (direction-tagged triples) is materialized once and reused by every
     shape — one scan, no recompute;
   * the L3-3var join on the shared var c is the skew hot spot (celebrity
-    entities): AQE skew-join splitting handles it; the optional
-    `max_var_degree` knob drops super-hub c bindings (documented
-    approximation, off by default);
+    entities): AQE skew-join splitting handles it;
   * HC filtering happens inside each shape's aggregation (HAVING), so
     nothing survives a stage that the next stage cannot use — the Spark
     analog of the reference's support-threshold pruning during refinement
@@ -382,7 +380,6 @@ def mine_l3_3var(
     triples: DataFrame,
     heads: DataFrame,
     params: MiningParams,
-    max_var_degree: int | None = None,
 ) -> DataFrame:
     """(?a p ?b) <- B1(?a,?c), B2(?b,?c): the path-join workload.
 
@@ -398,11 +395,6 @@ def mine_l3_3var(
     b2 = b.select(F.col("x").alias("b"), F.col("y").alias("c"),
                   F.col("q").alias("r"), F.col("d").alias("d2"),
                   _btid().alias("tid2"))
-    if max_var_degree is not None:
-        deg = b.groupBy("y").agg(F.count(F.lit(1)).alias("_deg"))
-        keep = deg.where(F.col("_deg") <= max_var_degree).select("y")
-        b1 = b1.join(keep.withColumnRenamed("y", "c"), "c", "left_semi")
-        b2 = b2.join(keep.withColumnRenamed("y", "c"), "c", "left_semi")
     j = h.join(b1, "a").join(b2, ["b", "c"]).where(
         (F.col("tid1") != F.col("tid2"))
         & (F.col("tid1") != _htid()) & (F.col("tid2") != _htid())

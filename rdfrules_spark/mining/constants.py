@@ -44,7 +44,7 @@ Closed-rule shapes over head types H0=(?a p ?b), HS=(C p ?b), HO=(?a p C)
 Output rows: (head, p, head_const, atoms array<string> sorted, shape,
 support, head_size, head_coverage) — atom string "subj|pred|obj" with vars
 ?a ?b ?c and constants "C=<v>"; identical encoding to the brute oracle
-(mining/brute.mine_brute_constants) used by the tests.
+(tests/oracles/brute.mine_brute_constants).
 
 Driver-local gate: at most ``local_threshold`` input triples (default
 ``local_constants.LOCAL_TRIPLES_MAX``; 0 forces this distributed plan)

@@ -23,21 +23,29 @@ Engine choice, measured: a pure pandas-merge transliteration of the same
 algebra ran 245 s on the task13 input (single-threaded block copies at
 the 45-90M-row join intermediates); DuckDB's parallel hash joins and
 aggregates run it in seconds, and per-rule COUNTS are computed inside
-DuckDB (``_binding_counts``) so only rule-table-sized arrays cross the
-Arrow boundary. DuckDB here is driver-local compute like the numpy CC
-gate — the correctness oracle for the registry remains the independent
-DuckDB SQL written per query, and the hard parity anchors are the
-executed-reference dumps, not any SQL engine.
+DuckDB so only rule-table-sized arrays cross the Arrow boundary. DuckDB
+here is driver-local compute like the numpy CC gate — the correctness
+oracle for the registry remains the independent DuckDB SQL written per
+query, and the hard parity anchors are the executed-reference dumps, not
+any SQL engine.
 
-Semantics are a 1:1 transliteration of the Spark expressions (reference
-cites live in mining/constants.py and mining/measures_constants.py;
-RuleRefinement.scala / RuleCounting.scala / AtomCounting.scala). Parity
-is pinned three ways: the existing golden / brute / executed-reference
-suites (tests/test_constants_mining.py, test_refexec_parity.py,
-test_refexec_confidences.py, test_task13_parity.py) exercise THIS path at
-their small inputs now that the gate is on; tests/test_local_constants.py
-asserts local == distributed row-for-row at the gate boundary; and the
-full task13 pipeline reproduces the executed reference's 951,333 rules.
+One SQL text, two executors: the instantiated-head shapes s6-s9 have no
+twin here. Their binding sets, injective exclusions and PCA branch law
+are the SQL text of mining/inst_sql.py, which DuckDB runs below the gate
+over the integer-coded triples (``_inst_sizes``) and Spark SQL runs above
+it (measures_constants.confidences_constants / qpca_constants).
+
+The other shapes are a 1:1 transliteration of the Spark expressions
+(reference cites live in mining/constants.py and
+mining/measures_constants.py; RuleRefinement.scala / RuleCounting.scala /
+AtomCounting.scala). Parity is pinned three ways: the existing golden /
+brute-oracle (tests/oracles) / executed-reference suites
+(tests/test_constants_mining.py, test_refexec_parity.py,
+test_refexec_confidences.py, test_task13_parity.py) exercise THIS path
+at their small inputs now that the gate is on;
+tests/test_local_constants.py asserts local == distributed row-for-row
+at the gate boundary, every constants shape included; and the full
+task13 pipeline reproduces the executed reference's 951,333 rules.
 
 Implementation notes:
   * all terms (s/p/o/constants) share one integer code space; string
@@ -60,6 +68,8 @@ import os
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from rdfrules_spark.mining.inst_sql import COUNTS, INST_SHAPES
 
 #: input triples at or below which constants mining runs on the driver
 LOCAL_TRIPLES_MAX = 200_000
@@ -1072,11 +1082,7 @@ def _vv_fields(R: pd.DataFrame, col: str, primary, prefix: str):
     ua = R.attrs["ua"]
     ids = R[col].to_numpy()
     safe = np.maximum(ids, 0)
-    sv = ua["s_var"][safe]
-    if isinstance(primary, str):
-        d = np.where(sv == primary, 0, 1)
-    else:
-        d = np.where(sv == primary, 0, 1)
+    d = np.where(ua["s_var"][safe] == primary, 0, 1)
     return pd.DataFrame({
         prefix + "q": ua["q"][safe],
         prefix + "d": d.astype(np.int64),
@@ -1120,7 +1126,6 @@ class _Rel:
         np.add.at(self.psz_by_code, enc.pc[mask], 1)
         # plain predicate sizes (body_sizes l2 uses the same mask)
         self._se_keys = None
-        self._ne = None
 
     def se_member(self, p, pos, x) -> np.ndarray:
         """Membership in SE(p, pos, x) — vectorized."""
@@ -1135,15 +1140,6 @@ class _Rel:
         if not len(self._se_keys):
             return np.zeros(len(q), dtype=bool)
         return self._se_keys[idx] == q
-
-    def nent(self, p, pos) -> np.ndarray:
-        """#entities of p at position pos (NE)."""
-        if self._ne is None:
-            self._ne = np.bincount(
-                self.SE["p"].to_numpy() * 2 + self.SE["pos"].to_numpy(),
-                minlength=2 * self.N,
-            ).astype(np.int64)
-        return self._ne[np.asarray(p) * 2 + np.asarray(pos)]
 
     def casize(self, df, qc, cc, ec) -> np.ndarray:
         """_casize: instantiated-atom slice size, non-reflexive
@@ -1280,58 +1276,6 @@ def _varonly_sizes(R: pd.DataFrame, rel: _Rel, injective: bool):
         sized = sized.merge(ps, on=["p", "q", "d1", "r", "d2"], how="left")
         outs.append(sized[["rid", "body_size", "pca_body_size"]])
     return pd.concat(outs, ignore_index=True)
-
-
-def _binding_counts(con, src_sql: str, n_rules: int,
-                    restricted: bool) -> np.ndarray:
-    """Per-rule counts of a DISTINCT (rid, v) binding source, computed
-    INSIDE DuckDB (shipping the binding sets to Python measured 13 s of
-    the task13 confidence pass; the counts are rule-table sized).
-    ``restricted``: the PCA restriction — v must be an entity of the
-    head predicate at its higherCardinalitySide, applied only to rules
-    with hside == fvpos (the others reuse body_size)."""
-    if not restricted:
-        q = f"SELECT rid, count(*) AS c FROM ({src_sql}) GROUP BY rid"
-    else:
-        q = f"""
-            SELECT b.rid, count(*) AS c FROM ({src_sql}) b
-            JOIN meta ON meta.rid = b.rid
-            JOIN SE ON SE.p = meta.p AND SE.pos = meta.hside
-                   AND SE.x = b.v
-            WHERE meta.hside = meta.fvpos
-            GROUP BY b.rid"""
-    d = con.execute(q).fetchnumpy()
-    out = np.zeros(n_rules, dtype=np.int64)
-    out[np.asarray(d["rid"])] = np.asarray(d["c"])
-    return out
-
-
-def _inst_finish_counts(shaped, body, pcares, rel, n_rules,
-                        pcaraw=None, bscore=None):
-    """measures_constants.inst_finish from per-rule COUNT arrays (body /
-    restricted / raw-restricted), branch laws unchanged
-    (RuleCounting.scala:268-286)."""
-    rids = shaped["rid"].to_numpy()
-    p = shaped["p"].to_numpy()
-    hside = shaped["hside"].to_numpy()
-    fvpos = shaped["fvpos"].to_numpy()
-    is_r = hside == fvpos
-    if pcaraw is not None:
-        nent = rel.nent(p, hside)
-        use_b = is_r & (bscore >= nent)
-        pca = np.where(
-            ~is_r, body[rids].astype(np.float64),
-            np.where(use_b, pcaraw[rids], pcares[rids]).astype(np.float64),
-        )
-    else:
-        pca = np.where(is_r, pcares[rids].astype(np.float64),
-                       body[rids].astype(np.float64))
-    has = body[rids] > 0
-    return pd.DataFrame({
-        "rid": rids,
-        "body_size": np.where(has, body[rids], np.nan),
-        "pca_body_size": np.where(has, pca, np.nan),
-    })
 
 
 def _s4_sizes(con, R, rel, injective):
@@ -1547,136 +1491,25 @@ def _s5_sizes(con, R, rel, injective):
     })
 
 
-def _s6_bindings(con, shaped):
-    base = pd.concat(
-        [shaped[["rid"]].reset_index(drop=True),
-         _ca_fields(shaped, "_inst0", "c1").reset_index(drop=True)],
-        axis=1,
-    )
-    con.register("s6f", base)
-    con.execute("""
-        CREATE OR REPLACE TEMP TABLE b6 AS
-        SELECT DISTINCT f.rid, E.x AS v FROM s6f f
-        JOIN E ON f.c1q2 = E.q2 AND f.c1cst = E.cst AND f.c1e = E.e""")
-    con.unregister("s6f")
-    return "SELECT rid, v FROM b6"
-
-
-def _s9_bindings(con, shaped, injective):
-    base = pd.concat(
-        [shaped[["rid"]].reset_index(drop=True),
-         _ca_fields(shaped, "_inst0", "c1").reset_index(drop=True),
-         _ca_fields(shaped, "_inst1", "c2").reset_index(drop=True)],
-        axis=1,
-    )
-    con.register("s9f", base)
-    inj_sql = ""
-    if injective:
-        # the two CA instances must be DISTINCT triples: equal only when
-        # cross-oriented with v == cst1 == cst2 and shared predicate
-        inj_sql = """AND NOT (
-            f.c1q2 = f.c2q2 AND f.c1e <> f.c2e
-            AND e1.x = f.c1cst AND e1.x = f.c2cst)"""
-    con.execute(f"""
-        CREATE OR REPLACE TEMP TABLE b9 AS
-        SELECT DISTINCT f.rid, e1.x AS v FROM s9f f
-        JOIN E e1 ON f.c1q2 = e1.q2 AND f.c1cst = e1.cst AND f.c1e = e1.e
-        JOIN E e2 ON f.c2q2 = e2.q2 AND f.c2cst = e2.cst AND f.c2e = e2.e
-          AND e2.x = e1.x
-        WHERE true {inj_sql}""")
-    con.unregister("s9f")
-    return "SELECT rid, v FROM b9"
-
-
-def _s78_sizes(con, R, rel, shape, injective, fvar_arr, n_rules):
-    """s7 {VV,VV} / s8 {VV,CA} sizes with the branch-A/B PCA machinery
-    (measures_constants s7/s8 loop body). DuckDB expansion; numpy
-    branch assembly via _inst_finish."""
-    shaped = R[R["shape"] == shape]
-    if not len(shaped):
+def _inst_sizes(con, R, enc, injective):
+    """s6-s9 body/pca sizes: mining/inst_sql.py's COUNTS over the coded
+    triples. The binding sets stay inside DuckDB (shipping them to Python
+    measured 13 s of the task13 confidence pass); only the rule-table
+    sized counts come back."""
+    ir = R[R["shape"].isin(INST_SHAPES)]
+    if not len(ir):
         return None
-    fv = fvar_arr[shaped.index]
-    comp = shaped[["rid", "p", "hside", "fvpos", "hA"]].reset_index(
-        drop=True
-    ).copy()
-    ua = R.attrs["ua"]
-    ids = shaped["_vv0"].to_numpy()
-    comp["a1q"] = ua["q"][np.maximum(ids, 0)]
-    # a1 direction: d=0 ('f') when the FREE VAR is at subject
-    comp["a1d"] = np.where(
-        ua["s_var"][np.maximum(ids, 0)] == fv, 0, 1
-    ).astype(np.int64)
-    if shape == "s7":
-        ids2 = shaped["_vv1"].to_numpy()
-        comp["a2q"] = ua["q"][np.maximum(ids2, 0)]
-        comp["a2d"] = np.where(
-            ua["s_var"][np.maximum(ids2, 0)] == fv, 0, 1
-        ).astype(np.int64)
-        sz1 = rel.psz_by_code[comp["a1q"].to_numpy()]
-        sz2 = rel.psz_by_code[comp["a2q"].to_numpy()]
-        comp["_sz1"], comp["_sz2"] = sz1, sz2
-        comp["_bscore"] = np.minimum(sz1, sz2)
-        join2 = """JOIN bb b2 ON f.a2q = b2.q AND f.a2d = b2.d
-                   AND b2.x = b1.x AND b2.y = b1.y"""
-    else:
-        cf = _ca_fields(shaped, "_inst0", "c1").reset_index(drop=True)
-        comp = pd.concat([comp, cf], axis=1)
-        sz1 = rel.psz_by_code[comp["a1q"].to_numpy()]
-        csz = rel.casize(comp, "c1q2", "c1cst", "c1e")
-        comp["_sz1"], comp["_csz"] = sz1, csz
-        comp["_bscore"] = np.minimum(sz1, csz)
-        join2 = """JOIN E ON f.c1q2 = E.q2 AND f.c1cst = E.cst
-                   AND f.c1e = E.e AND E.x = b1.y"""
-    con.register("cmp", comp)
-    inj_vc = "AND b1.x <> b1.y" if injective else ""
-    excl_expr = None
-    if injective:
-        # head-instance reuse exclusions (AtomCounting.scala:159-216 —
-        # see measures_constants s7/s8 for the bestAtom-order derivation)
-        vv1 = ("(b1.y = f.hA AND f.a1q = f.p AND f.a1d = "
-               "CASE WHEN f.fvpos = 0 THEN 0 ELSE 1 END)")
-        if shape == "s7":
-            vv2 = ("(b1.y = f.hA AND f.a2q = f.p AND f.a2d = "
-                   "CASE WHEN f.fvpos = 0 THEN 0 ELSE 1 END)")
-            first1 = "(f._sz1 < f._sz2 OR (f._sz1 = f._sz2 AND f.a1d = 1))"
-            excl_expr = f"(CASE WHEN {first1} THEN {vv1} ELSE {vv2} END)"
-        else:
-            ca_head = """(f._csz <= f._sz1 AND f.c1q2 = f.p AND (
-                (f.fvpos = 1 AND f.c1e = 0 AND b1.y = f.hA
-                 AND f.c1cst = b1.x)
-                OR (f.fvpos = 0 AND f.c1e = 1 AND f.c1cst = b1.x
-                    AND b1.y = f.hA)))"""
-            ca_reuse = """(f.a1q = f.c1q2 AND b1.x = f.c1cst AND (
-                (f.a1d = 0 AND f.c1e = 1) OR (f.a1d = 1 AND f.c1e = 0)))"""
-            excl_expr = f"({vv1} OR {ca_head} OR {ca_reuse})"
-    if excl_expr is not None:
-        # one expansion, exclusion law as a flag column: the raw set
-        # (branch-B PCA) and the excluded binding set share the join;
-        # counts happen in DuckDB (_binding_counts), never shipping the
-        # multi-million-row binding sets to Python
-        con.execute(f"""
-            CREATE OR REPLACE TEMP TABLE jj78 AS
-            SELECT f.rid, b1.x AS v, NOT {excl_expr} AS keep
-            FROM cmp f JOIN bb b1 ON f.a1q = b1.q AND f.a1d = b1.d
-            {join2}
-            WHERE true {inj_vc}""")
-        raw_src = "SELECT DISTINCT rid, v FROM jj78"
-        bind_src = "SELECT DISTINCT rid, v FROM jj78 WHERE keep"
-    else:
-        con.execute(f"""
-            CREATE OR REPLACE TEMP TABLE jj78 AS
-            SELECT DISTINCT f.rid, b1.x AS v
-            FROM cmp f JOIN bb b1 ON f.a1q = b1.q AND f.a1d = b1.d
-            {join2}
-            WHERE true""")
-        raw_src = bind_src = "SELECT rid, v FROM jj78"
-    con.unregister("cmp")
-    body = _binding_counts(con, bind_src, n_rules, restricted=False)
-    pcares = _binding_counts(con, bind_src, n_rules, restricted=True)
-    pcaraw = _binding_counts(con, raw_src, n_rules, restricted=True)
-    return _inst_finish_counts(shaped, body, pcares, rel, n_rules,
-                               pcaraw=pcaraw,
-                               bscore=comp["_bscore"].to_numpy())
+    fv = np.where(ir["fvpos"].to_numpy() == 0, "?a", "?b")
+    con.register("ir", pd.concat([
+        ir[["rid", "shape", "p", "hside", "fvpos", "hA"]],
+        _vv_fields(ir, "_vv0", fv, "a1"), _vv_fields(ir, "_vv1", fv, "a2"),
+        _ca_fields(ir, "_inst0", "c1"), _ca_fields(ir, "_inst1", "c2"),
+    ], axis=1))
+    con.register("t", pd.DataFrame({"s": enc.sc, "p": enc.pc, "o": enc.oc}))
+    sizes = con.execute(
+        COUNTS.format(T="t", R="ir", inj=injective)
+    ).fetchnumpy()
+    return pd.DataFrame(sizes)
 
 
 def confidences_constants_local(
@@ -1697,39 +1530,16 @@ def confidences_constants_local(
     R["hside"] = rel.hside_by_code[R["p"].to_numpy()]
     keep_mask = R["hside"].to_numpy() >= 0
     R = R[keep_mask].reset_index(drop=True)
-    n_rules = len(rules_pdf)
-    # fvar per rule: ?a when the head subject is the variable
-    fvar_arr = np.where(R["fvpos"].to_numpy() == 0, "?a", "?b").astype(
-        object
-    )
-
     con = _duck()
     con.register("E", rel.E)
     con.register("SE", rel.SE)
     con.register("bb", rel.b)
-    meta = R[["rid", "p", "hside", "fvpos"]]
-    con.register("meta", meta)
     parts = [
         _varonly_sizes(R, rel, injective),
         _s4_sizes(con, R, rel, injective),
         _s5_sizes(con, R, rel, injective),
+        _inst_sizes(con, R, enc, injective),
     ]
-
-    def inst_counts(shaped, src):
-        body = _binding_counts(con, src, n_rules, restricted=False)
-        pcares = _binding_counts(con, src, n_rules, restricted=True)
-        return _inst_finish_counts(shaped, body, pcares, rel, n_rules)
-
-    s6 = R[R["shape"] == "s6"]
-    if len(s6):
-        parts.append(inst_counts(s6, _s6_bindings(con, s6)))
-    s9 = R[R["shape"] == "s9"]
-    if len(s9):
-        parts.append(inst_counts(s9, _s9_bindings(con, s9, injective)))
-    parts.append(_s78_sizes(con, R, rel, "s7", injective, fvar_arr,
-                            n_rules))
-    parts.append(_s78_sizes(con, R, rel, "s8", injective, fvar_arr,
-                            n_rules))
     con.close()
     parts = [p for p in parts if p is not None and len(p)]
     if parts:

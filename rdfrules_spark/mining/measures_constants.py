@@ -13,7 +13,12 @@ Reference semantics (core:algorithm/amie/RuleCounting.scala):
 
 Each shape is one aggregation job over the parsed atom components; rules
 are keyed by `rid` (head + canonical body). CWA = support/body_size;
-PCA = support/pca_body_size.
+PCA = support/pca_body_size. The instantiated-head shapes s6-s9 are not
+DataFrame code: their laws are the one SQL text of mining/inst_sql.py,
+run here through ``spark.sql`` over the triples and a rule table with
+0/1 position tags (``_inst_rules``), and by DuckDB on the driver-local
+path — two executors, one law. qpca_constants reads the raw binding sets
+of the same text.
 
 Driver-local gate (``local_constants.collect_local``, the same one
 mining/constants.mine_constants uses): the triples are collected under
@@ -30,6 +35,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rdfrules_spark.mining.inst_sql import (
+    COUNTS,
+    INST_SHAPES,
+    RAW_PREDICTIONS,
+)
 from rdfrules_spark.mining.local_constants import (
     LOCAL_RULES_MAX,
     LOCAL_TRIPLES_MAX,
@@ -129,11 +139,46 @@ def _b_rel(triples: DataFrame) -> DataFrame:
     )
 
 
-def _head_var_pos(rules: DataFrame) -> DataFrame:
-    """For instantiated heads: the free variable's position in the head."""
-    return rules.withColumn(
-        "fvpos",
-        F.when(_split(F.col("head"), 0).startswith("?"), "s").otherwise("o"),
+def _inst_rules(R: DataFrame) -> DataFrame:
+    """The s6-s9 rows of the parsed rules as mining/inst_sql.py's rule
+    table, with 0/1 position tags."""
+    head_s = _split(F.col("head"), 0)
+    var_head_s = head_s.startswith("?")
+    fv = F.when(var_head_s, "?a").otherwise("?b")
+
+    def vv(i, prefix):
+        a = F.get("_vv", i)
+        return [a["q"].alias(prefix + "q"),
+                F.when(a["s"] == fv, 0).otherwise(1).alias(prefix + "d")]
+
+    def ca(i, prefix):
+        a = F.get("_inst", i)
+        var_s = a["s"].startswith("?")
+        cst = F.when(var_s, a["o"]).otherwise(a["s"])
+        return [a["q"].alias(prefix + "q2"),
+                F.substring(cst, 3, 1_000_000).alias(prefix + "cst"),
+                F.when(var_s, 0).otherwise(1).alias(prefix + "e")]
+
+    head_const = F.when(var_head_s, _split(F.col("head"), 2)).otherwise(head_s)
+    return R.where(F.col("shape").isin(*INST_SHAPES)).select(
+        "rid", "shape", "p",
+        F.when(F.col("hside") == "s", 0).otherwise(1).alias("hside"),
+        F.when(var_head_s, 0).otherwise(1).alias("fvpos"),
+        F.substring(head_const, 3, 1_000_000).alias("hA"),
+        *vv(0, "a1"), *vv(1, "a2"), *ca(0, "c1"), *ca(1, "c2"),
+    )
+
+
+def _inst_sql(text: str, t: DataFrame, R: DataFrame,
+              injective: bool) -> DataFrame:
+    """A text of mining/inst_sql.py through ``spark.sql``. spark.sql drops
+    the temporary views it names its DataFrame arguments by, and dropping
+    a view uncaches every cached plan with the same result — the caller's
+    cached triples among them. The marker column makes the triples
+    argument a different plan, which still reads that cache."""
+    return t.sparkSession.sql(
+        text, T=t.withColumn("_arg", F.lit(1)), R=_inst_rules(R),
+        inj=injective,
     )
 
 
@@ -483,232 +528,10 @@ def confidences_constants(
         )
     finish(R.where(F.col("shape") == "s5"), s5sizes)
 
-    # ---- instantiated-head shapes: head vars = the free var only ----
-    # pca: if higher side == free var's side -> restrict the free var;
-    # else the head CONSTANT occupies the higher side: it is an entity of p
-    # there by construction, so pcaBodySize == bodySize.
-    Ri = _head_var_pos(R)
-
-    # entity counts per (p, pos): the reference's pindex.subjects.size /
-    # objects.size threshold in the PCA branch decision
-    NE = SE.groupBy("p", "pos").agg(F.count(F.lit(1)).alias("_nent"))
-
-    def inst_finish(shape, bindings, raw=None, bscore=None):
-        """bindings: (rid, v) distinct free-var bindings AFTER the injective
-        head-instance exclusion; ``raw``: the same set WITHOUT that exclusion
-        (branch B below); ``bscore``: (rid, _bscore) = min scoreAtom over the
-        body (RuleCounting.scala:268-286 `_bestAtom`).
-
-        PCA branch law for instantiated heads (withPcaConfidence):
-        - head CONSTANT on the higherCardinalitySide -> plain sdp, equals
-          body_size;
-        - free var on the higher side and best body score < #entities of p
-          at that side -> empty-map sdp + isPCA filter: the EXCLUDED binding
-          set restricted to those entities (branch A);
-        - otherwise the reference pre-binds the head var to every entity
-          with a zeroConstant head atom in the map, so the head-instance
-          exclusion never fires: the RAW binding set restricted to those
-          entities (branch B).
-        """
-        shaped = Ri.where(F.col("shape") == shape)
-        meta = shaped.select("rid", "p", "hside", "fvpos")
-        bd = bindings.join(meta, "rid")
-        bs = bd.groupBy("rid").agg(F.count(F.lit(1)).alias("body_size"))
-        SEi = SE.select(F.col("p").alias("_p"), F.col("pos").alias("_pos"),
-                        F.col("x").alias("_v"))
-
-        def _restrict(bset, out):
-            return bset.join(meta, "rid").where(
-                F.col("hside") == F.col("fvpos")
-            ).join(
-                SEi,
-                (F.col("p") == F.col("_p")) & (F.col("hside") == F.col("_pos"))
-                & (F.col("v") == F.col("_v")),
-                "left_semi",
-            ).groupBy("rid").agg(F.count(F.lit(1)).alias(out))
-
-        restricted = _restrict(bindings, "_pcares")
-        sizes = bs.join(restricted, "rid", "left").join(
-            meta.select("rid", "p", "hside",
-                        (F.col("hside") == F.col("fvpos")).alias("_r")),
-            "rid",
-        )
-        if raw is not None:
-            raw_restricted = _restrict(raw, "_pcaraw")
-            NEi = NE.select(F.col("p").alias("_p"), F.col("pos").alias("_pos"),
-                            "_nent")
-            sizes = sizes.join(raw_restricted, "rid", "left").join(
-                bscore, "rid", "left"
-            ).join(
-                F.broadcast(NEi),
-                (F.col("p") == F.col("_p")) & (F.col("hside") == F.col("_pos")),
-                "left",
-            ).fillna(0, ["_nent"])
-            use_b = F.col("_r") & (F.col("_bscore") >= F.col("_nent"))
-            pca = (
-                F.when(~F.col("_r"), F.col("body_size"))
-                .when(use_b, F.coalesce(F.col("_pcaraw"), F.lit(0)))
-                .otherwise(F.coalesce(F.col("_pcares"), F.lit(0)))
-            )
-        else:
-            pca = (
-                F.when(F.col("_r"), F.coalesce(F.col("_pcares"), F.lit(0)))
-                .otherwise(F.col("body_size"))
-            )
-        sizes = sizes.select("rid", "body_size", pca.alias("pca_body_size"))
-        finish(shaped, sizes)
-
-    fvar = F.when(_split(F.col("head"), 0).startswith("?"), "?a").otherwise("?b")
-    # Note: canonical naming uses ?b as free var for subject-constant heads
-    # and ?a for object-constant heads (constants.py), fresh var ?c.
-
-    # s6: one CAtom(fv)
-    s6 = Ri.where(F.col("shape") == "s6").select(
-        "rid", *_ca_cols(F.col("_inst")[0], "c1")
-    )
-    b6 = s6.join(
-        E.select(F.col("q2").alias("c1q2"), F.col("cst").alias("c1cst"),
-                 F.col("e").alias("c1e"), F.col("x").alias("v")),
-        ["c1q2", "c1cst", "c1e"],
-    ).select("rid", "v").distinct()
-    inst_finish("s6", b6)
-
-    # s9: two CAtoms(fv): intersection
-    s9 = Ri.where(F.col("shape") == "s9").select(
-        "rid", *_ca_cols(F.col("_inst")[0], "c1"),
-        *_ca_cols(F.col("_inst")[1], "c2"),
-    )
-    b9 = s9.join(
-        E.select(F.col("q2").alias("c1q2"), F.col("cst").alias("c1cst"),
-                 F.col("e").alias("c1e"), F.col("x").alias("v")),
-        ["c1q2", "c1cst", "c1e"],
-    ).join(
-        E.select(F.col("q2").alias("c2q2"), F.col("cst").alias("c2cst"),
-                 F.col("e").alias("c2e"), F.col("x").alias("v")),
-        ["c2q2", "c2cst", "c2e", "v"],
-    )
-    if injective:
-        # the two CA instances must be DISTINCT triples: equal only when
-        # cross-oriented with v == cst1 == cst2 and shared predicate
-        b9 = b9.where(~(
-            (F.col("c1q2") == F.col("c2q2")) & (F.col("c1e") != F.col("c2e"))
-            & (F.col("v") == F.col("c1cst")) & (F.col("v") == F.col("c2cst"))
-        ))
-    b9 = b9.select("rid", "v").distinct()
-    inst_finish("s9", b9)
-
-    # s7 / s8: VV(fv, ?c) [+ VV or CAtom on ?c]
-    for shape in ("s7", "s8"):
-        shaped = Ri.where(F.col("shape") == shape)
-        fv = fvar
-        headA = F.substring(
-            F.when(F.col("fvpos") == "o", _split(F.col("head"), 0))
-            .otherwise(_split(F.col("head"), 2)),
-            3, 1_000_000,
-        )
-        comp = shaped.select(
-            "rid", fv.alias("_fv"), "p", "fvpos", headA.alias("_hA"),
-            *_vv_cols(F.col("_vv")[0], fv, "a1"),
-            *(
-                _vv_cols(F.col("_vv")[1], fv, "a2")
-                if shape == "s7"
-                else _ca_cols(F.col("_inst")[0], "c1")
-            ),
-        )
-        # atom scores (scoreAtom on the empty map) joined at the rule level:
-        # used both for the injective first-bound tie-break and for the PCA
-        # branch decision (_bscore = the reference's `_bestAtom` score)
-        comp = comp.join(_psize(t, injective, "a1q", "_sz1"), "a1q", "left")
-        if shape == "s7":
-            comp = comp.join(
-                _psize(t, injective, "a2q", "_sz2"), "a2q", "left"
-            ).fillna(0, ["_sz1", "_sz2"]).withColumn(
-                "_bscore", F.least("_sz1", "_sz2")
-            )
-        else:
-            comp = comp.join(
-                _casize(E, "c1", "_csz"), ["c1q2", "c1cst", "c1e"], "left"
-            ).fillna(0, ["_sz1", "_csz"]).withColumn(
-                "_bscore", F.least("_sz1", "_csz")
-            )
-        j1 = comp.join(
-            b.select(F.col("q").alias("a1q"), F.col("d").alias("a1d"),
-                     F.col("x").alias("v"), F.col("y").alias("vc")),
-            ["a1q", "a1d"],
-        )
-        if shape == "s7":
-            jj = j1.join(
-                b.select(F.col("q").alias("a2q"), F.col("d").alias("a2d"),
-                         F.col("x").alias("v"), F.col("y").alias("vc")),
-                ["a2q", "a2d", "v", "vc"],
-            )
-        else:
-            jj = j1.join(
-                E.select(F.col("q2").alias("c1q2"), F.col("cst").alias("c1cst"),
-                         F.col("e").alias("c1e"), F.col("x").alias("vc")),
-                ["c1q2", "c1cst", "c1e", "vc"],
-            )
-        if injective:
-            jj = jj.where(F.col("v") != F.col("vc"))
-        # branch-B PCA bindings: no head-instance exclusion (the reference's
-        # pre-bound variableMap holds (x, p, zeroConstant), never the real
-        # head triple — RuleCounting.scala:276-284)
-        raw = jj.select("rid", "v").distinct()
-        if injective:
-            # head-instance reuse (AtomCounting.scala:159-216): a binding
-            # whose first-bound triple(s) contain the instantiated head
-            # ((v p A) when the free var is the subject, (A p v) when the
-            # object) does not count; the free var still counts if ANOTHER
-            # ?c binding avoids the collision (exists semantics — the
-            # filter is per binding row, distinct v after). Only atoms
-            # bound BEFORE the head variable completes are in the map at
-            # check time, so the bestAtom order decides which atoms
-            # participate (see the s4 note).
-            vv_head = lambda q, d: (  # noqa: E731
-                (F.col("vc") == F.col("_hA")) & (F.col(q) == F.col("p"))
-                & (F.col(d) == F.when(F.col("fvpos") == "s", "f")
-                   .otherwise("i"))
-            )
-            if shape == "s7":
-                # the head var binds with the FIRST VV; only that atom's
-                # triple is in the map at the check — smaller relation
-                # first; on ties the closing atom (d='i', added last to
-                # the body) is the first minimum of the insertion-ordered
-                # bodySet
-                first1 = (F.col("_sz1") < F.col("_sz2")) | (
-                    (F.col("_sz1") == F.col("_sz2"))
-                    & (F.col("a1d") == "i")
-                )
-                excl = (first1 & vv_head("a1q", "a1d")) | (
-                    ~first1 & vv_head("a2q", "a2d")
-                )
-            else:
-                # the VV atom completes the head var in either order, so
-                # its collision always counts; the CA triple is in the map
-                # at the check only when the CA binds first (score law as
-                # in s4)
-                excl = vv_head("a1q", "a1d")
-                ca_head = (F.col("_csz") <= F.col("_sz1")) & (
-                    F.col("c1q2") == F.col("p")
-                ) & (
-                    ((F.col("fvpos") == "o") & (F.col("c1e") == "s")
-                     & (F.col("vc") == F.col("_hA"))
-                     & (F.col("c1cst") == F.col("v")))
-                    | ((F.col("fvpos") == "s") & (F.col("c1e") == "o")
-                       & (F.col("c1cst") == F.col("v"))
-                       & (F.col("vc") == F.col("_hA")))
-                )
-                # body-triple reuse: VV instance == CA instance
-                ca_reuse = (
-                    (F.col("a1q") == F.col("c1q2"))
-                    & (F.col("v") == F.col("c1cst"))
-                    & (((F.col("a1d") == "f") & (F.col("c1e") == "o"))
-                       | ((F.col("a1d") == "i") & (F.col("c1e") == "s")))
-                )
-                excl = excl | ca_head | ca_reuse
-            jj = jj.where(~excl)
-        inst_finish(shape, jj.select("rid", "v").distinct(), raw=raw,
-                    bscore=comp.select("rid", "_bscore"))
+    # ---- instantiated-head shapes s6-s9: mining/inst_sql.py's laws ----
+    if present & set(INST_SHAPES):
+        finish(R.where(F.col("shape").isin(*INST_SHAPES)),
+               _inst_sql(COUNTS, t, R, injective))
 
     out = outs[0]
     for o in outs[1:]:
@@ -904,92 +727,13 @@ def qpca_constants(
             preds5 = preds5.where(F.col("s") != F.col("o"))
         finish(R.where(F.col("shape") == "s5"), budget(preds5.distinct()))
 
-    # ---- instantiated-head shapes ----
-    Ri = _head_var_pos(R)
-    # head string "?a|p|C=<X>" or "C=<X>|p|?b": strip the "C=" prefix
-    head_const = F.when(
-        F.col("fvpos") == "s",
-        F.expr("substring(split(head, '\\\\|')[2], 3)"),
-    ).otherwise(F.expr("substring(split(head, '\\\\|')[0], 3)"))
-
-    def inst_preds(shape, bindings):
-        """bindings: (rid, v) distinct free-var bindings -> predicted
-        triples with the head constant on its side."""
-        shaped = Ri.where(F.col("shape") == shape)
-        meta = shaped.select("rid", "p", "hside", "fvpos",
-                             head_const.alias("hc"))
-        bd = bindings.join(meta, "rid")
-        preds = bd.select(
-            "rid", "p", "hside",
-            F.when(F.col("fvpos") == "s", F.col("v"))
-            .otherwise(F.col("hc")).alias("s"),
-            F.when(F.col("fvpos") == "s", F.col("hc"))
-            .otherwise(F.col("v")).alias("o"),
+    # ---- instantiated-head shapes s6-s9: the raw binding sets of
+    # mining/inst_sql.py, every row before the keep flag (s9 included) ----
+    if present & set(INST_SHAPES):
+        preds = _inst_sql(RAW_PREDICTIONS, t, R, injective).join(
+            R.select("rid", "p", "hside"), "rid"
         )
-        finish(shaped, budget(preds))
-
-    if "s6" in present:
-        s6 = Ri.where(F.col("shape") == "s6").select(
-            "rid", *_ca_cols(F.col("_inst")[0], "c1")
-        )
-        b6 = s6.join(
-            E.select(F.col("q2").alias("c1q2"), F.col("cst").alias("c1cst"),
-                     F.col("e").alias("c1e"), F.col("x").alias("v")),
-            ["c1q2", "c1cst", "c1e"],
-        ).select("rid", "v").distinct()
-        inst_preds("s6", b6)
-
-    if "s9" in present:
-        s9 = Ri.where(F.col("shape") == "s9").select(
-            "rid", *_ca_cols(F.col("_inst")[0], "c1"),
-            *_ca_cols(F.col("_inst")[1], "c2"),
-        )
-        b9 = s9.join(
-            E.select(F.col("q2").alias("c1q2"), F.col("cst").alias("c1cst"),
-                     F.col("e").alias("c1e"), F.col("x").alias("v")),
-            ["c1q2", "c1cst", "c1e"],
-        ).join(
-            E.select(F.col("q2").alias("c2q2"), F.col("cst").alias("c2cst"),
-                     F.col("e").alias("c2e"), F.col("x").alias("v")),
-            ["c2q2", "c2cst", "c2e", "v"],
-        ).select("rid", "v").distinct()
-        inst_preds("s9", b9)
-
-    fvar = F.when(_split(F.col("head"), 0).startswith("?"), "?a").otherwise("?b")
-    for shape in ("s7", "s8"):
-        if shape not in present:
-            continue
-        shaped = Ri.where(F.col("shape") == shape)
-        comp = shaped.select(
-            "rid", fvar.alias("_fv"),
-            *_vv_cols(F.col("_vv")[0], fvar, "a1"),
-            *(
-                _vv_cols(F.col("_vv")[1], fvar, "a2")
-                if shape == "s7"
-                else _ca_cols(F.col("_inst")[0], "c1")
-            ),
-        )
-        j1 = comp.join(
-            b.select(F.col("q").alias("a1q"), F.col("d").alias("a1d"),
-                     F.col("x").alias("v"), F.col("y").alias("vc")),
-            ["a1q", "a1d"],
-        )
-        if shape == "s7":
-            jj = j1.join(
-                b.select(F.col("q").alias("a2q"), F.col("d").alias("a2d"),
-                         F.col("x").alias("v"), F.col("y").alias("vc")),
-                ["a2q", "a2d", "v", "vc"],
-            )
-        else:
-            jj = j1.join(
-                E.select(F.col("q2").alias("c1q2"),
-                         F.col("cst").alias("c1cst"),
-                         F.col("e").alias("c1e"), F.col("x").alias("vc")),
-                ["c1q2", "c1cst", "c1e", "vc"],
-            )
-        if injective:
-            jj = jj.where(F.col("v") != F.col("vc"))
-        inst_preds(shape, jj.select("rid", "v").distinct())
+        finish(R.where(F.col("shape").isin(*INST_SHAPES)), budget(preds))
 
     out = outs[0]
     for o in outs[1:]:

@@ -129,7 +129,7 @@ def shape_reachable(
 ) -> bool:
     """Is the shape constructible under the reference's refinement
     discipline? (FreshAtomGenerator.scala:96-166 + the empirically pinned
-    at-most-one-open-extra-dangling law — see mining/refsim.py.)
+    at-most-one-open-extra-dangling law — see tests/oracles/refsim.py.)
 
     Construction = atoms in non-decreasing var-pair order with extras named
     in order of first appearance; per step: the fresh atom may touch at

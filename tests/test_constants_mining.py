@@ -11,10 +11,12 @@ from pyspark.sql import functions as F
 
 from rdfrules_spark.corpus import synth_kg
 from rdfrules_spark.mining.amie import MiningParams
-from rdfrules_spark.mining.brute import _atom_str, mine_brute_constants
+from oracles.brute import _atom_str, mine_brute_constants
 from rdfrules_spark.mining.constants import mine_constants
 
-YAGO = "/root/reference/core/src/test/resources/yago.tsv"
+from conftest import yago_tsv
+
+YAGO = yago_tsv()
 
 
 @pytest.mark.parametrize("constants,with_dup", [

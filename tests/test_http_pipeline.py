@@ -19,7 +19,9 @@ from rdfrules_spark.http_pipeline import (
     to_var_schema,
 )
 
-YAGO = "/root/reference/core/src/test/resources/yago.tsv"
+from conftest import yago_tsv
+
+YAGO = yago_tsv()
 
 
 def _rows(df, cols=None):

@@ -14,7 +14,9 @@ import pytest
 
 from rdfrules_spark.http_service import TaskServer
 
-YAGO = "/root/reference/core/src/test/resources/yago.tsv"
+from conftest import yago_tsv
+
+YAGO = yago_tsv()
 
 
 @pytest.fixture(scope="module")

@@ -23,7 +23,9 @@ from rdfrules_spark.mining.shapes import (
     shape_reachable,
 )
 
-YAGO = "/root/reference/core/src/test/resources/yago.tsv"
+from conftest import yago_tsv
+
+YAGO = yago_tsv()
 BASE = dict(min_head_size=100, min_support=1, min_head_coverage=0.01)
 
 
@@ -91,7 +93,7 @@ def test_refsim_agrees_with_spark_l4(spark):
     rule-for-rule on a synthetic KG at maxLen=4 with duplicates allowed."""
     import random
 
-    from rdfrules_spark.mining.refsim import SimParams, mine_reference_order
+    from oracles.refsim import SimParams, mine_reference_order
 
     random.seed(11)
     triples = set()

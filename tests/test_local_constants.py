@@ -13,13 +13,17 @@ from __future__ import annotations
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from rdfrules_spark.mining import constants as constants_mod
 from rdfrules_spark.mining import measures_constants as measures_constants_mod
 from rdfrules_spark.mining.amie import MiningParams
 from rdfrules_spark.mining.constants import mine_constants
 from rdfrules_spark.mining.local_constants import collect_local
-from rdfrules_spark.mining.measures_constants import confidences_constants
+from rdfrules_spark.mining.measures_constants import (
+    confidences_constants,
+    qpca_constants,
+)
 
 
 @pytest.fixture(scope="module")
@@ -95,6 +99,40 @@ def test_confidences_local_equals_distributed(spark, kg, inj):
     assert set(loc) == set(dist)
     diffs = {k: (loc[k], dist[k]) for k in loc if loc[k] != dist[k]}
     assert not diffs, f"{len(diffs)} mismatches, e.g. {list(diffs.items())[:3]}"
+
+
+#: every constants shape; at minHC 0.02 the KG mines all of them in both
+#: injectivity modes (non-injective: 119,723 rules, among them s6 216,
+#: s7 373, s9 27; s5 55,547 and s8 61,012)
+ALL_SHAPES = {"l2", "l3v2", "l3v3", "s4", "s5", "s6", "s7", "s8", "s9"}
+
+
+@pytest.mark.parametrize("inj", [False, True])
+def test_confidences_all_shapes_local_equals_distributed(spark, kg, inj):
+    """Every constants shape, both confidence paths: all rules of the
+    seven small shapes and a fixed hash-chosen 2% of s5 and s8."""
+    rules = mine_constants(
+        kg,
+        MiningParams(min_head_size=5, min_support=2,
+                     min_head_coverage=0.02, injective=inj),
+        constants="anywhere", quasi_binding=True,
+    )
+    subset = rules.where(
+        ~F.col("shape").isin("s5", "s8")
+        | (F.xxhash64("head", "atoms") % 50 == 0)
+    ).cache()
+    shapes = {r["shape"] for r in rules.select("shape").distinct().collect()}
+    assert shapes == ALL_SHAPES
+    assert {r["shape"] for r in subset.select("shape").distinct().collect()
+            } == ALL_SHAPES
+    loc = _conf_rows(confidences_constants(subset, kg, injective=inj))
+    dist = _conf_rows(
+        confidences_constants(subset, kg, injective=inj, local_threshold=0)
+    )
+    assert set(loc) == set(dist)
+    diffs = {k: (loc[k], dist[k]) for k in loc if loc[k] != dist[k]}
+    assert not diffs, f"{len(diffs)} mismatches, e.g. {list(diffs.items())[:3]}"
+    subset.unpersist()
 
 
 def _conf_rows(df):
@@ -200,4 +238,20 @@ def test_confidences_rule_bound(spark, kg, monkeypatch):
     dist = _conf_rows(confidences_constants(rules, kg, injective=True))
     assert len(calls) == 1
     assert loc and loc == dist
+    rules.unpersist()
+
+
+def test_distributed_measures_keep_the_triples_cached(spark, kg):
+    """spark.sql drops the views it makes for its DataFrame arguments, and
+    dropping a view uncaches a cached plan with the same result: the
+    caller's cached triples must stay cached through both measures."""
+    rules = mine_constants(
+        kg,
+        MiningParams(min_head_size=5, min_support=2, min_head_coverage=0.05),
+        constants="anywhere", quasi_binding=True,
+    ).where(F.col("shape") == "s8").limit(50).cache()
+    assert kg.storageLevel.useMemory
+    assert confidences_constants(rules, kg, local_threshold=0).count() == 50
+    assert qpca_constants(rules, kg).count() == 50
+    assert kg.storageLevel.useMemory
     rules.unpersist()

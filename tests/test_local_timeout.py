@@ -16,7 +16,9 @@ from pyspark.sql import functions as F
 from rdfrules_spark.mining.amie import MiningParams, _lt_cap, mine
 from rdfrules_spark.sources.tsv import read_tsv
 
-YAGO = "/root/reference/core/src/test/resources/yago.tsv"
+from conftest import yago_tsv
+
+YAGO = yago_tsv()
 BASE = dict(min_head_size=100, min_support=1, min_head_coverage=0.01)
 KEY = ["p", "shape", "q", "d1", "r", "d2"]
 

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rdfrules_spark.mining.amie import MiningParams, mine
-from rdfrules_spark.mining.brute import mine_brute
+from oracles.brute import mine_brute
 from rdfrules_spark.mining.measures import cwa_confidence, pca_confidence
 
 

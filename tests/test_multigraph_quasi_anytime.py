@@ -259,7 +259,7 @@ def test_without_quasi_binding_matches_brute(spark):
 
 
 def test_constants_for_predicates_matches_brute(spark):
-    from rdfrules_spark.mining.brute import _atom_str, mine_brute_constants
+    from oracles.brute import _atom_str, mine_brute_constants
     from rdfrules_spark.mining.constants import mine_constants
 
     from rdfrules_spark.corpus import synth_kg

@@ -17,7 +17,9 @@ from rdfrules_spark.mining.patterns import (
     filter_rules,
 )
 
-YAGO = "/root/reference/core/src/test/resources/yago.tsv"
+from conftest import yago_tsv
+
+YAGO = yago_tsv()
 pytestmark = pytest.mark.skipif(
     not os.path.exists(YAGO), reason="yago fixture absent"
 )
@@ -106,12 +108,7 @@ def test_patternsspec_lcs_goldens(spark):
     from rdfrules_spark.mining.constants import mine_constants
     from rdfrules_spark.sources.tsv import read_tsv
 
-    yago = "/root/reference/core/src/test/resources/yago.tsv"
-    if not os.path.exists(yago):
-        import pytest
-
-        pytest.skip("yago fixture absent")
-    t = read_tsv(spark, yago).select("s", "p", "o").distinct().cache()
+    t = read_tsv(spark, YAGO).select("s", "p", "o").distinct().cache()
     params = MiningParams(min_head_size=100, min_support=1,
                           min_head_coverage=0.01,
                           with_duplicate_predicates=False)

@@ -13,6 +13,8 @@ from rdfrules_spark.reference_extractor import (
     reference_triples,
 )
 
+from conftest import reference_file
+
 N_DOCS = 300
 
 
@@ -180,7 +182,7 @@ def test_sameas_fixture_goldens(spark):
     from rdfrules_spark.sources.tsv import read_tsv
 
     g = read_tsv(
-        spark, "/root/reference/core/src/test/resources/sameastest.tsv"
+        spark, reference_file("core/src/test/resources/sameastest.tsv")
     ).select("s", "p", "o")
     assert g.count() == 9  # GraphSpec graph.size
     sameas = g.where(F.col("p") == "owl:sameAs").select(

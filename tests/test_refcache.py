@@ -33,7 +33,9 @@ from rdfrules_spark.sources.refcache import (
 )
 from rdfrules_spark.sources.tsv import read_tsv
 
-YAGO = "/root/reference/core/src/test/resources/yago.tsv"
+from conftest import yago_tsv
+
+YAGO = yago_tsv()
 FIXTURES = os.path.join(os.path.dirname(__file__), "fixtures", "refexec")
 
 

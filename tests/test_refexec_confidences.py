@@ -29,7 +29,7 @@ from rdfrules_spark.mining.measures_constants import (
     confidences_constants,
     qpca_constants,
 )
-from rdfrules_spark.mining.refsim import Rule
+from oracles.refsim import Rule
 
 from test_refexec_parity import (  # reuse the dump/miner canon helpers
     YAGO,

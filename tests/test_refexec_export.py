@@ -22,10 +22,13 @@ from __future__ import annotations
 from rdfrules_spark.sources.rdf import read_rdf
 from rdfrules_spark.sources.tsv import read_tsv
 
-YAGO = "/root/reference/core/src/test/resources/yago.tsv"
+from conftest import reference_file
+
+# the reference's own input files: these tests compare the export with them
+YAGO = "core/src/test/resources/yago.tsv"
 T13 = (
-    "/root/reference/experiments/data/yagoFacts.tsv.bz2",
-    "/root/reference/experiments/data/yagoLiteralFacts.tsv.bz2",
+    "experiments/data/yagoFacts.tsv.bz2",
+    "experiments/data/yagoLiteralFacts.tsv.bz2",
 )
 FX = "/root/repo/tests/fixtures/refexec"
 
@@ -40,8 +43,9 @@ def _set(df):
 def test_reference_nt_export_yago(spark):
     """46,654 all-URI triples (incl. URIs containing quotes/apostrophes):
     the reference's NT export parses back to the identical term set."""
+    yago = reference_file(YAGO)
     exported = _set(read_rdf(spark, f"{FX}/export_yago.nt.gz"))
-    source = _set(read_tsv(spark, YAGO, parse_literals=True))
+    source = _set(read_tsv(spark, yago, parse_literals=True))
     assert len(exported) == 46654
     assert exported == source
 
@@ -71,9 +75,10 @@ def test_reference_nt_export_typed_literals(spark):
     def canon(rows):
         return {(s, p, _canon_num(o, k), k) for s, p, o, k in rows}
 
+    paths = [reference_file(path) for path in T13]
     exported = canon(_set(read_rdf(spark, f"{FX}/export_t13merged.nt.gz")))
     src = None
-    for path in T13:
+    for path in paths:
         g = read_tsv(spark, path, parse_literals=True)
         src = g if src is None else src.unionByName(g)
     source = canon(_set(src))

@@ -32,10 +32,12 @@ from pyspark.sql import functions as F
 
 from rdfrules_spark.mining.amie import MiningParams
 from rdfrules_spark.mining.constants import mine_constants
-from rdfrules_spark.mining.refsim import Rule, SimParams, mine_reference_order
+from oracles.refsim import Rule, SimParams, mine_reference_order
 from rdfrules_spark.mining.shapes import mine_upto
 
-YAGO = "/root/reference/core/src/test/resources/yago.tsv"
+from conftest import yago_tsv
+
+YAGO = yago_tsv()
 FIXTURES = "/root/repo/tests/fixtures/refexec"
 ATOM = re.compile(r"^\(\s*(\S+)\s+(.+?)\s+(\S+)\s*\)$")
 VARMAP = {"?a": 0, "?b": 1, "?c": 2, "?d": 3, "?e": 4, "?f": 5}

@@ -13,7 +13,9 @@ from rdfrules_spark.mining.amie import MiningParams
 from rdfrules_spark.mining.constants import mine_constants
 from rdfrules_spark.mining.measures_constants import confidences_constants
 
-YAGO = "/root/reference/core/src/test/resources/yago.tsv"
+from conftest import yago_tsv
+
+YAGO = yago_tsv()
 pytestmark = pytest.mark.skipif(
     not os.path.exists(YAGO), reason="yago fixture absent"
 )

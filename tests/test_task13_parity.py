@@ -36,10 +36,12 @@ from pyspark.sql import functions as F
 from rdfrules_spark.mining.amie import MiningParams
 from rdfrules_spark.mining.constants import mine_constants
 from rdfrules_spark.mining.measures_constants import confidences_constants
-from rdfrules_spark.mining.refsim import Rule
+from oracles.refsim import Rule
 from rdfrules_spark.sources.tsv import read_tsv
 
-YAGO = "/root/reference/core/src/test/resources/yago.tsv"
+from conftest import yago_tsv
+
+YAGO = yago_tsv()
 DUMP = "/root/repo/tests/fixtures/refexec/task13_smallyago.tsv.gz"
 ATOM = re.compile(r"^\(\s*(\S+)\s+(\S+)\s+(.+?)\s*\)$")
 VARMAP = {"?a": 0, "?b": 1, "?c": 2, "?d": 3}

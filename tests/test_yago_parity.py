@@ -10,7 +10,9 @@ from pyspark.sql import functions as F
 from rdfrules_spark.mining.amie import MiningParams, mine
 from rdfrules_spark.mining.measures import cwa_confidence
 
-YAGO = "/root/reference/core/src/test/resources/yago.tsv"
+from conftest import reference_file, yago_tsv
+
+YAGO = yago_tsv()
 BASE = dict(min_head_size=100, min_support=1, min_head_coverage=0.01)
 
 
@@ -171,7 +173,7 @@ def test_datasetspec_prefix_file():
     from rdfrules_spark.sources.prefixes import read_prefix_file
 
     p = read_prefix_file(
-        "/root/reference/core/src/test/resources/prefixes.ttl"
+        reference_file("core/src/test/resources/prefixes.ttl")
     )
     assert p == {
         "dbp": "http://cs.dbpedia.org/property/",

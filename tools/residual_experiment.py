@@ -1,7 +1,7 @@
 """Diagnostic: which mechanism reproduces the AmieSpec dup+constants golden
 (51,143 rules @ minHC 0.02, of which 40,130 dup-predicate)?
 
-Variants over mining/refsim.py on yago.tsv (46,654 distinct triples):
+Variants over tests/oracles/refsim.py on yago.tsv (46,654 distinct triples):
   A ndt=False quasi=True   -- plain supports + faithful QuasiBindingFilter
   B ndt=True  quasi=False  -- round-2 status quo (51,136)
   C ndt=True  quasi=True   -- both
@@ -13,7 +13,7 @@ import time
 
 sys.path.insert(0, "/root/repo")
 
-from rdfrules_spark.mining.refsim import SimParams, mine_reference_order
+from tests.oracles.refsim import SimParams, mine_reference_order
 
 YAGO = "/root/reference/core/src/test/resources/yago.tsv"
 
