@@ -38,6 +38,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rdfrules_spark.mining.measures_constants import to_var_schema
+
 
 # ---------------------------------------------------------------------------
 # state
@@ -208,87 +210,6 @@ def _measure_filter(rules: DataFrame, name: str, value: str) -> DataFrame:
         hi_c = col <= float(hi) if v[-1] == "]" else col < float(hi)
         return rules.where(lo_c & hi_c)
     return rules.where(col == F.lit(float(v)))
-
-
-def to_var_schema(rules: DataFrame, keep_atoms: bool = False) -> DataFrame:
-    """Canonical (head, atoms) VAR-ONLY rules -> the var-rule key schema
-    (p, shape, q, d1, r, d2) of mining/amie.py:38-40, preserving measure
-    columns. Encoding (amie.py _l2/_l3v2/_l3v3):
-
-      l2    one body atom  q(?a,?b)='f' / q(?b,?a)='i'
-      l3v2  two atoms over {?a,?b}, pair sorted by (q,d)
-      l3v3  the ?a-atom is (q,d1) ('f' = q(?a,?c)), the ?b-atom is (r,d2)
-            ('f' = r(?b,?c))
-
-    Raises on instantiated atoms (prediction over instantiated rules is not
-    supported — predict from a constants-free mining config). The guard is
-    IN-PLAN (F.raise_error on the offending row), not an eager count: an
-    eager probe would execute the whole upstream mining plan once per
-    conversion (Predict/Prune/Instantiate/Lift each call this)."""
-    if "atoms" not in rules.columns:
-        return rules  # already var schema
-    su = lambda a: F.split(a, r"\|")[0]  # noqa: E731
-    pr = lambda a: F.split(a, r"\|")[1]  # noqa: E731
-    ob = lambda a: F.split(a, r"\|")[2]  # noqa: E731
-    has_const = F.exists(
-        F.concat(F.array(F.col("head")), F.col("atoms")),
-        lambda a: su(a).startswith("C=") | ob(a).startswith("C="),
-    )
-    a0, a1 = F.col("atoms")[0], F.get(F.col("atoms"), 1)
-    has_c = F.exists(
-        F.col("atoms"), lambda a: (su(a) == "?c") | (ob(a) == "?c")
-    )
-    d_of = lambda a: F.when(su(a) == "?a", "f").otherwise("i")  # noqa: E731
-    # l3v3 sides: the atom touching ?a vs the atom touching ?b
-    touches = lambda a, v: (su(a) == v) | (ob(a) == v)  # noqa: E731
-    a_atom = F.when(touches(a0, F.lit("?a")), a0).otherwise(a1)
-    b_atom = F.when(touches(a0, F.lit("?a")), a1).otherwise(a0)
-    d3 = lambda a, v: F.when(su(a) == v, "f").otherwise("i")  # noqa: E731
-    # l3v2 canonical unordered pair sorted by the (q, d) TUPLE (struct
-    # comparison -- string concat would misorder prefix predicates)
-    k0 = F.struct(pr(a0).alias("q"), d_of(a0).alias("d"))
-    k1 = F.struct(pr(a1).alias("q"), d_of(a1).alias("d"))
-    first = F.when(k0 <= k1, a0).otherwise(a1)
-    second = F.when(k0 <= k1, a1).otherwise(a0)
-    # mine_constants rows already carry p/shape (its own shape taxonomy) —
-    # the derived var-key columns replace them
-    measures = [
-        c for c in rules.columns
-        if c not in ("head", "atoms", "p", "shape", "q", "d1", "r", "d2")
-    ]
-    if keep_atoms:
-        measures = ["head", "atoms"] + measures
-    out = rules.select(
-        F.when(
-            has_const,
-            F.raise_error(F.lit(
-                "instantiated rules can not be converted to the var-rule "
-                "schema; mine with WithoutConstants for prediction"
-            )),
-        ).otherwise(F.split(F.col("head"), r"\|")[1]).alias("p"),
-        F.when(F.size("atoms") == 1, "l2")
-        .when(has_c, "l3v3")
-        .otherwise("l3v2")
-        .alias("shape"),
-        F.when(F.size("atoms") == 1, pr(a0))
-        .when(has_c, pr(a_atom))
-        .otherwise(pr(first))
-        .alias("q"),
-        F.when(F.size("atoms") == 1, d_of(a0))
-        .when(has_c, d3(a_atom, F.lit("?a")))
-        .otherwise(d_of(first))
-        .alias("d1"),
-        F.when(F.size("atoms") == 1, F.lit(None).cast("string"))
-        .when(has_c, pr(b_atom))
-        .otherwise(pr(second))
-        .alias("r"),
-        F.when(F.size("atoms") == 1, F.lit(None).cast("string"))
-        .when(has_c, d3(b_atom, F.lit("?b")))
-        .otherwise(d_of(second))
-        .alias("d2"),
-        *measures,
-    )
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -810,7 +731,12 @@ def _mine(spark, state: PipelineState, params: dict):
         elif n == "MaxRuleLength":
             kw["max_rule_length"] = int(v)
         elif n == "Timeout":
-            kw["timeout_s"] = float(v) * 60.0  # reference unit: minutes
+            # the constants miner runs to completion; a time budget it
+            # cannot honour must not be dropped silently
+            raise PipelineError(
+                f"Unsupported threshold: Timeout ({v} min); mining here "
+                "has no time budget"
+            )
         else:
             raise PipelineError(f"Invalid threshold: {n}")
     for c in params.get("constraints", []):

@@ -1,5 +1,5 @@
-"""The instantiated-head confidence laws (shapes s6-s9) as one SQL text,
-run by two executors:
+"""The confidence laws of the constants shapes s4-s9 as one SQL text, run
+by two executors:
 
   * below the driver-local gate, DuckDB over the integer-coded tables of
     mining/local_constants.py (``text.format(T=..., R=..., inj=...)``
@@ -10,35 +10,55 @@ run by two executors:
 
 Inputs:
   {T}    the triples (s, p, o);
-  {R}    one row per s6-s9 rule: rid, shape, p, hside, fvpos, hA (the head
+  {R}    one row per s4-s9 rule: rid, shape, p, hside, fvpos, hA (the head
          constant), a1q/a1d and a2q/a2d (the variable-variable atoms, d = 0
-         when the free variable is their subject), c1q2/c1cst/c1e and
-         c2q2/c2cst/c2e (the instantiated atoms, e = 0 when their variable
+         when the free variable, or ?a in a variable head, is their
+         subject), c1u/c1q2/c1cst/c1e and c2u/c2q2/c2cst/c2e (the
+         instantiated atoms, u = 0 when their variable is ?a, e = 0 when it
          is the subject). Columns a shape does not use hold anything.
   {inj}  True for injective mappings (Ruleset.computeConfidence default).
 Position tags are 0 = subject, 1 = object throughout (hside, fvpos, e).
 
-Semantics (RuleCounting.scala:235-296, AtomCounting.scala:159-216): a
-rule's head variables are its free variable alone, so body_size is the
-number of distinct free-variable bindings B. Under ``inj`` a binding row
-may be excluded (``keep`` false): s9's two instantiated atoms must bind
-distinct triples; s7/s8 drop rows whose atoms bound before the free
-variable completes contain the instantiated head (bestAtom order: the
-smaller scoreAtom binds first, ties go to the atom added last) or reuse
-a body triple. The raw set (every row) is what PCA branch B and QPCA read.
+Semantics (RuleCounting.scala:235-296, AtomCounting.scala:159-216):
+body_size is the number of distinct bindings of the head variables. For
+s4 {VV(a,b), CAtom(a|b)} and s6-s9 these are the rows (rid, v, w) of B: v
+binds the free variable (?a in s4), w is the head's other term, the head
+constant or ?b's binding. Under ``inj`` a row may be excluded (``keep``
+false): s9's two instantiated atoms must bind distinct triples; s4, s7
+and s8 drop rows whose atoms bound before the head variables complete
+contain the instantiated head (bestAtom order: the smaller scoreAtom binds
+first, ties go to the atom added last) or reuse a body triple. The raw set
+(every row) is what PCA branch B and QPCA read.
 
-PCA branch law (withPcaConfidence): the head constant on the predicate's
-higherCardinalitySide -> pca_body_size = body_size; else, when the best
-body score (s7/s8) reaches the number of entities of p on that side, the
-reference pre-binds the head variable and never sees the head instance
-(branch B: raw bindings that are entities of p there); otherwise
-(branch A) the kept bindings that are entities of p there.
+s5 {CAtom(a), CAtom(b)} binds ?a and ?b independently, so its bindings
+are the product of two entity sets A and B (X: one row per rule, side and
+entity), never materialized for the sizes. Non-injective, the sizes are
+products of per-side counts. Under ``inj`` a pair (a, b) counts iff a <> b,
+neither body triple is the instantiated head (a p b) and the two body
+triples differ: the excluded subsets of A x B are the diagonal (D), at most
+two lines (b = A's constant when A's atom mirrors the head, a = B's
+constant when B's does) and one point (both atoms binding one triple
+cross-oriented), all counted from per-rule aggregates of X.
+
+PCA (withPcaConfidence) keeps the bindings whose head entity on p's
+higherCardinalitySide is an entity of p there. s4 and s5 restrict their
+?a or ?b binding. s6-s9: the head constant on that side -> pca_body_size
+= body_size; else, when the best body score (s7/s8) reaches the number of
+entities of p on that side, the reference pre-binds the head variable and
+never sees the head instance (branch B: raw bindings that are entities of
+p there); otherwise (branch A) the kept bindings that are entities of p.
+
+NULL versus zero, as a left join of these rows onto the rules gives it:
+a rule without a kept binding has no row (NULL sizes); an s4 rule without
+a kept binding inside the PCA restriction has a NULL pca_body_size; an s5
+rule has NULL sizes when one side has no entity (non-injective) or both
+have none (injective).
 """
 
 from __future__ import annotations
 
-#: rule shapes whose head carries a constant
-INST_SHAPES = ("s6", "s7", "s8", "s9")
+#: rule shapes whose laws this text holds
+SQL_SHAPES = ("s4", "s5", "s6", "s7", "s8", "s9")
 
 _BINDINGS = """
 WITH
@@ -64,12 +84,24 @@ RS AS (
   LEFT JOIN PS p2 ON p2.q = f.a2q
   LEFT JOIN CS cs ON cs.q2 = f.c1q2 AND cs.cst = f.c1cst AND cs.e = f.c1e),
 B AS (
-  SELECT f.rid, e1.x AS v, true AS keep
+  SELECT f.rid, b1.x AS v, b1.y AS w,
+         NOT ({inj}
+              AND CASE WHEN f.c1u = 0 THEN b1.y ELSE b1.x END = f.c1cst
+              AND ((f.csz <= f.sz1 AND f.c1q2 = f.p AND f.c1e = f.c1u)
+                   OR (f.a1q = f.c1q2 AND (f.c1u = 0) = (f.c1e = f.a1d))))
+         AS keep
+  FROM RS f
+  JOIN BB b1 ON b1.q = f.a1q AND b1.d = f.a1d
+  JOIN E e1 ON e1.q2 = f.c1q2 AND e1.cst = f.c1cst AND e1.e = f.c1e
+           AND e1.x = CASE WHEN f.c1u = 0 THEN b1.x ELSE b1.y END
+  WHERE f.shape = 's4' AND (NOT {inj} OR b1.x <> b1.y)
+  UNION ALL
+  SELECT f.rid, e1.x AS v, f.hA AS w, true AS keep
   FROM {R} f
   JOIN E e1 ON e1.q2 = f.c1q2 AND e1.cst = f.c1cst AND e1.e = f.c1e
   WHERE f.shape = 's6'
   UNION ALL
-  SELECT f.rid, e1.x AS v,
+  SELECT f.rid, e1.x AS v, f.hA AS w,
          NOT ({inj} AND f.c1q2 = f.c2q2 AND f.c1e <> f.c2e
               AND e1.x = f.c1cst AND e1.x = f.c2cst) AS keep
   FROM {R} f
@@ -78,7 +110,7 @@ B AS (
            AND e2.x = e1.x
   WHERE f.shape = 's9'
   UNION ALL
-  SELECT f.rid, b1.x AS v,
+  SELECT f.rid, b1.x AS v, f.hA AS w,
          NOT ({inj} AND b1.y = f.hA AND CASE
            WHEN f.sz1 < f.sz2 OR (f.sz1 = f.sz2 AND f.a1d = 1)
            THEN f.a1q = f.p AND f.a1d = f.fvpos
@@ -89,7 +121,7 @@ B AS (
             AND b2.x = b1.x AND b2.y = b1.y
   WHERE f.shape = 's7' AND (NOT {inj} OR b1.x <> b1.y)
   UNION ALL
-  SELECT f.rid, b1.x AS v,
+  SELECT f.rid, b1.x AS v, f.hA AS w,
          NOT ({inj} AND (
            (b1.y = f.hA AND f.a1q = f.p AND f.a1d = f.fvpos)
            OR (f.csz <= f.sz1 AND f.c1q2 = f.p AND f.c1e <> f.fvpos
@@ -100,42 +132,118 @@ B AS (
   JOIN BB b1 ON b1.q = f.a1q AND b1.d = f.a1d
   JOIN E e1 ON e1.q2 = f.c1q2 AND e1.cst = f.c1cst AND e1.e = f.c1e
            AND e1.x = b1.y
-  WHERE f.shape = 's8' AND (NOT {inj} OR b1.x <> b1.y))"""
+  WHERE f.shape = 's8' AND (NOT {inj} OR b1.x <> b1.y)),
+S5 AS (
+  SELECT rid, p, hside,
+         CASE WHEN c1u = 0 THEN c1q2 ELSE c2q2 END AS aq,
+         CASE WHEN c1u = 0 THEN c1cst ELSE c2cst END AS ac,
+         CASE WHEN c1u = 0 THEN c1e ELSE c2e END AS ae,
+         CASE WHEN c1u = 0 THEN c2q2 ELSE c1q2 END AS bq,
+         CASE WHEN c1u = 0 THEN c2cst ELSE c1cst END AS bc,
+         CASE WHEN c1u = 0 THEN c2e ELSE c1e END AS be
+  FROM {R} WHERE shape = 's5'),
+X AS (
+  SELECT f.rid, f.p, f.hside, f.ac, f.bc, 0 AS side, e1.x
+  FROM S5 f JOIN E e1 ON e1.q2 = f.aq AND e1.cst = f.ac AND e1.e = f.ae
+  UNION ALL
+  SELECT f.rid, f.p, f.hside, f.ac, f.bc, 1 AS side, e1.x
+  FROM S5 f JOIN E e1 ON e1.q2 = f.bq AND e1.cst = f.bc AND e1.e = f.be)"""
 
-#: (rid, body_size, pca_body_size) for every s6-s9 rule with a kept
-#: binding; rules without one are absent (null sizes after a left join)
-COUNTS = _BINDINGS + """,
+
+def _s5_law(p: str) -> str:
+    """An s5 size over L5's counts; ``p`` selects the counts inside the
+    PCA restriction."""
+    return f"""n.na{p} * n.nb{p} - CASE WHEN {{inj}} THEN n.nd{p}
+           + n.ha * n.mab{p} * (n.na{p} - n.maa{p})
+           + n.hb * n.mba{p} * (n.nb{p} - n.mbb{p})
+           + (n.tt - n.ha * n.hb - n.ha * n.tt - n.hb * n.tt
+              + n.ha * n.hb * n.tt) * n.mba{p} * n.mab{p} * n.ne
+         ELSE 0 END"""
+
+
+#: (rid, body_size, pca_body_size) for every s4-s9 rule with a binding
+#: (module docstring); rules without one are absent (null sizes after a
+#: left join)
+COUNTS = _BINDINGS + f""",
 SE AS (SELECT DISTINCT q2 AS p, e AS pos, x FROM E),
 NE AS (SELECT p, pos, count(*) AS n FROM SE GROUP BY p, pos),
-G AS (SELECT rid, v, bool_or(keep) AS k FROM B GROUP BY rid, v),
+G AS (SELECT rid, v, w, bool_or(keep) AS k FROM B GROUP BY rid, v, w),
 M AS (
-  SELECT rid, p, hside, fvpos,
+  SELECT rid, shape, p, hside, fvpos,
          CASE shape WHEN 's7' THEN least(sz1, sz2)
                     WHEN 's8' THEN least(sz1, csz) END AS bscore
   FROM RS),
 C AS (
-  SELECT m.rid, m.p, m.hside, m.fvpos, m.bscore,
+  SELECT m.rid, m.shape, m.p, m.hside, m.fvpos, m.bscore,
          count(*) FILTER (WHERE g.k) AS body,
          count(se.x) FILTER (WHERE g.k) AS pcares,
          count(se.x) AS pcaraw
   FROM G g
   JOIN M m ON m.rid = g.rid
-  LEFT JOIN SE se ON se.p = m.p AND se.pos = m.hside AND se.x = g.v
-  GROUP BY m.rid, m.p, m.hside, m.fvpos, m.bscore)
+  LEFT JOIN SE se ON se.p = m.p AND se.pos = m.hside
+       AND se.x = CASE WHEN m.hside = m.fvpos THEN g.v ELSE g.w END
+  GROUP BY m.rid, m.shape, m.p, m.hside, m.fvpos, m.bscore),
+XP AS (
+  SELECT g.rid, g.side, g.x, g.ac, g.bc,
+         g.hside <> g.side OR se.x IS NOT NULL AS inp
+  FROM X g
+  LEFT JOIN SE se ON se.p = g.p AND se.pos = g.side AND se.x = g.x),
+XN AS (
+  SELECT rid,
+         count(*) FILTER (WHERE side = 0) AS na,
+         count(*) FILTER (WHERE side = 1) AS nb,
+         count(*) FILTER (WHERE side = 0 AND inp) AS nap,
+         count(*) FILTER (WHERE side = 1 AND inp) AS nbp,
+         max(CASE WHEN side = 1 AND x = ac THEN 1 ELSE 0 END) AS mab,
+         max(CASE WHEN side = 0 AND x = ac THEN 1 ELSE 0 END) AS maa,
+         max(CASE WHEN side = 0 AND x = bc THEN 1 ELSE 0 END) AS mba,
+         max(CASE WHEN side = 1 AND x = bc THEN 1 ELSE 0 END) AS mbb,
+         max(CASE WHEN side = 1 AND inp AND x = ac THEN 1 ELSE 0 END) AS mabp,
+         max(CASE WHEN side = 0 AND inp AND x = ac THEN 1 ELSE 0 END) AS maap,
+         max(CASE WHEN side = 0 AND inp AND x = bc THEN 1 ELSE 0 END) AS mbap,
+         max(CASE WHEN side = 1 AND inp AND x = bc THEN 1 ELSE 0 END) AS mbbp
+  FROM XP GROUP BY rid),
+XB AS (
+  SELECT rid, x, bool_and(inp) AS allp FROM XP
+  WHERE {{inj}} GROUP BY rid, x HAVING count(DISTINCT side) = 2),
+XD AS (
+  SELECT rid, count(*) AS nd, count(*) FILTER (WHERE allp) AS ndp
+  FROM XB GROUP BY rid),
+L5 AS (
+  SELECT xn.*, coalesce(xd.nd, 0) AS nd, coalesce(xd.ndp, 0) AS ndp,
+         CASE WHEN f.ae = 0 AND f.aq = f.p THEN 1 ELSE 0 END AS ha,
+         CASE WHEN f.be = 1 AND f.bq = f.p THEN 1 ELSE 0 END AS hb,
+         CASE WHEN f.aq = f.bq AND f.ae <> f.be THEN 1 ELSE 0 END AS tt,
+         CASE WHEN f.ac <> f.bc THEN 1 ELSE 0 END AS ne
+  FROM XN xn
+  JOIN S5 f ON f.rid = xn.rid
+  LEFT JOIN XD xd ON xd.rid = xn.rid
+  WHERE {{inj}} OR (xn.na > 0 AND xn.nb > 0))
 SELECT c.rid, c.body AS body_size,
-       CASE WHEN c.hside <> c.fvpos THEN c.body
+       CASE WHEN c.shape = 's4' THEN nullif(c.pcares, 0)
+            WHEN c.hside <> c.fvpos THEN c.body
             WHEN c.bscore >= ne.n THEN c.pcaraw
             ELSE c.pcares END AS pca_body_size
 FROM C c
 JOIN NE ne ON ne.p = c.p AND ne.pos = c.hside
 WHERE c.body > 0
+UNION ALL
+SELECT n.rid, {_s5_law("")} AS body_size,
+       {_s5_law("p")} AS pca_body_size
+FROM L5 n
 """
 
-#: (rid, s, o): the head triples the raw bindings predict (QPCA's input)
+#: (rid, s, o): the head triples the raw bindings predict (QPCA's input);
+#: for s5 the product of its entity sets, with a <> b under ``inj``
 RAW_PREDICTIONS = _BINDINGS + """
-SELECT DISTINCT b.rid,
-       CASE WHEN f.fvpos = 0 THEN b.v ELSE f.hA END AS s,
-       CASE WHEN f.fvpos = 0 THEN f.hA ELSE b.v END AS o
+SELECT b.rid,
+       CASE WHEN f.fvpos = 0 THEN b.v ELSE b.w END AS s,
+       CASE WHEN f.fvpos = 0 THEN b.w ELSE b.v END AS o
 FROM B b
 JOIN {R} f ON f.rid = b.rid
+UNION
+SELECT a.rid, a.x AS s, b.x AS o
+FROM X a
+JOIN X b ON b.rid = a.rid AND b.side = 1
+WHERE a.side = 0 AND (NOT {inj} OR a.x <> b.x)
 """

@@ -29,15 +29,16 @@ oracle for the registry remains the independent DuckDB SQL written per
 query, and the hard parity anchors are the executed-reference dumps, not
 any SQL engine.
 
-One SQL text, two executors: the instantiated-head shapes s6-s9 have no
-twin here. Their binding sets, injective exclusions and PCA branch law
-are the SQL text of mining/inst_sql.py, which DuckDB runs below the gate
-over the integer-coded triples (``_inst_sizes``) and Spark SQL runs above
-it (measures_constants.confidences_constants / qpca_constants).
+One SQL text, two executors: the constants shapes s4-s9 have no twin
+confidence code here. Their binding sets, injective exclusions, s5's
+factorized product law and the PCA laws are the SQL text of
+mining/inst_sql.py, which DuckDB runs below the gate over the
+integer-coded triples (``_inst_sizes``) and Spark SQL runs above it
+(measures_constants.confidences_constants / qpca_constants).
 
-The other shapes are a 1:1 transliteration of the Spark expressions
-(reference cites live in mining/constants.py and
-mining/measures_constants.py; RuleRefinement.scala / RuleCounting.scala /
+The miner and the var-only confidences are a 1:1 transliteration of the
+Spark expressions (reference cites live in mining/constants.py and
+mining/measures.py; RuleRefinement.scala / RuleCounting.scala /
 AtomCounting.scala). Parity is pinned three ways: the existing golden /
 brute-oracle (tests/oracles) / executed-reference suites
 (tests/test_constants_mining.py, test_refexec_parity.py,
@@ -69,7 +70,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from rdfrules_spark.mining.inst_sql import COUNTS, INST_SHAPES
+from rdfrules_spark.mining.inst_sql import COUNTS, SQL_SHAPES
 
 #: input triples at or below which constants mining runs on the driver
 LOCAL_TRIPLES_MAX = 200_000
@@ -1059,26 +1060,23 @@ def _parse_rules(rules_pdf: pd.DataFrame, enc: _Enc) -> pd.DataFrame:
 
 
 def _ca_fields(R: pd.DataFrame, col: str, prefix: str) -> pd.DataFrame:
-    """_ca_cols: (prefix+u [0='?a',1='?b',2='?c'], q2, cst, e) from the
-    unique-atom table for the atom id in R[col]."""
+    """The instantiated-atom columns of mining/inst_sql.py's rule table
+    (prefix + u [0 = '?a', 1 = other], q2, cst, e) from the unique-atom
+    table for the atom id in R[col]."""
     ua = R.attrs["ua"]
-    ids = R[col].to_numpy()
-    safe = np.maximum(ids, 0)
-    uv = ua["uvar"][safe]
-    out = pd.DataFrame({
-        prefix + "u": np.select(
-            [uv == "?a", uv == "?b"], [0, 1], 2
-        ).astype(np.int64),
+    safe = np.maximum(R[col].to_numpy(), 0)
+    return pd.DataFrame({
+        prefix + "u": np.where(ua["uvar"][safe] == "?a", 0, 1),
         prefix + "q2": ua["q"][safe],
         prefix + "cst": ua["cst"][safe],
         prefix + "e": ua["e"][safe],
     }, index=R.index)
-    return out
 
 
 def _vv_fields(R: pd.DataFrame, col: str, primary, prefix: str):
-    """_vv_cols: (prefix+q, prefix+d) with d=0 ('f') when the primary var
-    is at subject. `primary` is a string or per-rule object array."""
+    """The variable-variable atom columns of mining/inst_sql.py's rule
+    table (prefix + q, prefix + d) with d = 0 when the primary var is at
+    subject. `primary` is a string or per-rule object array."""
     ua = R.attrs["ua"]
     ids = R[col].to_numpy()
     safe = np.maximum(ids, 0)
@@ -1090,21 +1088,14 @@ def _vv_fields(R: pd.DataFrame, col: str, primary, prefix: str):
 
 
 class _Rel:
-    """Shared confidence-side relations over the coded triple set
-    (measures_constants helpers _ents/_side/_side_ents/_b_rel/_psize/
-    _casize, plus packed-key membership tests)."""
+    """Shared var-only confidence relations over the coded triple set:
+    entities per predicate side (SE), hside per predicate, the body
+    relation and predicate sizes, plus packed-key membership tests."""
 
     def __init__(self, enc: _Enc, injective: bool):
         self.enc = enc
         n = len(enc.sc)
         self.N = enc.n_terms  # NOTE: may grow via map_terms; pack later
-        self.E = pd.DataFrame({
-            "q2": np.concatenate([enc.pc, enc.pc]),
-            "cst": np.concatenate([enc.oc, enc.sc]),
-            "e": np.concatenate([np.zeros(n, np.int64),
-                                 np.ones(n, np.int64)]),
-            "x": np.concatenate([enc.sc, enc.oc]),
-        })
         se = pd.DataFrame({
             "p": np.concatenate([enc.pc, enc.pc]),
             "pos": np.concatenate([np.zeros(n, np.int64),
@@ -1140,24 +1131,6 @@ class _Rel:
         if not len(self._se_keys):
             return np.zeros(len(q), dtype=bool)
         return self._se_keys[idx] == q
-
-    def casize(self, df, qc, cc, ec) -> np.ndarray:
-        """_casize: instantiated-atom slice size, non-reflexive
-        (entities x != cst)."""
-        E = self.E
-        nr = E[E["x"].to_numpy() != E["cst"].to_numpy()]
-        key = (nr["q2"].to_numpy() * np.int64(self.N) + nr["cst"].to_numpy()
-               ) * 2 + nr["e"].to_numpy()
-        uk, cnt = np.unique(key, return_counts=True)
-        q = (df[qc].to_numpy() * np.int64(self.N) + df[cc].to_numpy()
-             ) * 2 + df[ec].to_numpy()
-        idx = np.searchsorted(uk, q)
-        out = np.zeros(len(q), dtype=np.int64)
-        if len(uk):
-            idx = np.minimum(idx, len(uk) - 1)
-            hit = uk[idx] == q
-            out[hit] = cnt[idx[hit]]
-        return out
 
 
 def _varonly_sizes(R: pd.DataFrame, rel: _Rel, injective: bool):
@@ -1278,238 +1251,26 @@ def _varonly_sizes(R: pd.DataFrame, rel: _Rel, injective: bool):
     return pd.concat(outs, ignore_index=True)
 
 
-def _s4_sizes(con, R, rel, injective):
-    """{VV(a,b), CAtom(x)} body/pca sizes (measures_constants s4).
-    DuckDB expansion -> distinct pairs; numpy finish."""
-    s4 = R[R["shape"] == "s4"]
-    if not len(s4):
-        return None
-    base = pd.concat(
-        [s4[["rid", "p"]].reset_index(drop=True),
-         _vv_fields(s4, "_vv0", "?a", "a1").reset_index(drop=True),
-         _ca_fields(s4, "_inst0", "c1").reset_index(drop=True)],
-        axis=1,
-    )
-    base["hside"] = rel.hside_by_code[base["p"].to_numpy()]
-    inj_sql = ""
-    if injective:
-        base["vsz"] = rel.psz_by_code[base["a1q"].to_numpy()]
-        base["csz"] = rel.casize(base, "c1q2", "c1cst", "c1e")
-        # head-instance + body-triple reuse exclusions (AtomCounting
-        # .scala:159-216; see measures_constants s4 for the derivation)
-        inj_sql = """
-          AND bb.x <> bb.y
-          AND NOT (
-            f.csz <= f.vsz AND f.c1q2 = f.p AND (
-              (f.c1u = 0 AND f.c1e = 0 AND bb.y = f.c1cst)
-              OR (f.c1u = 1 AND f.c1e = 1 AND bb.x = f.c1cst)
-            )
-          )
-          AND NOT (
-            f.a1q = f.c1q2 AND (
-              (f.c1u = 0 AND bb.y = f.c1cst
-               AND ((f.c1e = 0 AND f.a1d = 0) OR (f.c1e = 1 AND f.a1d = 1)))
-              OR (f.c1u = 1 AND bb.x = f.c1cst
-               AND ((f.c1e = 0 AND f.a1d = 1) OR (f.c1e = 1 AND f.a1d = 0)))
-            )
-          )"""
-    con.register("s4f", base)
-    pairs = con.execute(f"""
-        SELECT DISTINCT f.rid, f.p, f.hside,
-               bb.x AS va, bb.y AS vb
-        FROM s4f f
-        JOIN bb ON f.a1q = bb.q AND f.a1d = bb.d
-        JOIN E ON f.c1q2 = E.q2 AND f.c1cst = E.cst AND f.c1e = E.e
-          AND E.x = CASE WHEN f.c1u = 0 THEN bb.x ELSE bb.y END
-        WHERE true {inj_sql}""").df()
-    con.unregister("s4f")
-    n_rules = int(R["rid"].max()) + 1 if len(R) else 0
-    body = np.bincount(pairs["rid"].to_numpy(), minlength=n_rules)
-    hvv = np.where(pairs["hside"].to_numpy() == 0, pairs["va"].to_numpy(),
-                   pairs["vb"].to_numpy())
-    inp = rel.se_member(pairs["p"].to_numpy(), pairs["hside"].to_numpy(),
-                        hvv)
-    pca = np.bincount(pairs["rid"].to_numpy()[inp], minlength=n_rules)
-    rids = s4["rid"].to_numpy()
-    has = body[rids] > 0
-    return pd.DataFrame({
-        "rid": rids,
-        "body_size": np.where(has, body[rids], np.nan),
-        # Spark: pca count left-joined onto pairs-per-rid groupBy — a rule
-        # with pairs but none surviving PCA gets NULL (not 0)
-        "pca_body_size": np.where(pca[rids] > 0, pca[rids], np.nan),
-    })
-
-
-def _s5_sizes(con, R, rel, injective):
-    """{CAtom(a), CAtom(b)} body/pca sizes (measures_constants s5; the
-    injective branch is the factorized exclusion law). DuckDB
-    aggregates; the law itself in numpy."""
-    s5 = R[R["shape"] == "s5"]
-    if not len(s5):
-        return None
-    norm0 = pd.concat(
-        [s5[["rid", "p"]].reset_index(drop=True),
-         _ca_fields(s5, "_inst0", "c1").reset_index(drop=True),
-         _ca_fields(s5, "_inst1", "c2").reset_index(drop=True)],
-        axis=1,
-    )
-    norm0["hside"] = rel.hside_by_code[norm0["p"].to_numpy()]
-    n_rules = int(R["rid"].max()) + 1
-    rids = norm0["rid"].to_numpy()
-    if not injective:
-        con.register("s5f", norm0)
-
-        def ca_counts(pfx):
-            agg = con.execute(f"""
-                SELECT f.rid, count(*) AS n,
-                       count(se.x) AS np
-                FROM s5f f
-                JOIN E ON f.{pfx}q2 = E.q2 AND f.{pfx}cst = E.cst
-                      AND f.{pfx}e = E.e
-                LEFT JOIN SE se ON se.p = f.p AND se.pos = f.hside
-                      AND se.x = E.x
-                GROUP BY f.rid""").df()
-            n = np.zeros(n_rules, dtype=np.int64)
-            n[agg["rid"].to_numpy()] = agg["n"].to_numpy()
-            npc = np.zeros(n_rules, dtype=np.int64)
-            npc[agg["rid"].to_numpy()] = agg["np"].to_numpy()
-            on_hs = (
-                ((norm0[f"{pfx}u"].to_numpy() == 0)
-                 & (norm0["hside"].to_numpy() == 0))
-                | ((norm0[f"{pfx}u"].to_numpy() == 1)
-                   & (norm0["hside"].to_numpy() == 1))
-            )
-            return n, npc, on_hs
-
-        c1n, c1np, c1hs = ca_counts("c1")
-        c2n, c2np, _ = ca_counts("c2")
-        con.unregister("s5f")
-        # inner join semantics: both atoms must have matched
-        has = (c1n[rids] > 0) & (c2n[rids] > 0)
-        body = c1n[rids] * c2n[rids]
-        pca = np.where(c1hs, c1np[rids] * c2n[rids],
-                       c1n[rids] * c2np[rids])
-        return pd.DataFrame({
-            "rid": rids,
-            "body_size": np.where(has, body, np.nan),
-            "pca_body_size": np.where(has, pca, np.nan),
-        })
-    # ---- injective: normalize to the ?a (A) / ?b (B) sides ----
-    a_is_c1 = norm0["c1u"].to_numpy() == 0
-    norm = pd.DataFrame({
-        "rid": norm0["rid"].to_numpy(), "p": norm0["p"].to_numpy(),
-        "hside": norm0["hside"].to_numpy(),
-        "Aq2": np.where(a_is_c1, norm0["c1q2"], norm0["c2q2"]),
-        "Acst": np.where(a_is_c1, norm0["c1cst"], norm0["c2cst"]),
-        "Ae": np.where(a_is_c1, norm0["c1e"], norm0["c2e"]),
-        "Bq2": np.where(a_is_c1, norm0["c2q2"], norm0["c1q2"]),
-        "Bcst": np.where(a_is_c1, norm0["c2cst"], norm0["c1cst"]),
-        "Be": np.where(a_is_c1, norm0["c2e"], norm0["c1e"]),
-    })
-    con.register("s5n", norm)
-    con.execute("""
-        CREATE OR REPLACE TEMP TABLE exp5 AS
-        SELECT f.rid, 0 AS side, E.x, f.Acst, f.Bcst,
-               (f.hside <> 0 OR se.x IS NOT NULL) AS inp
-        FROM s5n f
-        JOIN E ON f.Aq2 = E.q2 AND f.Acst = E.cst AND f.Ae = E.e
-        LEFT JOIN SE se ON se.p = f.p AND se.pos = 0 AND se.x = E.x
-        UNION ALL
-        SELECT f.rid, 1 AS side, E.x, f.Acst, f.Bcst,
-               (f.hside <> 1 OR se.x IS NOT NULL) AS inp
-        FROM s5n f
-        JOIN E ON f.Bq2 = E.q2 AND f.Bcst = E.cst AND f.Be = E.e
-        LEFT JOIN SE se ON se.p = f.p AND se.pos = 1 AND se.x = E.x""")
-    agg = con.execute("""
-        SELECT rid,
-          count(*) FILTER (WHERE side = 0) AS nA,
-          count(*) FILTER (WHERE side = 1) AS nB,
-          count(*) FILTER (WHERE side = 0 AND inp) AS nAp,
-          count(*) FILTER (WHERE side = 1 AND inp) AS nBp,
-          max(CASE WHEN side = 1 AND x = Acst THEN 1 ELSE 0 END) AS mAB,
-          max(CASE WHEN side = 0 AND x = Acst THEN 1 ELSE 0 END) AS mAA,
-          max(CASE WHEN side = 0 AND x = Bcst THEN 1 ELSE 0 END) AS mBA,
-          max(CASE WHEN side = 1 AND x = Bcst THEN 1 ELSE 0 END) AS mBB,
-          max(CASE WHEN side = 1 AND inp AND x = Acst THEN 1 ELSE 0 END)
-            AS mABp,
-          max(CASE WHEN side = 0 AND inp AND x = Acst THEN 1 ELSE 0 END)
-            AS mAAp,
-          max(CASE WHEN side = 0 AND inp AND x = Bcst THEN 1 ELSE 0 END)
-            AS mBAp,
-          max(CASE WHEN side = 1 AND inp AND x = Bcst THEN 1 ELSE 0 END)
-            AS mBBp
-        FROM exp5 GROUP BY rid""").df()
-    dd = con.execute("""
-        SELECT rid, count(*) AS D,
-               count(*) FILTER (WHERE allp) AS Dp
-        FROM (
-          SELECT rid, x, count(DISTINCT side) AS ns,
-                 bool_and(inp) AS allp
-          FROM exp5 GROUP BY rid, x
-        ) WHERE ns = 2 GROUP BY rid""").df()
-    con.unregister("s5n")
-
-    def arr(df, col):
-        out = np.zeros(n_rules, dtype=np.int64)
-        out[df["rid"].to_numpy()] = df[col].to_numpy().astype(np.int64)
-        return out
-
-    cols = {c: arr(agg, c) for c in
-            ("nA", "nB", "nAp", "nBp", "mAB", "mAA", "mBA", "mBB",
-             "mABp", "mAAp", "mBAp", "mBBp")}
-    D, Dp = arr(dd, "D"), arr(dd, "Dp")
-    a1 = ((norm["Ae"].to_numpy() == 0)
-          & (norm["Aq2"].to_numpy() == norm["p"].to_numpy())).astype(np.int64)
-    a2 = ((norm["Be"].to_numpy() == 1)
-          & (norm["Bq2"].to_numpy() == norm["p"].to_numpy())).astype(np.int64)
-    aT = ((norm["Aq2"].to_numpy() == norm["Bq2"].to_numpy())
-          & (norm["Ae"].to_numpy() != norm["Be"].to_numpy())).astype(np.int64)
-    ne = (norm["Acst"].to_numpy() != norm["Bcst"].to_numpy()).astype(np.int64)
-
-    def law(nA_, nB_, D_, mAB_, mAA_, mBA_, mBB_):
-        h1 = a1 * mAB_[rids] * (nA_[rids] - mAA_[rids])
-        h2 = a2 * mBA_[rids] * (nB_[rids] - mBB_[rids])
-        P = mBA_[rids] * mAB_[rids] * ne
-        return (
-            nA_[rids] * nB_[rids] - D_[rids] - h1 - h2
-            - aT * P + a1 * a2 * P + a1 * aT * P + a2 * aT * P
-            - a1 * a2 * aT * P
-        )
-
-    body = law(cols["nA"], cols["nB"], D, cols["mAB"], cols["mAA"],
-               cols["mBA"], cols["mBB"])
-    pca = law(cols["nAp"], cols["nBp"], Dp, cols["mABp"], cols["mAAp"],
-              cols["mBAp"], cols["mBBp"])
-    # a rule with NO entity-expansion rows at all is absent from the
-    # distributed agg -> null sizes after the left join
-    present = (cols["nA"][rids] > 0) | (cols["nB"][rids] > 0)
-    return pd.DataFrame({
-        "rid": rids,
-        "body_size": np.where(present, body, np.nan),
-        "pca_body_size": np.where(present, pca, np.nan),
-    })
-
-
-def _inst_sizes(con, R, enc, injective):
-    """s6-s9 body/pca sizes: mining/inst_sql.py's COUNTS over the coded
+def _inst_sizes(R, enc, injective):
+    """s4-s9 body/pca sizes: mining/inst_sql.py's COUNTS over the coded
     triples. The binding sets stay inside DuckDB (shipping them to Python
     measured 13 s of the task13 confidence pass); only the rule-table
-    sized counts come back."""
-    ir = R[R["shape"].isin(INST_SHAPES)]
+    sized counts come back, NULL sizes as NaN."""
+    ir = R[R["shape"].isin(SQL_SHAPES)]
     if not len(ir):
         return None
     fv = np.where(ir["fvpos"].to_numpy() == 0, "?a", "?b")
-    con.register("ir", pd.concat([
-        ir[["rid", "shape", "p", "hside", "fvpos", "hA"]],
-        _vv_fields(ir, "_vv0", fv, "a1"), _vv_fields(ir, "_vv1", fv, "a2"),
-        _ca_fields(ir, "_inst0", "c1"), _ca_fields(ir, "_inst1", "c2"),
-    ], axis=1))
-    con.register("t", pd.DataFrame({"s": enc.sc, "p": enc.pc, "o": enc.oc}))
-    sizes = con.execute(
-        COUNTS.format(T="t", R="ir", inj=injective)
-    ).fetchnumpy()
-    return pd.DataFrame(sizes)
+    with _duck() as con:
+        con.register("ir", pd.concat([
+            ir[["rid", "shape", "p", "hside", "fvpos", "hA"]],
+            _vv_fields(ir, "_vv0", fv, "a1"),
+            _vv_fields(ir, "_vv1", fv, "a2"),
+            _ca_fields(ir, "_inst0", "c1"), _ca_fields(ir, "_inst1", "c2"),
+        ], axis=1))
+        con.register(
+            "t", pd.DataFrame({"s": enc.sc, "p": enc.pc, "o": enc.oc})
+        )
+        return con.execute(COUNTS.format(T="t", R="ir", inj=injective)).df()
 
 
 def confidences_constants_local(
@@ -1518,8 +1279,8 @@ def confidences_constants_local(
     """Pandas replica of measures_constants.confidences_constants: rules
     rows + (rid, body_size, pca_body_size, cwa_confidence,
     pca_confidence). Where the distributed path would raise (ANSI divide
-    by zero on a 0 pca body), the local path emits null instead — the
-    only intentional divergence."""
+    by zero on a 0 body), the local path emits null instead — the only
+    intentional divergence."""
     enc = _Enc(tpdf)
     R = _parse_rules(rules_pdf, enc)
     # _Rel is built AFTER parsing so its code space (and hside table)
@@ -1530,17 +1291,10 @@ def confidences_constants_local(
     R["hside"] = rel.hside_by_code[R["p"].to_numpy()]
     keep_mask = R["hside"].to_numpy() >= 0
     R = R[keep_mask].reset_index(drop=True)
-    con = _duck()
-    con.register("E", rel.E)
-    con.register("SE", rel.SE)
-    con.register("bb", rel.b)
     parts = [
         _varonly_sizes(R, rel, injective),
-        _s4_sizes(con, R, rel, injective),
-        _s5_sizes(con, R, rel, injective),
-        _inst_sizes(con, R, enc, injective),
+        _inst_sizes(R, enc, injective),
     ]
-    con.close()
     parts = [p for p in parts if p is not None and len(p)]
     if parts:
         sizes = pd.concat(parts, ignore_index=True).set_index("rid")

@@ -47,7 +47,10 @@ predicate-bucketed partitioning.
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import re
 from typing import Iterator, Tuple
 
 import pandas as pd
@@ -289,6 +292,19 @@ def run_incremental_pipeline_ice(
         candidates = linking.alias_candidates(spark, n_entities)
     aka_pred = "dup" if window3 else linking.AKA
     tables: dict[str, IceTable] = {}
+    # Key-format migration: tables written before the digest suffix
+    # existed committed under the bare "batch-N" form. Each table's set of
+    # such legacy keys is read once per query. A legacy key is honoured
+    # for ONE composition of batch N: the first replay that meets it
+    # records its digest key beside the tables, and is skipped. A later
+    # replay of batch N is skipped only with that same file set; a batch N
+    # re-composed of other files appends under its own digest key.
+    legacy: dict[str, set[str]] = {}
+    honoured_path = os.path.join(workdir, "_legacy_keys_honoured.json")
+    honoured: dict[str, dict[str, str]] = {}
+    if os.path.exists(honoured_path):
+        with open(honoured_path) as f:
+            honoured = json.load(f)
 
     def table_for(name: str, df: DataFrame) -> IceTable:
         if name not in tables:
@@ -302,6 +318,26 @@ def run_incremental_pipeline_ice(
                 )
         return tables[name]
 
+    def committed_under_legacy(name: str, legacy_key: str, key: str) -> bool:
+        if name not in legacy:
+            legacy[name] = {
+                k for k in (s["summary"].get("idempotency-key")
+                            for s in tables[name].snapshots())
+                if k is not None and re.fullmatch(r"batch-\d+", k)
+            }
+        if key == legacy_key or legacy_key not in legacy[name]:
+            return False
+        seen = honoured.setdefault(name, {})
+        if legacy_key not in seen:
+            # recorded before the batch is skipped: a crash in between
+            # replays the same file set, which the record still skips
+            seen[legacy_key] = key
+            tmp = honoured_path + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(honoured, f)
+            os.replace(tmp, honoured_path)
+        return seen[legacy_key] == key
+
     def process_batch(batch_docs: DataFrame, batch_id: int) -> None:
         relations, edges = _batch_transform(
             batch_docs, window3, candidates, aka_pred
@@ -310,50 +346,29 @@ def run_incremental_pipeline_ice(
         # batch number: after a wiped checkpoint, Spark re-numbers batches
         # from 0 and a replayed "batch-N" may cover a different file set
         # (the source dir can have gained files since the original run).
-        # Folding the batch's input-file list (driver-side metadata, no
-        # extra job) into the key makes a replay dedupe when BOTH the
-        # renumbered batch id and the file set line up with the original
-        # commit — batch_id stays part of the key, so after a checkpoint
-        # wipe the guarantee is best-effort, not absolute. Sources with no
-        # file lineage (memory/rate) fall back to the batch id alone.
-        #
-        # Key-format migration: tables written before the digest suffix
-        # existed committed under the bare "batch-N" form. A stream that
-        # resumes from an existing checkpoint on upgraded code replays
-        # the same batch ids, so we also honour the legacy key — without
-        # this, an already-committed batch would re-append under its new
-        # digest-suffixed key.
-        import hashlib
-
-        try:
-            files = sorted(batch_docs.inputFiles())
-        except Exception:  # noqa: BLE001 — non-file sources
-            files = []
+        # Folding the batch's input-file list into the key makes a replay
+        # dedupe when BOTH the renumbered batch id and the file set line
+        # up with the original commit — batch_id stays part of the key, so
+        # after a checkpoint wipe the guarantee is best-effort, not
+        # absolute. The batch arrives as a LogicalRDD whose inputFiles()
+        # is empty, so the list is one small job over input_file_name().
+        # Sources with no file lineage (memory/rate) give no names and
+        # fall back to the batch id alone.
+        files = sorted(
+            r[0] for r in batch_docs.select(F.input_file_name())
+            .distinct().collect() if r[0]
+        )
         legacy_key = f"batch-{batch_id}"
         if files:
             digest = hashlib.md5("\n".join(files).encode()).hexdigest()[:12]
             key = f"{legacy_key}-{digest}"
         else:
             key = legacy_key
-
-        def committed_under_legacy(table) -> bool:
-            if key == legacy_key:
-                return False  # nothing to migrate
-            try:
-                snaps = table.metadata()["snapshots"]
-            except Exception:  # noqa: BLE001 — fresh table, no metadata yet
-                return False
-            return any(
-                s["summary"].get("idempotency-key") == legacy_key
-                for s in snaps
-            )
-
-        rel_t = table_for("relations_ice", relations)
-        if not committed_under_legacy(rel_t):
-            rel_t.append(relations, idempotency_key=key)
-        edge_t = table_for("sameas_edges_ice", edges)
-        if not committed_under_legacy(edge_t):
-            edge_t.append(edges, idempotency_key=key)
+        for name, df in (("relations_ice", relations),
+                         ("sameas_edges_ice", edges)):
+            table = table_for(name, df)
+            if not committed_under_legacy(name, legacy_key, key):
+                table.append(df, idempotency_key=key)
 
     writer = documents.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", os.path.join(workdir, "_stream_checkpoint")

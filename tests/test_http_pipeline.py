@@ -370,6 +370,18 @@ def test_discretize_bulk_equals_per_predicate(spark, numeric_tsv):
     assert bulk.where(F.col("p") == "<knows>").collect()[0]["o"] == "<e1>"
 
 
+def test_mine_rejects_timeout(spark):
+    """The miner has no time budget: a Timeout threshold fails loudly,
+    naming the threshold, instead of being ignored."""
+    with pytest.raises(PipelineError, match="Unsupported threshold: Timeout"):
+        run_pipeline_json(spark, [
+            {"name": "LoadGraph", "parameters": {"path": YAGO, "settings": "tsvRaw"}},
+            {"name": "Index"},
+            {"name": "Mine", "parameters": {
+                "thresholds": [{"name": "Timeout", "value": 5}]}},
+        ])
+
+
 def test_discretize_bulk_bounds_predicate_collect(spark, tmp_path):
     """DiscretizeInBulk without ``predicates`` collects the distinct
     numeric predicates under a bound and fails loudly past it."""

@@ -135,6 +135,43 @@ def test_confidences_all_shapes_local_equals_distributed(spark, kg, inj):
     subset.unpersist()
 
 
+@pytest.mark.parametrize("inj", [False, True])
+def test_confidences_null_sizes_local_equals_distributed(spark, kg, inj):
+    """NULL versus zero sizes, both paths: over the KG with p1 cut down to
+    the one triple (e1, p1, e6), s5 atoms on p1 match no entity, and the
+    s4 rule ?a|p1|?b <- ?b|p3|?a, C=e29|p0|?a keeps pairs, none with
+    ?a = e1 inside the PCA restriction. Only the sizes are compared: an
+    injective s5 body of 0 makes the distributed division raise (ANSI)."""
+    rules = mine_constants(
+        kg,
+        MiningParams(min_head_size=5, min_support=2,
+                     min_head_coverage=0.05, injective=inj),
+        constants="anywhere", quasi_binding=True,
+    ).where(F.col("shape").isin("s4", "s5")).cache()
+    cut = kg.where((F.col("p") != "p1")
+                   | ((F.col("s") == "e1") & (F.col("o") == "e6")))
+
+    def sizes(df):
+        return {
+            r["rid"]: (r["shape"], r["body_size"], r["pca_body_size"])
+            for r in df.select(
+                "rid", "shape", "body_size", "pca_body_size"
+            ).collect()
+        }
+
+    loc = sizes(confidences_constants(rules, cut, injective=inj))
+    dist = sizes(
+        confidences_constants(rules, cut, injective=inj, local_threshold=0)
+    )
+    assert any(s == "s4" and b and pca is None
+               for s, b, pca in loc.values())
+    assert any(s == "s5" and b is None for s, b, _ in loc.values())
+    assert set(loc) == set(dist)
+    diffs = {k: (loc[k], dist[k]) for k in loc if loc[k] != dist[k]}
+    assert not diffs, f"{len(diffs)} mismatches, e.g. {list(diffs.items())[:3]}"
+    rules.unpersist()
+
+
 def _conf_rows(df):
     return {
         r["rid"]: (

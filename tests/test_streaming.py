@@ -316,3 +316,56 @@ def test_ice_sink_honours_legacy_idempotency_keys(spark, tmp_path):
     rel2 = IceTable.load(spark, os.path.join(workdir, "relations_ice"))
     assert len(rel2.snapshots()) == snaps_before  # no re-appends
     assert rel2.scan().count() == rows_before
+
+
+def test_ice_sink_honours_a_legacy_key_for_one_composition(spark, tmp_path):
+    """A legacy 'batch-N' key skips the first replay of batch N, and again
+    any replay of that same file set; a batch N composed of other files
+    appends under its digest key instead of being dropped."""
+    import glob
+    import json
+    import re
+    import shutil
+
+    from rdfrules_spark.sources.icetable import IceTable
+    from rdfrules_spark.streaming import run_incremental_pipeline_ice
+    from rdfrules_spark.streaming.ingest import stream_documents
+
+    n_docs, n_ent = 120, corpus.n_entities_for(120)
+    docs = corpus.synth_documents(spark, n_docs, n_entities=n_ent)
+    in_dir = str(tmp_path / "in")
+    docs.coalesce(1).write.mode("append").parquet(in_dir)
+    other_dir = str(tmp_path / "other")
+    docs.where(F.col("doc_id") < "doc_00000060").coalesce(1).write.mode(
+        "append"
+    ).parquet(other_dir)
+    workdir = str(tmp_path / "work")
+
+    def run(src):
+        shutil.rmtree(os.path.join(workdir, "_stream_checkpoint"),
+                      ignore_errors=True)
+        run_incremental_pipeline_ice(
+            spark, stream_documents(spark, src, max_files_per_trigger=1),
+            workdir, n_entities=n_ent,
+        ).awaitTermination(600)
+        rel = IceTable.load(spark, os.path.join(workdir, "relations_ice"))
+        return len(rel.snapshots()), rel.scan().count()
+
+    run(in_dir)
+    # a pre-upgrade table: every committed key in the bare 'batch-N' form
+    for mf in glob.glob(os.path.join(workdir, "*_ice", "metadata",
+                                     "v*.metadata.json")):
+        meta = json.load(open(mf))
+        for s in meta.get("snapshots", []):
+            k = s["summary"].get("idempotency-key", "")
+            s["summary"]["idempotency-key"] = re.sub(
+                r"^(batch-\d+)-[0-9a-f]+$", r"\1", k
+            )
+        json.dump(meta, open(mf, "w"))
+    rel = IceTable.load(spark, os.path.join(workdir, "relations_ice"))
+    legacy = (len(rel.snapshots()), rel.scan().count())
+
+    assert run(in_dir) == legacy
+    snaps, rows = run(other_dir)
+    assert snaps == legacy[0] + 1 and rows > legacy[1]
+    assert run(in_dir) == (snaps, rows)
