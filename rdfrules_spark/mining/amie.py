@@ -35,15 +35,29 @@ Scale notes:
 Rule row schema:
   rule(p long, shape string, q long, d1 string, r long, d2 string,
        head_size long, support long, head_coverage double)
-  shape in {'l2', 'l3v2', 'l3v3'}; d* in {'f','i'}; r/d2 null for l2.
+  shape in {'l2', 'l3v2', 'l3v3'}; d* in {'f','i'}; r/d2 null for l2;
+  p/q/r take the type of the input's p.
+
+Driver-local gate: one gate serves both tiers. Below
+``local_constants.LOCAL_TRIPLES_MAX`` triples ``mine`` runs the constants
+tier's driver-local miner without constants (the same l2/l3v2/l3v3 laws
+in DuckDB), as mining/measures.confidences does with its combo laws; the
+staged jobs above stay the path for larger inputs and for the settings
+that miner does not honour (see ``_local_ok``).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from rdfrules_spark.mining.local_constants import (
+    LOCAL_TRIPLES_MAX,
+    collect_local,
+    mine_constants_local,
+)
 
 
 @dataclass
@@ -415,13 +429,59 @@ def mine_l3_3var(
     return _finish(agg, heads, params)
 
 
-def mine(triples: DataFrame, params: MiningParams | None = None) -> DataFrame:
+def _local_ok(params: MiningParams) -> bool:
+    """Whether the constants tier's driver-local miner honours every
+    setting of ``params``: it has no anytime budget, no head sampling, no
+    reflexive head sizes and no shape beyond rule length 3."""
+    return (
+        params.max_rule_length <= 3
+        and params.timeout_s is None
+        and params.head_sample_fraction is None
+        and params.local_timeout_me is None
+        and not params.reflexive_head_sizes
+    )
+
+
+def _mine_local(triples: DataFrame, tpdf, params: MiningParams) -> DataFrame:
+    """The driver-local var-only miner: ``mine_constants_local`` without
+    constants, whose l2/l3v2/l3v3 laws are this module's, emitting this
+    module's rule rows."""
+    # the local miner's minHC law is support >= head_size * minHC; mine
+    # with a slightly lower minHC and keep this module's support /
+    # head_size >= minHC (the two disagree at float boundaries, e.g.
+    # minHC 0.07 with head size 100 and support 7)
+    mhc = params.min_head_coverage
+    pdf = mine_constants_local(
+        tpdf.drop_duplicates(),
+        replace(params, min_head_coverage=mhc * (1 - 1e-9)),
+        "nowhere", var_keys=True,
+    )
+    term = triples.schema["p"].dataType.simpleString()
+    return triples.sparkSession.createDataFrame(
+        pdf[pdf["head_coverage"] >= mhc],
+        schema=f"p {term}, shape string, q {term}, d1 string, r {term}, "
+        "d2 string, head_size long, support long, head_coverage double",
+    )
+
+
+def mine(
+    triples: DataFrame,
+    params: MiningParams | None = None,
+    local_threshold: int = LOCAL_TRIPLES_MAX,
+) -> DataFrame:
     """Full constants-free mining run for maxRuleLength <= 3 (the staged
     L2/L3 shapes below). For maxRuleLength >= 4 use
     :func:`rdfrules_spark.mining.shapes.mine_upto` — the generic shape
     miner (same semantics at L<=3, generalized body encoding).
     `triples` must be distinct (s,p,o); callers dedup (the triple store is
-    distinct by construction)."""
+    distinct by construction).
+
+    Driver-local gate (``local_constants.collect_local``, the one the
+    constants tier uses): at most ``local_threshold`` triples (0 forces
+    the staged plan) of one term type, with settings the constants tier
+    honours (``_local_ok``), mine on the driver, the same laws in DuckDB;
+    ``top_k`` then filters the result. Otherwise the staged plan below
+    runs."""
     params = params or MiningParams()
     # OnlyPredicates/WithoutPredicates constrain ALL atoms (head and body),
     # reference core:rule/RuleConstraint.scala:28-104 via
@@ -430,6 +490,12 @@ def mine(triples: DataFrame, params: MiningParams | None = None) -> DataFrame:
         triples = triples.where(F.col("p").isin(params.only_predicates))
     if params.without_predicates is not None:
         triples = triples.where(~F.col("p").isin(params.without_predicates))
+    spo = triples.select("s", "p", "o")
+    # one term type, so that the local codes order like the staged columns
+    local = _local_ok(params) and len({t for _, t in spo.dtypes}) == 1
+    tpdf = collect_local(spo, local_threshold) if local else None
+    if tpdf is not None:
+        return _top_k(_mine_local(triples, tpdf, params), params.top_k)
     heads = head_sizes(triples, params)
     if params.timeout_s is not None:
         # anytime mining (Threshold.Timeout analog): each shape is one job;
@@ -496,16 +562,21 @@ def mine(triples: DataFrame, params: MiningParams | None = None) -> DataFrame:
         rules = rules.unionByName(mine_l3_3var(triples, heads, params))
     else:
         rules = mine_l2(triples, heads, params)
-    if params.top_k:
-        # reference TopKRuleConsumer: k best by HC; ties beyond k overflow
-        # (allowOverflowIfSameHeadCoverage) — keep all rules with HC >= kth
-        kth = (
-            rules.select("head_coverage")
-            .orderBy(F.desc("head_coverage"))
-            .limit(params.top_k)
-            .agg(F.min("head_coverage").alias("kth"))
-        )
-        rules = rules.join(F.broadcast(kth)).where(
-            F.col("head_coverage") >= F.col("kth")
-        ).drop("kth")
-    return rules
+    return _top_k(rules, params.top_k)
+
+
+def _top_k(rules: DataFrame, k: int | None) -> DataFrame:
+    """Reference TopKRuleConsumer: the k best rules by HC; ties beyond k
+    overflow (allowOverflowIfSameHeadCoverage), so every rule with HC >= the
+    kth is kept."""
+    if not k:
+        return rules
+    kth = (
+        rules.select("head_coverage")
+        .orderBy(F.desc("head_coverage"))
+        .limit(k)
+        .agg(F.min("head_coverage").alias("kth"))
+    )
+    return rules.join(F.broadcast(kth)).where(
+        F.col("head_coverage") >= F.col("kth")
+    ).drop("kth")

@@ -1,18 +1,26 @@
-"""Driver-local (DuckDB + numpy) fast path for constants mining/confidence.
+"""Driver-local (DuckDB + numpy) fast path for mining and confidences,
+both tiers.
 
 At driver-sized inputs the staged distributed miners in
 mining/constants.py + mining/measures_constants.py pay ~60 Spark stages of
 fixed scheduling / shuffle-exchange latency on data that fits in driver
 memory — measured 99.7 s for the task13 pipeline (19.7k triples,
-951,333 rules) where the work itself is seconds of vectorized joins.
+951,333 rules) where the work itself is seconds of vectorized joins; the
+var-only amie.mine + measures.confidences pair pays ~40 stages.
 This module is the same adaptive-gate pattern as
-canonicalize.connected_components, with one gate: ``collect_local``
-returns a DataFrame as pandas when it has at most ``bound`` rows, else
-None. The bounded collect is the probe, and it is one task whatever the
-number of input partitions. ``mine_constants`` / ``confidences_constants``
-give it two bounds: ``LOCAL_TRIPLES_MAX`` input triples (their
+canonicalize.connected_components, with one gate for both tiers:
+``collect_local`` returns a DataFrame as pandas when it has at most
+``bound`` rows, else None. The bounded collect is the probe, and it is
+one task whatever the number of input partitions. ``mine_constants`` /
+``confidences_constants`` and ``amie.mine`` / ``measures.confidences``
+give it the same two bounds: ``LOCAL_TRIPLES_MAX`` input triples (their
 ``local_threshold`` parameter; 0 forces the distributed path) and, for
-confidences, ``LOCAL_RULES_MAX`` rules. Within them they run the
+confidences, ``LOCAL_RULES_MAX`` rules. ``amie.mine`` runs
+``mine_constants_local`` without constants, in amie's row schema
+(``var_keys``); ``measures.confidences`` sends its
+(p, q, d1, r, d2) keys straight to ``_var_sizes``, the var-only size laws
+``confidences_constants_local`` applies after parsing canonical rules
+(``_var_combos``). Within the bounds they run the
 IDENTICAL staged algebra — same survivor-set gating, same distinct-triple
 / injective laws, same PCA branch machinery — as DuckDB SQL over
 integer-coded terms, with numpy for the per-rule law assembly and the
@@ -56,10 +64,10 @@ Implementation notes:
   * triple identity = row index over the distinct triple set (the
     distributed path uses xxhash64 for shuffle-width reasons; only
     equality is ever tested, so any injective id is equivalent);
-  * under Spark's ANSI mode a zero body/pca size would RAISE in the
-    distributed plan's division; the local path emits null instead —
-    the one documented divergence (only reachable on inputs where the
-    distributed path would crash).
+  * a missing or zero size gives a NULL confidence on both paths
+    (distributed confidences_constants divides with try_divide, since
+    ANSI division by zero raises; measures.confidences sizes are never
+    zero).
 """
 
 from __future__ import annotations
@@ -72,7 +80,7 @@ from pyspark.sql import DataFrame
 
 from rdfrules_spark.mining.inst_sql import COUNTS, SQL_SHAPES
 
-#: input triples at or below which constants mining runs on the driver
+#: input triples at or below which mining and confidences run on the driver
 LOCAL_TRIPLES_MAX = 200_000
 #: rules at or below which confidences_constants collects the ruleset to
 #: the driver. The largest ruleset any caller mines locally today is
@@ -82,6 +90,10 @@ LOCAL_TRIPLES_MAX = 200_000
 #: larger ruleset, such as one mined distributed over a small triple set,
 #: takes the distributed confidence path instead of an unbounded collect.
 LOCAL_RULES_MAX = 2_000_000
+#: rule shapes without constants (mining/amie.py's key schema)
+VAR_SHAPES = ("l2", "l3v2", "l3v3")
+#: direction code -> amie.py's d1/d2 ('f': the atom binds (x, y) as (s, o))
+_DIRS = np.array(["f", "i"], dtype=object)
 
 
 def collect_local(df: DataFrame, bound: int) -> pd.DataFrame | None:
@@ -385,13 +397,19 @@ def mine_constants_local(
     constants: str = "anywhere",
     constants_for_predicates: dict | None = None,
     quasi_binding: bool = False,
+    var_keys: bool = False,
 ) -> pd.DataFrame:
     """DuckDB/numpy replica of mine_constants: returns (head, p, atoms,
     shape, support, head_size, head_coverage) rows identical to the
     distributed miner (`tpdf` must be distinct (s,p,o) rows; callers
     dedupe). Each shape is ONE SQL statement mirroring the staged Spark
     aggregation (same survivor-set gating, same _ndt/_inj laws — see
-    mining/constants.py for the reference cites)."""
+    mining/constants.py for the reference cites).
+
+    ``var_keys`` (with ``constants="nowhere"``): rows in mining/amie.py's
+    schema instead (p, shape, q, d1, r, d2, head_size, support,
+    head_coverage), terms of the input's type. The l3v2 pair is already in
+    amie's (q, d) order, by the terms' order, and the l3v3 ?a atom first."""
     enc = _Enc(tpdf)
     N = enc.n_terms
     rank = enc.rank()
@@ -470,9 +488,21 @@ def mine_constants_local(
             hs = hs[~dup]
         if not len(agg):
             return
+        sup = agg["support"].to_numpy()
+        if var_keys:
+            k = agg.rename(columns={"d": "d1"})
+            l2 = shape == "l2"
+            out_parts.append(pd.DataFrame({
+                "p": enc.terms[k["p"].to_numpy()], "shape": shape,
+                "q": enc.terms[k["q"].to_numpy()],
+                "d1": _DIRS[k["d1"].to_numpy()],
+                "r": None if l2 else enc.terms[k["r"].to_numpy()],
+                "d2": None if l2 else _DIRS[k["d2"].to_numpy()],
+                "head_size": hs, "support": sup, "head_coverage": sup / hs,
+            }))
+            return
         heads_s = head_str(agg)
         atom_arrays = atoms(agg)
-        sup = agg["support"].to_numpy()
         out_parts.append(pd.DataFrame({
             "head": heads_s,
             "p": enc.terms[agg["p"].to_numpy()],
@@ -679,13 +709,12 @@ def mine_constants_local(
 
     con.close()
     if not out_parts:
+        cols = (("p", "shape", "q", "d1", "r", "d2", "head_size", "support")
+                if var_keys else
+                ("head", "p", "atoms", "shape", "support", "head_size"))
         return pd.DataFrame({
-            "head": pd.Series([], dtype=object),
-            "p": pd.Series([], dtype=object),
-            "atoms": pd.Series([], dtype=object),
-            "shape": pd.Series([], dtype=object),
-            "support": pd.Series([], dtype=np.int64),
-            "head_size": pd.Series([], dtype=np.int64),
+            **{c: pd.Series([], dtype=np.int64 if c in ("support", "head_size")
+                            else object) for c in cols},
             "head_coverage": pd.Series([], dtype=np.float64),
         })
     return pd.concat(out_parts, ignore_index=True)
@@ -1133,14 +1162,12 @@ class _Rel:
         return self._se_keys[idx] == q
 
 
-def _varonly_sizes(R: pd.DataFrame, rel: _Rel, injective: bool):
-    """body_size / pca_body_size for l2 / l3v2 / l3v3 rules — the
-    measures.confidences combo-level laws, vectorized. Returns a frame
-    (rid, body_size, pca_body_size) with NaN for missing sizes."""
+def _var_combos(R: pd.DataFrame) -> pd.DataFrame:
+    """The l2 / l3v2 / l3v3 rules of parsed canonical rules as coded
+    (rid, p, shape, q, d1, r, d2) in mining/amie.py's key schema: d = 0
+    for 'f', 1 for 'i'; r = d2 = -1 for l2."""
     ua = R.attrs["ua"]
-    vv = R[R["shape"].isin(["l2", "l3v2", "l3v3"])]
-    if not len(vv):
-        return pd.DataFrame(columns=["rid", "body_size", "pca_body_size"])
+    vv = R[R["shape"].isin(VAR_SHAPES)]
     sh = vv["shape"].to_numpy()
     v0 = vv["_vv0"].to_numpy()
     v1 = vv["_vv1"].to_numpy()
@@ -1166,22 +1193,32 @@ def _varonly_sizes(R: pd.DataFrame, rel: _Rel, injective: bool):
          np.where(s1 == "?a", 0, 1)],
         -1,
     ).astype(np.int64)
-    comp = pd.DataFrame({
+    return pd.DataFrame({
         "rid": vv["rid"].to_numpy(), "p": vv["p"].to_numpy(),
         "shape": sh, "q": q, "d1": d1, "r": r, "d2": d2,
     })
+
+
+def _var_sizes(comp: pd.DataFrame, rel: _Rel,
+               injective: bool) -> pd.DataFrame:
+    """body_size / pca_body_size of coded var-only rules (``_var_combos``
+    rows) — the measures.confidences combo-level laws, vectorized.
+    Returns (rid, body_size, pca_body_size) with NaN where the distributed
+    plan gives NULL: an l2 body predicate without (non-reflexive) facts, a
+    combo without body pairs, a head predicate without facts."""
     N = rel.N
     b = rel.b
     outs = []
-    for shape in ("l2", "l3v2", "l3v3"):
+    for shape in VAR_SHAPES:
         cs = comp[comp["shape"] == shape]
         if not len(cs):
             continue
         combos = cs[["q", "d1", "r", "d2"]].drop_duplicates()
         if shape == "l2":
             qs = combos["q"].drop_duplicates().to_numpy()
+            psz = rel.psz_by_code[qs]
             bs = pd.DataFrame({
-                "q": qs, "body_size": rel.psz_by_code[qs],
+                "q": qs, "body_size": np.where(psz > 0, psz, np.nan),
             })
             sized = cs.merge(bs, on="q", how="left")
             pr = b.rename(columns={"d": "d1", "x": "a", "y": "bb"}).merge(
@@ -1237,6 +1274,7 @@ def _varonly_sizes(R: pd.DataFrame, rel: _Rel, injective: bool):
         # keep pairs whose head entity on hside exists for p
         ph = cs[["p", "q", "d1", "r", "d2"]].drop_duplicates()
         ph = ph.assign(hside=rel.hside_by_code[ph["p"].to_numpy()])
+        ph = ph[ph["hside"] >= 0]
         ex = pr.merge(ph, on=[c for c in ("q", "d1", "r", "d2")
                               if c in pr.columns])
         hv = np.where(ex["hside"].to_numpy() == 0, ex["a"].to_numpy(),
@@ -1248,7 +1286,53 @@ def _varonly_sizes(R: pd.DataFrame, rel: _Rel, injective: bool):
         )
         sized = sized.merge(ps, on=["p", "q", "d1", "r", "d2"], how="left")
         outs.append(sized[["rid", "body_size", "pca_body_size"]])
+    if not outs:
+        return pd.DataFrame(columns=["rid", "body_size", "pca_body_size"])
     return pd.concat(outs, ignore_index=True)
+
+
+def confidences_local(
+    rules_pdf: pd.DataFrame, tpdf: pd.DataFrame, cwa: bool = True,
+    pca: bool = True, min_confidence: float = 0.0, injective: bool = False,
+) -> pd.DataFrame:
+    """Pandas replica of measures.confidences: the l2 / l3v2 / l3v3 rows
+    of var-schema rules (mining/amie.py; p/q/r as the same strings as the
+    triples' terms) with body_size, pca_body_size, cwa_confidence and
+    pca_confidence appended in that order, each only when its measure is
+    asked for. The sizes are exact, so ``min_confidence`` filters
+    cwa_confidence directly."""
+    out = rules_pdf[rules_pdf["shape"].isin(VAR_SHAPES)].reset_index(
+        drop=True
+    )
+    enc = _Enc(tpdf)
+    l2 = (out["shape"] == "l2").to_numpy()
+    r = np.full(len(out), -1, dtype=np.int64)
+    r[~l2] = enc.map_terms(out["r"].to_numpy(dtype=object)[~l2])
+    comp = pd.DataFrame({
+        "rid": np.arange(len(out), dtype=np.int64),
+        "p": enc.map_terms(out["p"].to_numpy(dtype=object)),
+        "shape": out["shape"].to_numpy(),
+        "q": enc.map_terms(out["q"].to_numpy(dtype=object)),
+        "d1": (out["d1"] == "i").to_numpy().astype(np.int64),
+        "r": r,
+        "d2": np.where(l2, -1, out["d2"] == "i").astype(np.int64),
+    })
+    # _Rel is built after map_terms so its code space covers rule-only terms
+    sizes = _var_sizes(comp, _Rel(enc, injective), injective).set_index(
+        "rid"
+    )
+    sup = out["support"].to_numpy(dtype=np.float64)
+    measured = {}
+    for size, conf, wanted in (("body_size", "cwa_confidence", cwa),
+                               ("pca_body_size", "pca_confidence", pca)):
+        if wanted:
+            n = sizes[size].reindex(comp["rid"]).to_numpy(dtype=np.float64)
+            out[size] = pd.Series(n).astype("Int64")
+            measured[conf] = sup / n
+    out = out.assign(**measured)
+    if min_confidence > 0.0:
+        out = out[out["cwa_confidence"] >= min_confidence]
+    return out
 
 
 def _inst_sizes(R, enc, injective):
@@ -1278,9 +1362,7 @@ def confidences_constants_local(
 ) -> pd.DataFrame:
     """Pandas replica of measures_constants.confidences_constants: rules
     rows + (rid, body_size, pca_body_size, cwa_confidence,
-    pca_confidence). Where the distributed path would raise (ANSI divide
-    by zero on a 0 body), the local path emits null instead — the only
-    intentional divergence."""
+    pca_confidence); a zero size gives a NULL confidence, as there."""
     enc = _Enc(tpdf)
     R = _parse_rules(rules_pdf, enc)
     # _Rel is built AFTER parsing so its code space (and hside table)
@@ -1292,7 +1374,7 @@ def confidences_constants_local(
     keep_mask = R["hside"].to_numpy() >= 0
     R = R[keep_mask].reset_index(drop=True)
     parts = [
-        _varonly_sizes(R, rel, injective),
+        _var_sizes(_var_combos(R), rel, injective),
         _inst_sizes(R, enc, injective),
     ]
     parts = [p for p in parts if p is not None and len(p)]

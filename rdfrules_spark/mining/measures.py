@@ -24,16 +24,37 @@ distinct so Catalyst plans a proper hash join.
 `confidences()` computes CWA + PCA in ONE pass: body pairs per shape are
 materialized once (cached) and both sizes are derived from them — halves
 the dominant path-join cost vs calling the two functions separately.
+
+Driver-local gate: one gate serves both tiers. Below
+``local_constants.LOCAL_TRIPLES_MAX`` triples and ``LOCAL_RULES_MAX``
+rules, ``confidences()`` sends the rules' (p, q, d1, r, d2) keys to
+``local_constants._var_sizes``, the same combo laws the constants tier's
+driver-local confidences apply to its var-only rules; the plans below run
+above either bound.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from rdfrules_spark.mining.amie import _b
+from rdfrules_spark.mining.local_constants import (
+    LOCAL_RULES_MAX,
+    LOCAL_TRIPLES_MAX,
+    collect_local,
+    confidences_local,
+)
 
 COMBO = ["q", "d1", "r", "d2"]
+#: rule columns holding triple terms: they cross the gate as strings
+_TERMS = ("p", "q", "r")
+#: types of the measure columns confidences appends
+_MEASURES = {
+    "body_size": T.LongType(), "pca_body_size": T.LongType(),
+    "cwa_confidence": T.DoubleType(), "pca_confidence": T.DoubleType(),
+}
 
 
 def _combo_join(
@@ -238,6 +259,44 @@ def _l3v3_lower_bounds(
     return _combo_join(combos, prod, COMBO, "left")
 
 
+def _strings(df: DataFrame, cols) -> tuple[DataFrame, dict]:
+    """``df`` with its non-string columns among ``cols`` cast to string,
+    and the original types of those columns."""
+    schema = df.schema
+    types = {c: schema[c].dataType for c in cols
+             if c in schema.names and schema[c].dataType != T.StringType()}
+    cast = {c: F.col(c).cast("string") for c in types}
+    return (df.withColumns(cast) if cast else df), types
+
+
+def _confidences_local(
+    rules: DataFrame, triples: DataFrame, cwa: bool, pca: bool,
+    min_confidence: float, injective: bool, local_threshold: int,
+) -> DataFrame | None:
+    """``confidences`` on the driver (local_constants.confidences_local)
+    when the triples fit ``local_threshold`` and the rules
+    ``LOCAL_RULES_MAX``, else None. Non-string terms cross as strings, so
+    that long codes keep every bit (a nullable long column reaches pandas
+    as float64), and are cast back."""
+    spo, _ = _strings(triples.select("s", "p", "o"), ("s", "p", "o"))
+    tpdf = collect_local(spo, local_threshold)
+    if tpdf is None:
+        return None
+    as_str, types = _strings(rules, _TERMS)
+    rpdf = collect_local(as_str, LOCAL_RULES_MAX)
+    if rpdf is None:
+        return None
+    out = confidences_local(
+        rpdf, tpdf.drop_duplicates(), cwa, pca, min_confidence, injective
+    )
+    schema = T.StructType(as_str.schema.fields + [
+        T.StructField(c, _MEASURES[c])
+        for c in out.columns[len(rpdf.columns):]
+    ])
+    sdf = triples.sparkSession.createDataFrame(out, schema=schema)
+    return sdf.withColumns({c: F.col(c).cast(t) for c, t in types.items()})
+
+
 def confidences(
     rules: DataFrame,
     triples: DataFrame,
@@ -245,6 +304,7 @@ def confidences(
     pca: bool = True,
     min_confidence: float = 0.0,
     injective: bool = False,
+    local_threshold: int = LOCAL_TRIPLES_MAX,
 ) -> DataFrame:
     """Attach body_size/cwa_confidence and/or pca_body_size/pca_confidence.
 
@@ -262,9 +322,20 @@ def confidences(
     sum-of-deg^2 join would explode. Surviving rules get EXACT counts, and
     the result is filtered to cwa_confidence >= min_confidence — the same
     final ruleset as Ruleset.computeConfidence(min) in the reference.
+
+    Driver-local gate (``local_constants.collect_local``, shared with
+    mining and the constants tier): at most ``local_threshold`` triples
+    (0 forces the plan below) and ``LOCAL_RULES_MAX`` rules are scored on
+    the driver by the same combo laws (``local_constants._var_sizes``),
+    with the same output columns; there the sizes are exact and
+    ``min_confidence`` is a plain filter.
     """
     if min_confidence > 0.0 and not cwa:
         raise ValueError("min_confidence pruning requires cwa=True")
+    local = _confidences_local(rules, triples, cwa, pca, min_confidence,
+                               injective, local_threshold)
+    if local is not None:
+        return local
     # materialize the ruleset ONCE: rules is usually a lazy mining DAG, and
     # every downstream derivation (per-shape combos for body_pairs, the
     # l3v3 lower bounds, the final measure join) would otherwise re-execute

@@ -24,13 +24,14 @@ DataFrame code:
     qpca_constants reads the raw binding sets of the same text.
 
 Driver-local gate (``local_constants.collect_local``, the same one
-mining/constants.mine_constants uses): the triples are collected under
-``local_threshold`` (default ``LOCAL_TRIPLES_MAX``) and then the rules
-under ``LOCAL_RULES_MAX``; each bounded collect is its own probe, one
-task whatever the number of input partitions. Within both bounds the
-confidences run on the driver, above either the distributed plan below
-runs. A ruleset mined on the driver therefore makes one Arrow round trip
-(createDataFrame, then this collect).
+mining/constants.mine_constants, amie.mine and measures.confidences use):
+the triples are collected under ``local_threshold`` (default
+``LOCAL_TRIPLES_MAX``) and then the rules under ``LOCAL_RULES_MAX``; each
+bounded collect is its own probe, one task whatever the number of input
+partitions. Within both bounds the confidences run on the driver, above
+either the distributed plan below runs, its var-only part included (one
+decision per call). A ruleset mined on the driver therefore makes one
+Arrow round trip (createDataFrame, then this collect).
 """
 
 from __future__ import annotations
@@ -46,13 +47,11 @@ from rdfrules_spark.mining.inst_sql import (
 from rdfrules_spark.mining.local_constants import (
     LOCAL_RULES_MAX,
     LOCAL_TRIPLES_MAX,
+    VAR_SHAPES,
     collect_local,
     confidences_constants_local,
 )
 from rdfrules_spark.mining.measures import confidences, qpca_confidence
-
-#: rule shapes without constants (mining/measures.py's laws)
-VAR_SHAPES = ("l2", "l3v2", "l3v3")
 
 
 def _split(col, i):
@@ -286,7 +285,9 @@ def confidences_constants(
     present = {r["shape"] for r in R.select("shape").distinct().collect()}
     parts = []
     if present & set(VAR_SHAPES):
-        parts.append(confidences(_var_rules(R), t, injective=injective)
+        # the gate above decided: the var-only laws run distributed too
+        parts.append(confidences(_var_rules(R), t, injective=injective,
+                                 local_threshold=0)
                      .select("rid", "body_size", "pca_body_size"))
     if present & set(SQL_SHAPES):
         parts.append(_inst_sql(COUNTS, t, R, injective))
@@ -296,10 +297,13 @@ def confidences_constants(
         "rid", "head", "p", "atoms", "shape", "support", "head_size",
         "head_coverage", "body_size", "pca_body_size",
     )
+    # try_divide: a constants-shape size can be 0 over triples other than
+    # the mining ones, where ANSI division raises; NULL, like the
+    # driver-local path
     return out.withColumn(
-        "cwa_confidence", F.col("support") / F.col("body_size")
+        "cwa_confidence", F.try_divide("support", "body_size")
     ).withColumn(
-        "pca_confidence", F.col("support") / F.col("pca_body_size")
+        "pca_confidence", F.try_divide("support", "pca_body_size")
     )
 
 

@@ -1,11 +1,12 @@
-"""Gate-boundary parity: the driver-local (pandas) constants path must be
+"""Gate-boundary parity: the driver-local (pandas) path must be
 row-identical to the distributed Spark path on the same input.
 
 The local path (mining/local_constants.py) is also pinned by the golden /
 refexec suites (which now run through it at their small inputs); this test
-is the direct cross-path check: mine_constants and confidences_constants
-executed BOTH ways — local_threshold=0 forces distributed — on one KG,
-for both specs and both injectivity modes.
+is the direct cross-path check: mine_constants and confidences_constants,
+and the var-only amie.mine and measures.confidences, executed BOTH ways —
+local_threshold=0 forces distributed — on one KG, for both specs and both
+injectivity modes.
 """
 
 from __future__ import annotations
@@ -15,11 +16,14 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from rdfrules_spark.dictionary import encode_triples
+from rdfrules_spark.mining import amie as amie_mod
 from rdfrules_spark.mining import constants as constants_mod
 from rdfrules_spark.mining import measures_constants as measures_constants_mod
-from rdfrules_spark.mining.amie import MiningParams
+from rdfrules_spark.mining.amie import MiningParams, mine
 from rdfrules_spark.mining.constants import mine_constants
 from rdfrules_spark.mining.local_constants import collect_local
+from rdfrules_spark.mining.measures import confidences
 from rdfrules_spark.mining.measures_constants import (
     confidences_constants,
     qpca_constants,
@@ -140,8 +144,8 @@ def test_confidences_null_sizes_local_equals_distributed(spark, kg, inj):
     """NULL versus zero sizes, both paths: over the KG with p1 cut down to
     the one triple (e1, p1, e6), s5 atoms on p1 match no entity, and the
     s4 rule ?a|p1|?b <- ?b|p3|?a, C=e29|p0|?a keeps pairs, none with
-    ?a = e1 inside the PCA restriction. Only the sizes are compared: an
-    injective s5 body of 0 makes the distributed division raise (ANSI)."""
+    ?a = e1 inside the PCA restriction. A missing or zero size gives a
+    NULL confidence on both paths (ANSI division by zero would raise)."""
     rules = mine_constants(
         kg,
         MiningParams(min_head_size=5, min_support=2,
@@ -153,19 +157,19 @@ def test_confidences_null_sizes_local_equals_distributed(spark, kg, inj):
 
     def sizes(df):
         return {
-            r["rid"]: (r["shape"], r["body_size"], r["pca_body_size"])
-            for r in df.select(
-                "rid", "shape", "body_size", "pca_body_size"
-            ).collect()
+            r["rid"]: (r["shape"], r["body_size"], r["pca_body_size"],
+                       r["cwa_confidence"], r["pca_confidence"])
+            for r in df.collect()
         }
 
     loc = sizes(confidences_constants(rules, cut, injective=inj))
     dist = sizes(
         confidences_constants(rules, cut, injective=inj, local_threshold=0)
     )
-    assert any(s == "s4" and b and pca is None
-               for s, b, pca in loc.values())
-    assert any(s == "s5" and b is None for s, b, _ in loc.values())
+    assert any(s == "s4" and b and pca is None and pc is None
+               for s, b, pca, _, pc in loc.values())
+    assert any(s == "s5" and b is None and c is None
+               for s, b, _, c, _ in loc.values())
     assert set(loc) == set(dist)
     diffs = {k: (loc[k], dist[k]) for k in loc if loc[k] != dist[k]}
     assert not diffs, f"{len(diffs)} mismatches, e.g. {list(diffs.items())[:3]}"
@@ -292,3 +296,127 @@ def test_distributed_measures_keep_the_triples_cached(spark, kg):
     assert qpca_constants(rules, kg).count() == 50
     assert kg.storageLevel.useMemory
     rules.unpersist()
+
+
+# ------------------------------------------------------------- var-only
+
+
+def _rows(df):
+    """Column types and rows, in a fixed order."""
+    return df.dtypes, sorted(map(tuple, df.collect()), key=repr)
+
+
+#: (mining settings, confidence settings, long-coded triples)
+VAR_CASES = {
+    "l2": (dict(max_rule_length=2), {}, False),
+    "l3": ({}, {}, False),
+    "l3-injective": (dict(injective=True), dict(injective=True), False),
+    "l2-injective-long": (dict(max_rule_length=2, injective=True),
+                          dict(injective=True), True),
+    "l3-long": ({}, {}, True),
+    "no-dup-only": (dict(with_duplicate_predicates=False,
+                         only_predicates=["p0", "p1", "p3"]), {}, False),
+    "without-top-k": (dict(without_predicates=["p2"], top_k=7), {}, False),
+    "min-confidence": ({}, dict(min_confidence=0.1), False),
+}
+
+
+@pytest.fixture(scope="module")
+def kg_long(kg):
+    """The KG dictionary-encoded: s, p, o as 64-bit term hashes."""
+    df = encode_triples(kg).select("s", "p", "o").cache()
+    yield df
+    df.unpersist()
+
+
+@pytest.mark.parametrize("case", list(VAR_CASES))
+def test_var_only_local_equals_distributed(spark, kg, kg_long, case):
+    """amie.mine and measures.confidences through the gate give the rows
+    and column types of the staged plans they skip."""
+    mining, scoring, long_coded = VAR_CASES[case]
+    t = kg_long if long_coded else kg
+    params = MiningParams(min_head_size=5, min_support=2,
+                          min_head_coverage=0.05, **mining)
+    loc = _rows(mine(t, params))
+    dist_rules = mine(t, params, local_threshold=0).cache()
+    assert loc[1], "empty ruleset would make the test vacuous"
+    assert loc == _rows(dist_rules)
+    loc = _rows(confidences(dist_rules, t, **scoring))
+    assert loc[1]
+    assert loc == _rows(
+        confidences(dist_rules, t, local_threshold=0, **scoring)
+    )
+    dist_rules.unpersist()
+
+
+@pytest.mark.parametrize("setting", [
+    dict(timeout_s=600.0),
+    dict(head_sample_fraction=0.5),
+    dict(local_timeout_me=0.3),
+])
+def test_staged_only_settings_skip_the_gate(spark, kg, monkeypatch, setting):
+    """Settings the constants tier does not honour keep amie.mine on the
+    staged plan, without a gate probe."""
+    calls = _spy(monkeypatch, amie_mod, "collect_local")
+    base = dict(min_head_size=5, min_support=2, min_head_coverage=0.05)
+    mine(kg, MiningParams(**base))
+    assert len(calls) == 1
+    assert mine(kg, MiningParams(**base, **setting)).count() > 0
+    assert len(calls) == 1
+
+
+@pytest.mark.parametrize("inj", [False, True])
+def test_reflexive_only_body_has_null_size(spark, kg, inj):
+    """With p2 cut down to the reflexive (e1, p2, e1), an injective l2 body
+    on p2 binds nothing: its body_size is NULL on both paths (the
+    distributed plan's inner join onto the predicate sizes finds no p2
+    row), for both confidence entry points."""
+    params = MiningParams(min_head_size=5, min_support=2,
+                          min_head_coverage=0.05, injective=inj)
+    cut = kg.where(F.col("p") != "p2").unionByName(spark.createDataFrame(
+        [("e1", "p2", "e1")], "s string, p string, o string"
+    ))
+    crules = mine_constants(kg, params, constants="nowhere").cache()
+    loc = _conf_rows(confidences_constants(crules, cut, injective=inj))
+    dist = _conf_rows(
+        confidences_constants(crules, cut, injective=inj, local_threshold=0)
+    )
+    nulls = [rid for rid, (b, *_) in loc.items()
+             if b is None and ";" not in rid and "|p2|" in rid.split("<-")[1]]
+    assert bool(nulls) == inj
+    assert set(loc) == set(dist)
+    diffs = {k: (loc[k], dist[k]) for k in loc if loc[k] != dist[k]}
+    assert not diffs, f"{len(diffs)} mismatches, e.g. {list(diffs.items())[:3]}"
+    crules.unpersist()
+    vrules = mine(kg, params).cache()
+    loc = _rows(confidences(vrules, cut, injective=inj))
+    assert loc == _rows(
+        confidences(vrules, cut, injective=inj, local_threshold=0)
+    )
+    vrules.unpersist()
+
+
+def test_head_coverage_boundary_local_equals_distributed(spark):
+    """A rule at exactly minHC: support 7 over head size 100 at minHC 0.07,
+    where support / head_size >= minHC holds but 100 * 0.07 is
+    7.000000000000001. The gate keeps amie.mine's law."""
+    rows = [(f"a{i}", "h", f"b{i}") for i in range(100)]
+    rows += [(f"a{i}", "q", f"b{i}") for i in range(7)]
+    rows += [(f"c{i}", "q", f"d{i}") for i in range(93)]
+    t = spark.createDataFrame(rows, "s string, p string, o string")
+    params = MiningParams(min_head_size=100, min_support=1,
+                          min_head_coverage=0.07, max_rule_length=2)
+    loc = _rows(mine(t, params))
+    assert loc == _rows(mine(t, params, local_threshold=0))
+    assert [(r[0], r[2], r[7]) for r in loc[1]] == [("h", "q", 7),
+                                                    ("q", "h", 7)]
+
+
+def test_var_only_empty_ruleset(spark, kg):
+    """No head reaches minHeadSize: both paths give no rule, same types."""
+    params = MiningParams(min_head_size=10_000)
+    loc = mine(kg, params)
+    assert _rows(loc) == _rows(mine(kg, params, local_threshold=0))
+    assert _rows(loc)[1] == []
+    assert _rows(confidences(loc, kg)) == _rows(
+        confidences(loc, kg, local_threshold=0))

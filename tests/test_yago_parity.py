@@ -8,7 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from rdfrules_spark.mining.amie import MiningParams, mine
-from rdfrules_spark.mining.measures import cwa_confidence
+from rdfrules_spark.mining.local_constants import LOCAL_TRIPLES_MAX
+from rdfrules_spark.mining.measures import confidences
 
 from conftest import reference_file, yago_tsv
 
@@ -28,6 +29,11 @@ def yago(spark):
 def test_default_mining_124(yago):
     # AmieSpec.scala:45-50 / RulesetSpec.scala:32-44
     assert mine(yago, MiningParams(**BASE)).count() == 124
+
+
+def test_default_mining_124_distributed(yago):
+    # the same golden through the staged plan the driver-local gate skips
+    assert mine(yago, MiningParams(**BASE), local_threshold=0).count() == 124
 
 
 def test_without_duplicate_predicates_67(yago):
@@ -106,17 +112,20 @@ def test_topk_10(yago):
 
 
 def test_cwa_confidence_7(yago):
-    # AmieSpec.scala:259-274 ("count confidence": CWA >= 0.2 => 7)
-    rules = mine(yago, MiningParams(**BASE, with_duplicate_predicates=False))
-    cwa = cwa_confidence(rules, yago)
-    assert cwa.where("cwa_confidence >= 0.2").count() == 7
+    # AmieSpec.scala:259-274 ("count confidence": CWA >= 0.2 => 7), through
+    # the driver-local gate and through the staged distributed plan
+    for thr in (LOCAL_TRIPLES_MAX, 0):
+        rules = mine(
+            yago, MiningParams(**BASE, with_duplicate_predicates=False),
+            local_threshold=thr,
+        )
+        cwa = confidences(rules, yago, pca=False, local_threshold=thr)
+        assert cwa.where("cwa_confidence >= 0.2").count() == 7, thr
 
 
 def test_min_confidence_pruning_exact_parity(yago):
     # capped-counting analog (measures.confidences min_confidence) must give
     # the SAME final ruleset as exact counting + post-filter
-    from rdfrules_spark.mining.measures import confidences
-
     rules = mine(yago, MiningParams(**BASE, with_duplicate_predicates=False))
     exact = confidences(rules, yago, pca=False)
     pruned = confidences(rules, yago, pca=False, min_confidence=0.2)
