@@ -48,14 +48,14 @@ that miner does not honour (see ``_local_ok``).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rdfrules_spark.mining.local_constants import (
     LOCAL_TRIPLES_MAX,
-    collect_local,
+    collect_triples,
     mine_constants_local,
 )
 
@@ -446,19 +446,11 @@ def _mine_local(triples: DataFrame, tpdf, params: MiningParams) -> DataFrame:
     """The driver-local var-only miner: ``mine_constants_local`` without
     constants, whose l2/l3v2/l3v3 laws are this module's, emitting this
     module's rule rows."""
-    # the local miner's minHC law is support >= head_size * minHC; mine
-    # with a slightly lower minHC and keep this module's support /
-    # head_size >= minHC (the two disagree at float boundaries, e.g.
-    # minHC 0.07 with head size 100 and support 7)
-    mhc = params.min_head_coverage
-    pdf = mine_constants_local(
-        tpdf.drop_duplicates(),
-        replace(params, min_head_coverage=mhc * (1 - 1e-9)),
-        "nowhere", var_keys=True,
-    )
+    pdf = mine_constants_local(tpdf.drop_duplicates(), params, "nowhere",
+                               var_keys=True)
     term = triples.schema["p"].dataType.simpleString()
     return triples.sparkSession.createDataFrame(
-        pdf[pdf["head_coverage"] >= mhc],
+        pdf,
         schema=f"p {term}, shape string, q {term}, d1 string, r {term}, "
         "d2 string, head_size long, support long, head_coverage double",
     )
@@ -476,10 +468,11 @@ def mine(
     `triples` must be distinct (s,p,o); callers dedup (the triple store is
     distinct by construction).
 
-    Driver-local gate (``local_constants.collect_local``, the one the
-    constants tier uses): at most ``local_threshold`` triples (0 forces
-    the staged plan) of one term type, with settings the constants tier
-    honours (``_local_ok``), mine on the driver, the same laws in DuckDB;
+    Driver-local gate (``local_constants.collect_triples``, shared with
+    measures.confidences; the constants tier uses the same bounds): at
+    most ``local_threshold`` triples (0 forces the staged plan) of one
+    term type, with settings the constants tier honours (``_local_ok``),
+    mine on the driver, the same laws in DuckDB;
     ``top_k`` then filters the result. Otherwise the staged plan below
     runs."""
     params = params or MiningParams()
@@ -490,10 +483,8 @@ def mine(
         triples = triples.where(F.col("p").isin(params.only_predicates))
     if params.without_predicates is not None:
         triples = triples.where(~F.col("p").isin(params.without_predicates))
-    spo = triples.select("s", "p", "o")
-    # one term type, so that the local codes order like the staged columns
-    local = _local_ok(params) and len({t for _, t in spo.dtypes}) == 1
-    tpdf = collect_local(spo, local_threshold) if local else None
+    tpdf = (collect_triples(triples, local_threshold)
+            if _local_ok(params) else None)
     if tpdf is not None:
         return _top_k(_mine_local(triples, tpdf, params), params.top_k)
     heads = head_sizes(triples, params)

@@ -27,11 +27,11 @@ Execution = the reference's level-synchronous BFS re-expressed as staged
 aggregations: every length-3 shape is computed FROM the length-2 survivor
 set of its prefix rule (semi-join on the survivor keys). This is exact, not
 a heuristic: support is monotone non-increasing under body extension and
-the emission threshold max(minSupport, minHC*headSize) depends only on the
-head, so a surviving length-3 rule implies its length-2 prefix survived —
-precisely the reason AMIE's BFS-with-pruning enumerates the complete rule
-space (Amie.scala:184-231). The semi-joins are what keep the instantiated
-shapes from exploding on hub entities.
+the emission threshold (support >= minSupport, support / headSize >=
+minHC) depends only on the head, so a surviving length-3 rule implies its
+length-2 prefix survived — precisely the reason AMIE's BFS-with-pruning
+enumerates the complete rule space (Amie.scala:184-231). The semi-joins
+are what keep the instantiated shapes from exploding on hub entities.
 
 Closed-rule shapes over head types H0=(?a p ?b), HS=(C p ?b), HO=(?a p C)
 (maxRuleLength 3, dir d/e marks which side the var is on):
@@ -176,8 +176,8 @@ def _finish(agg, heads, params: MiningParams, head_expr, atoms_expr, shape):
         agg.join(F.broadcast(heads), "p")
         .where(
             (F.col("support") >= params.min_support)
-            & (F.col("support")
-               >= F.col("head_size") * params.min_head_coverage)
+            & (F.col("support") / F.col("head_size")
+               >= params.min_head_coverage)
         )
         .select(
             head_expr.alias("head"),
@@ -340,8 +340,8 @@ def mine_constants(
         l2s = (
             l2.join(F.broadcast(heads), "p")
             .where((F.col("support") >= params.min_support)
-                   & (F.col("support")
-                      >= F.col("head_size") * params.min_head_coverage))
+                   & (F.col("support") / F.col("head_size")
+                      >= params.min_head_coverage))
             .select("p", "q", "d")
         )
         ms = m.join(F.broadcast(l2s), ["p", "q", "d"], "left_semi")
@@ -376,8 +376,8 @@ def mine_constants(
             F.countDistinct("a", "bb").alias("support")
         ).join(F.broadcast(heads), "p").where(
             (F.col("support") >= params.min_support)
-            & (F.col("support")
-               >= F.col("head_size") * params.min_head_coverage)
+            & (F.col("support") / F.col("head_size")
+               >= params.min_head_coverage)
         ).select("p", "q", "d1")
         b2 = b.select(F.col("x").alias("bb"), F.col("y").alias("c"),
                       F.col("q").alias("r"), F.col("d").alias("d2"),
@@ -462,8 +462,8 @@ def mine_constants(
                 F.countDistinct("a", "bb").alias("support")
             ).join(F.broadcast(heads), "p").where(
                 (F.col("support") >= params.min_support)
-                & (F.col("support")
-                   >= F.col("head_size") * params.min_head_coverage)
+                & (F.col("support") / F.col("head_size")
+                   >= params.min_head_coverage)
             ).select("p", "qa", "csta", "ea")
             s5 = (
                 ia.join(ia_s, ["p", "qa", "csta", "ea"], "left_semi")
@@ -599,8 +599,8 @@ def mine_constants(
             if params.max_rule_length >= 3:
                 s6s = s6.join(F.broadcast(heads), "p").where(
                     (F.col("support") >= params.min_support)
-                    & (F.col("support")
-                       >= F.col("head_size") * params.min_head_coverage)
+                    & (F.col("support") / F.col("head_size")
+                       >= params.min_head_coverage)
                 ).select("p", "A", "q2", "cst", "e")
 
                 # dangling prefix (head) <- VV(f, c) — gate for S7/S8
@@ -614,8 +614,8 @@ def mine_constants(
                     F.countDistinct("f").alias("support")
                 ).join(F.broadcast(heads), "p").where(
                     (F.col("support") >= params.min_support)
-                    & (F.col("support")
-                       >= F.col("head_size") * params.min_head_coverage)
+                    & (F.col("support") / F.col("head_size")
+                       >= params.min_head_coverage)
                 ).select("p", "A", "q", "d")
                 ihb_s = ihb.join(d7s, ["p", "A", "q", "d"], "left_semi")
 

@@ -80,7 +80,16 @@ from pyspark.sql import DataFrame
 
 from rdfrules_spark.mining.inst_sql import COUNTS, SQL_SHAPES
 
-#: input triples at or below which mining and confidences run on the driver
+#: input triples at or below which mining and confidences run on the driver.
+#: The bound is set by driver memory, not time: on bench.py's synth_kg
+#: (4 vCPU, var-only mine + confidences(min_confidence=0.1)) the local
+#: path was faster at every size measured (49k: 8.9 s vs 16.3 s staged;
+#: 196k: 5.3 s vs 18.2 s; 391k: 10.5 s vs 26.1 s), while its Python
+#: peak RSS grew with the input (1.9 GB at 196k, 3.8 GB at 391k, over
+#: 5 GB at 979k) against about 0.14 GB on the staged path, whose JVM
+#: peaked at 2.9-3.4 GB. At 200k the local path's Python and JVM peaks
+#: together stay at or below the staged path's. Above the bound each
+#: gated call pays its probe (0.8-0.9 s on 245k and 979k cached triples).
 LOCAL_TRIPLES_MAX = 200_000
 #: rules at or below which confidences_constants collects the ruleset to
 #: the driver. The largest ruleset any caller mines locally today is
@@ -111,6 +120,16 @@ def collect_local(df: DataFrame, bound: int) -> pd.DataFrame | None:
         return None
     pdf = df.coalesce(1).limit(bound + 1).toPandas()
     return pdf if len(pdf) <= bound else None
+
+
+def collect_triples(triples: DataFrame, bound: int) -> pd.DataFrame | None:
+    """The var-only gate: ``triples``' (s, p, o) through ``collect_local``,
+    terms in their own type, or None when s, p and o differ in type (the
+    local codes would then not order like the staged columns)."""
+    spo = triples.select("s", "p", "o")
+    if len({t for _, t in spo.dtypes}) != 1:
+        return None
+    return collect_local(spo, bound)
 
 
 # --------------------------------------------------------------------------
@@ -455,7 +474,7 @@ def mine_constants_local(
     con.register("h0", h0)
     con.register("heads", heads)
     MS, MHC = params.min_support, params.min_head_coverage
-    TH = f"sup >= {MS} AND sup >= head_size * {MHC}"
+    TH = f"sup >= {MS} AND sup / head_size >= CAST({float(MHC)!r} AS DOUBLE)"
 
     out_parts: list[pd.DataFrame] = []
 
@@ -471,7 +490,7 @@ def mine_constants_local(
         hs = hs_by_code[agg["p"].to_numpy()]
         keep = (
             (agg["support"].to_numpy() >= params.min_support)
-            & (agg["support"].to_numpy() >= hs * params.min_head_coverage)
+            & (agg["support"].to_numpy() / hs >= params.min_head_coverage)
             & (hs > 0)
         )
         agg = agg[keep].reset_index(drop=True)
@@ -1296,8 +1315,8 @@ def confidences_local(
     pca: bool = True, min_confidence: float = 0.0, injective: bool = False,
 ) -> pd.DataFrame:
     """Pandas replica of measures.confidences: the l2 / l3v2 / l3v3 rows
-    of var-schema rules (mining/amie.py; p/q/r as the same strings as the
-    triples' terms) with body_size, pca_body_size, cwa_confidence and
+    of var-schema rules (mining/amie.py; p/q/r of the triples' term type;
+    an l2 row's r is not read) with body_size, pca_body_size, cwa_confidence and
     pca_confidence appended in that order, each only when its measure is
     asked for. The sizes are exact, so ``min_confidence`` filters
     cwa_confidence directly."""

@@ -20,7 +20,7 @@ enumeration" idea to any length:
      direction flips) keeps exactly one representative per rule.
   3. Monotone prefix pruning = the BFS thresholds: after each slot join the
      partial rule's support (countDistinct head pair per label prefix) must
-     already reach max(minSupport, minHC*headSize) — support is
+     already pass minSupport and support / headSize >= minHC — support is
      anti-monotone in the body, so this drops nothing from the final answer
      while bounding the intermediate join exactly like the reference's
      per-refinement threshold (RuleRefinement.scala:144-169).
@@ -289,12 +289,13 @@ def mine_shape(
     order = _slot_order(pairs)
     cur = h
     bound = set(HEAD_VARS)
-    thresh = (
-        F.greatest(
-            F.lit(params.min_support).cast("double"),
-            F.lit(params.min_head_coverage) * F.col("head_size"),
+    # support >= minSupport and support / head_size >= minHC, the law the
+    # finished rule passes below
+    def passes(sup):
+        return (sup >= params.min_support) & (
+            sup / F.col("head_size") >= params.min_head_coverage
         )
-    )
+
     joined_slots: list[int] = []
     for step, i in enumerate(order):
         u, v = pairs[i]
@@ -335,7 +336,7 @@ def mine_shape(
             surv = (
                 cur.groupBy("p", "head_size", *label_cols)
                 .agg(F.countDistinct("a", "b").alias("_sup"))
-                .where(F.col("_sup") >= thresh)
+                .where(passes(F.col("_sup")))
                 .select("p", *label_cols)
                 .localCheckpoint(eager=True)
             )

@@ -357,7 +357,7 @@ def test_var_only_local_equals_distributed(spark, kg, kg_long, case):
 def test_staged_only_settings_skip_the_gate(spark, kg, monkeypatch, setting):
     """Settings the constants tier does not honour keep amie.mine on the
     staged plan, without a gate probe."""
-    calls = _spy(monkeypatch, amie_mod, "collect_local")
+    calls = _spy(monkeypatch, amie_mod, "collect_triples")
     base = dict(min_head_size=5, min_support=2, min_head_coverage=0.05)
     mine(kg, MiningParams(**base))
     assert len(calls) == 1
@@ -399,7 +399,7 @@ def test_reflexive_only_body_has_null_size(spark, kg, inj):
 def test_head_coverage_boundary_local_equals_distributed(spark):
     """A rule at exactly minHC: support 7 over head size 100 at minHC 0.07,
     where support / head_size >= minHC holds but 100 * 0.07 is
-    7.000000000000001. The gate keeps amie.mine's law."""
+    7.000000000000001. Both tiers keep it, on both paths."""
     rows = [(f"a{i}", "h", f"b{i}") for i in range(100)]
     rows += [(f"a{i}", "q", f"b{i}") for i in range(7)]
     rows += [(f"c{i}", "q", f"d{i}") for i in range(93)]
@@ -410,6 +410,11 @@ def test_head_coverage_boundary_local_equals_distributed(spark):
     assert loc == _rows(mine(t, params, local_threshold=0))
     assert [(r[0], r[2], r[7]) for r in loc[1]] == [("h", "q", 7),
                                                     ("q", "h", 7)]
+    loc = _rows(mine_constants(t, params, constants="nowhere"))
+    assert loc == _rows(mine_constants(t, params, constants="nowhere",
+                                       local_threshold=0))
+    assert [(r[0], list(r[2]), r[4]) for r in loc[1]] == [
+        ("?a|h|?b", ["?a|q|?b"], 7), ("?a|q|?b", ["?a|h|?b"], 7)]
 
 
 def test_var_only_empty_ruleset(spark, kg):

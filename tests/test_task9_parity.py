@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from rdfrules_spark.corpus import synth_kg
 from rdfrules_spark.mining.amie import MiningParams, mine
+from rdfrules_spark.mining.local_constants import LOCAL_TRIPLES_MAX
 from rdfrules_spark.mining.measures import confidences
 
 DUMP = os.path.join(
@@ -85,32 +86,39 @@ def _atoms(r) -> list[str]:
 
 
 def test_task9_pipeline_matches_executed_reference(spark):
-    t = synth_kg(spark, 50_000).distinct()
+    """Through both confidence paths: the driver-local gate (exact sizes,
+    then the min_confidence filter) and the staged plan's l3v3 lower-bound
+    pruning."""
+    t = synth_kg(spark, 50_000).distinct().cache()
     params = MiningParams(
         min_head_size=100, min_support=1, min_head_coverage=0.01,
         injective=True, reflexive_head_sizes=True,
     )
-    out = confidences(
-        mine(t, params), t, cwa=True, pca=True, min_confidence=0.1,
-        injective=True,
-    )
-    got = {}
-    for r in out.where(F.col("pca_confidence") >= 0.1).collect():
-        key = (f"(?a <{r['p']}> ?b)", " ^ ".join(_atoms(r)))
-        got[key] = (r["support"], r["head_size"],
-                    r["cwa_confidence"], r["pca_confidence"])
+    rules = mine(t, params).cache()
     dump = load_dump()
-    only_dump = set(dump) - set(got)
-    only_got = set(got) - set(dump)
-    assert not only_dump and not only_got, (
-        f"{len(only_dump)} rules only in the reference dump, "
-        f"{len(only_got)} only in ours; e.g. "
-        f"{sorted(only_dump)[:2]} / {sorted(only_got)[:2]}"
-    )
-    mism = [
-        (k, got[k], dump[k]) for k in dump
-        if got[k][:2] != dump[k][:2]
-        or abs(got[k][2] - dump[k][2]) > 1e-9
-        or abs(got[k][3] - dump[k][3]) > 1e-9
-    ]
-    assert not mism, f"value mismatches: {mism[:3]}"
+    for thr in (LOCAL_TRIPLES_MAX, 0):
+        out = confidences(
+            rules, t, cwa=True, pca=True, min_confidence=0.1,
+            injective=True, local_threshold=thr,
+        )
+        got = {}
+        for r in out.where(F.col("pca_confidence") >= 0.1).collect():
+            key = (f"(?a <{r['p']}> ?b)", " ^ ".join(_atoms(r)))
+            got[key] = (r["support"], r["head_size"],
+                        r["cwa_confidence"], r["pca_confidence"])
+        only_dump = set(dump) - set(got)
+        only_got = set(got) - set(dump)
+        assert not only_dump and not only_got, (
+            f"local_threshold={thr}: {len(only_dump)} rules only in the "
+            f"reference dump, {len(only_got)} only in ours; e.g. "
+            f"{sorted(only_dump)[:2]} / {sorted(only_got)[:2]}"
+        )
+        mism = [
+            (k, got[k], dump[k]) for k in dump
+            if got[k][:2] != dump[k][:2]
+            or abs(got[k][2] - dump[k][2]) > 1e-9
+            or abs(got[k][3] - dump[k][3]) > 1e-9
+        ]
+        assert not mism, f"local_threshold={thr}: {mism[:3]}"
+    rules.unpersist()
+    t.unpersist()

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from rdfrules_spark.mining.amie import MiningParams, mine
 from rdfrules_spark.mining.local_constants import LOCAL_TRIPLES_MAX
-from rdfrules_spark.mining.measures import confidences
+from rdfrules_spark.mining.measures import COMBO, _l3v3_lower_bounds, confidences
 
 from conftest import reference_file, yago_tsv
 
@@ -124,11 +124,13 @@ def test_cwa_confidence_7(yago):
 
 
 def test_min_confidence_pruning_exact_parity(yago):
-    # capped-counting analog (measures.confidences min_confidence) must give
-    # the SAME final ruleset as exact counting + post-filter
+    # capped-counting analog (the staged measures.confidences min_confidence
+    # lower-bound pruning) must give the SAME final ruleset as exact
+    # counting (here through the driver-local gate) + post-filter
     rules = mine(yago, MiningParams(**BASE, with_duplicate_predicates=False))
     exact = confidences(rules, yago, pca=False)
-    pruned = confidences(rules, yago, pca=False, min_confidence=0.2)
+    pruned = confidences(rules, yago, pca=False, min_confidence=0.2,
+                         local_threshold=0)
     exact_set = {
         (r.p, r.shape, r.q, r.d1, r.r, r.d2, r.body_size)
         for r in exact.where("cwa_confidence >= 0.2").collect()
@@ -138,6 +140,12 @@ def test_min_confidence_pruning_exact_parity(yago):
         for r in pruned.collect()
     }
     assert pruned_set == exact_set and len(pruned_set) == 7
+    # the lower bounds do prune here: 12 of the 30 l3v3 rules
+    l3 = rules.where("shape = 'l3v3'")
+    lbs = _l3v3_lower_bounds(yago, l3.select(*COMBO).distinct())
+    assert l3.join(lbs, COMBO).where(
+        F.col("lb_body_size") > F.col("support") / 0.2
+    ).count() == 12
 
 
 def test_graphspec_triple_ops_goldens(spark):
