@@ -3,8 +3,8 @@
 Reference semantics (cites):
   * instantiated heads (C p ?b) / (?a p C) keep headSize = |p| and are
     thresholded by their own triple count — HeadsFetcher.scala:24-92 (the
-    head-candidate filter is subsumed by the final support HAVING, since
-    rule support <= instantiated-head size);
+    head-candidate filter: rule support <= instantiated-head size, so a
+    head failing the support/minHC law is pruned before the joins);
   * body atoms carry at most one constant — refinement instantiates only
     the dangling variable of the fresh atom (RuleRefinement.scala);
   * ConstantsAtPosition constrains WHERE constants may appear: Subject /
@@ -171,14 +171,19 @@ def _ca_str(u: str, q2, cst, e):
     ).otherwise(F.concat(F.lit("C="), cst, F.lit("|"), q2, F.lit("|" + u)))
 
 
+def _passing(agg, heads, params: MiningParams):
+    """The groups of ``agg`` (p, keys..., support) that pass the one
+    support/minHC law, with their head_size."""
+    return agg.join(F.broadcast(heads), "p").where(
+        (F.col("support") >= params.min_support)
+        & (F.col("support") / F.col("head_size")
+           >= params.min_head_coverage)
+    )
+
+
 def _finish(agg, heads, params: MiningParams, head_expr, atoms_expr, shape):
     out = (
-        agg.join(F.broadcast(heads), "p")
-        .where(
-            (F.col("support") >= params.min_support)
-            & (F.col("support") / F.col("head_size")
-               >= params.min_head_coverage)
-        )
+        _passing(agg, heads, params)
         .select(
             head_expr.alias("head"),
             "p",
@@ -337,13 +342,7 @@ def mine_constants(
 
     if params.max_rule_length >= 3:
         # l2 survivors gate every H0 length-3 shape built on a VV atom
-        l2s = (
-            l2.join(F.broadcast(heads), "p")
-            .where((F.col("support") >= params.min_support)
-                   & (F.col("support") / F.col("head_size")
-                      >= params.min_head_coverage))
-            .select("p", "q", "d")
-        )
+        l2s = _passing(l2, heads, params).select("p", "q", "d")
         ms = m.join(F.broadcast(l2s), ["p", "q", "d"], "left_semi")
 
         # l3v2: {VV, VV}
@@ -372,13 +371,9 @@ def mine_constants(
                       "q", F.col("d").alias("d1"),
                       F.col("tid").alias("tid1"))
         dang_a = h0.join(b1, "a").where(_ndt(F.col("tid1") != F.col("htid")))
-        da_s = dang_a.groupBy("p", "q", "d1").agg(
+        da_s = _passing(dang_a.groupBy("p", "q", "d1").agg(
             F.countDistinct("a", "bb").alias("support")
-        ).join(F.broadcast(heads), "p").where(
-            (F.col("support") >= params.min_support)
-            & (F.col("support") / F.col("head_size")
-               >= params.min_head_coverage)
-        ).select("p", "q", "d1")
+        ), heads, params).select("p", "q", "d1")
         b2 = b.select(F.col("x").alias("bb"), F.col("y").alias("c"),
                       F.col("q").alias("r"), F.col("d").alias("d2"),
                       F.col("tid").alias("tid2"))
@@ -458,13 +453,9 @@ def mine_constants(
                 F.col("q2").alias("qa"), F.col("cst").alias("csta"),
                 F.col("e").alias("ea"), F.col("ctid").alias("ctida"),
             )
-            ia_s = ia.groupBy("p", "qa", "csta", "ea").agg(
+            ia_s = _passing(ia.groupBy("p", "qa", "csta", "ea").agg(
                 F.countDistinct("a", "bb").alias("support")
-            ).join(F.broadcast(heads), "p").where(
-                (F.col("support") >= params.min_support)
-                & (F.col("support") / F.col("head_size")
-                   >= params.min_head_coverage)
-            ).select("p", "qa", "csta", "ea")
+            ), heads, params).select("p", "qa", "csta", "ea")
             s5 = (
                 ia.join(ia_s, ["p", "qa", "csta", "ea"], "left_semi")
                 .join(ca_alone, F.col("bb") == ca_alone["x"])
@@ -571,6 +562,14 @@ def mine_constants(
                 ih = ih.join(F.broadcast(side), "p").where(
                     F.col("cpos") == fixed_pos
                 ).drop("cpos")
+            # head prune: every S6-S9 support counts distinct f of one
+            # instantiated head (p, A), so a head whose triple count fails
+            # the law has no rule (local_constants.mine_constants_local).
+            # No forced broadcast: at minHC 0 every head passes.
+            ih = ih.join(_passing(
+                ih.groupBy("p", "A").agg(F.count(F.lit(1)).alias("support")),
+                heads, params,
+            ).select("p", "A"), ["p", "A"], "left_semi")
             head_i = (
                 F.concat(F.lit("C="), F.col("A"), F.lit("|"), F.col("p"),
                          F.lit("|?b"))
@@ -597,11 +596,8 @@ def mine_constants(
             ))
 
             if params.max_rule_length >= 3:
-                s6s = s6.join(F.broadcast(heads), "p").where(
-                    (F.col("support") >= params.min_support)
-                    & (F.col("support") / F.col("head_size")
-                       >= params.min_head_coverage)
-                ).select("p", "A", "q2", "cst", "e")
+                s6s = _passing(s6, heads, params).select(
+                    "p", "A", "q2", "cst", "e")
 
                 # dangling prefix (head) <- VV(f, c) — gate for S7/S8
                 ihb = ih.join(b, ih["f"] == b["x"]).where(
@@ -610,13 +606,9 @@ def mine_constants(
                     "p", "A", "f", F.col("y").alias("c"), "q", "d",
                     "tid", "htid",
                 )
-                d7s = ihb.groupBy("p", "A", "q", "d").agg(
+                d7s = _passing(ihb.groupBy("p", "A", "q", "d").agg(
                     F.countDistinct("f").alias("support")
-                ).join(F.broadcast(heads), "p").where(
-                    (F.col("support") >= params.min_support)
-                    & (F.col("support") / F.col("head_size")
-                       >= params.min_head_coverage)
-                ).select("p", "A", "q", "d")
+                ), heads, params).select("p", "A", "q", "d")
                 ihb_s = ihb.join(d7s, ["p", "A", "q", "d"], "left_semi")
 
                 # S7: {VV(f,c), VV(f,c)} distinct pair

@@ -425,6 +425,14 @@ def mine_constants_local(
     aggregation (same survivor-set gating, same _ndt/_inj laws — see
     mining/constants.py for the reference cites).
 
+    One law keeps a rule: ``support >= minSupport`` and
+    ``support / head_size >= minHC``. DuckDB applies it to every shape
+    before its rows are fetched, and to every gate. It also prunes the
+    instantiated heads before the S6-S9 joins: an S6-S9 support counts
+    distinct free-variable values of one instantiated head (p, C), so it
+    is at most that head's triple count, and a head whose triple count
+    fails the law has no rule.
+
     ``var_keys`` (with ``constants="nowhere"``): rows in mining/amie.py's
     schema instead (p, shape, q, d1, r, d2, head_size, support,
     head_coverage), terms of the input's type. The l3v2 pair is already in
@@ -442,7 +450,6 @@ def mine_constants_local(
     hs_by_code = np.zeros(N, dtype=np.int64)
     np.add.at(hs_by_code, enc.pc[htmask], 1)
     valid_head = hs_by_code >= params.min_head_size
-    hs_by_code = np.where(valid_head, hs_by_code, -1)
 
     b = _b_local(enc)
     b["qr"] = rank[b["q"].to_numpy()]  # lexicographic rank for q < r laws
@@ -467,35 +474,26 @@ def mine_constants_local(
         "head_size": hs_by_code[valid_head],
     })
 
-    con = _duck()
-    con.register("b", b)
-    con.register("ca", ca)
-    con.register("ca_alone", ca_alone)
-    con.register("h0", h0)
-    con.register("heads", heads)
     MS, MHC = params.min_support, params.min_head_coverage
-    TH = f"sup >= {MS} AND sup / head_size >= CAST({float(MHC)!r} AS DOUBLE)"
+
+    def passing(agg_sql: str, cols: str = "*") -> str:
+        """The groups of ``agg_sql`` (p, keys..., support) that pass the
+        support/minHC law, as ``cols`` (default: all, with head_size).
+        Every gate and every fetched shape goes through it, so the law
+        is applied once, in DuckDB, before any row reaches pandas."""
+        return (f"SELECT {cols} FROM ({agg_sql}) JOIN heads USING (p) "
+                f"WHERE support >= {MS} AND support / head_size >= "
+                f"CAST({float(MHC)!r} AS DOUBLE)")
 
     out_parts: list[pd.DataFrame] = []
 
     def finish(agg: pd.DataFrame, shape: str, head_str, atoms,
                body_pred_cols: list[str]):
-        """agg: group rows + 'support' (int64), 'p' = head predicate code.
-        Applies the support/minHC thresholds and the duplicate-predicate
-        filter (constants._finish), then builds the canonical strings."""
-        if not len(agg):
-            return
+        """agg: the ``passing`` rows of one shape, 'p' = head predicate
+        code. Applies the duplicate-predicate filter (constants._finish),
+        then builds the canonical strings."""
         agg = agg.reset_index(drop=True)
-        agg["support"] = agg["support"].to_numpy().astype(np.int64)
-        hs = hs_by_code[agg["p"].to_numpy()]
-        keep = (
-            (agg["support"].to_numpy() >= params.min_support)
-            & (agg["support"].to_numpy() / hs >= params.min_head_coverage)
-            & (hs > 0)
-        )
-        agg = agg[keep].reset_index(drop=True)
-        hs = hs[keep]
-        if not params.with_duplicate_predicates and len(agg):
+        if not params.with_duplicate_predicates:
             preds = [agg["p"].to_numpy()] + [
                 agg[c].to_numpy() for c in body_pred_cols
             ]
@@ -504,10 +502,9 @@ def mine_constants_local(
                 for j in range(i + 1, len(preds)):
                     dup |= preds[i] == preds[j]
             agg = agg[~dup].reset_index(drop=True)
-            hs = hs[~dup]
         if not len(agg):
             return
-        sup = agg["support"].to_numpy()
+        sup, hs = agg["support"].to_numpy(), agg["head_size"].to_numpy()
         if var_keys:
             k = agg.rename(columns={"d": "d1"})
             l2 = shape == "l2"
@@ -537,196 +534,196 @@ def mine_constants_local(
     def head0(df):
         return _cat("?a|", enc.terms[df["p"].to_numpy()], "|?b")
 
-    # ---------------- H0 shapes ----------------
-    ndt_m = "AND b.tid <> h0.htid" if ndt else ""
-    con.execute(f"""
-        CREATE TEMP TABLE m AS
-        SELECT h0.p, h0.a, h0.bb, h0.htid, b.q, b.qr, b.d, b.tid
-        FROM h0 JOIN b ON h0.a = b.x AND h0.bb = b.y
-        WHERE (b.q <> h0.p OR b.d <> 0) {ndt_m}""")
-    l2 = con.execute(
-        "SELECT p, q, d, count(*) AS support FROM m GROUP BY ALL"
-    ).df()
-    finish(
-        l2, "l2", head0,
-        lambda df: [_vv_str("?a", "?b", df["q"].to_numpy(),
-                            df["d"].to_numpy(), enc.terms)],
-        ["q"],
-    )
+    with _duck() as con:
+        for name, df in (("b", b), ("ca", ca), ("ca_alone", ca_alone),
+                         ("h0", h0), ("heads", heads)):
+            con.register(name, df)
 
-    if params.max_rule_length >= 3:
-        # survivor gating via materialized key tables (GROUP BY keys are
-        # unique, so the inner join IS a semi-join) — measurably faster
-        # than EXISTS decorrelation at these sizes
+        # ---------------- H0 shapes ----------------
+        ndt_m = "AND b.tid <> h0.htid" if ndt else ""
         con.execute(f"""
-            CREATE TEMP TABLE l2_keys AS
-            SELECT l2.p, l2.q, l2.d FROM (
-              SELECT p, q, d, count(*) AS sup FROM m GROUP BY ALL
-            ) l2 JOIN heads USING (p) WHERE {TH}""")
-        con.execute(
-            "CREATE TEMP TABLE ms AS "
-            "SELECT m.* FROM m JOIN l2_keys USING (p, q, d)")
+            CREATE TEMP TABLE m AS
+            SELECT h0.p, h0.a, h0.bb, h0.htid, b.q, b.qr, b.d, b.tid
+            FROM h0 JOIN b ON h0.a = b.x AND h0.bb = b.y
+            WHERE (b.q <> h0.p OR b.d <> 0) {ndt_m}""")
+        l2 = con.execute(passing(
+            "SELECT p, q, d, count(*) AS support FROM m GROUP BY ALL"
+        )).df()
+        finish(
+            l2, "l2", head0,
+            lambda df: [_vv_str("?a", "?b", df["q"].to_numpy(),
+                                df["d"].to_numpy(), enc.terms)],
+            ["q"],
+        )
 
-        # l3v2: {VV, VV}
-        ndt_p = "AND a1.tid <> a2.tid" if ndt else ""
-        l3v2 = con.execute(f"""
-            SELECT a1.p, a1.q, a1.d, a2.q AS r, a2.d AS d2,
-                   count(*) AS support
-            FROM ms a1 JOIN ms a2
-              ON a1.p = a2.p AND a1.a = a2.a AND a1.bb = a2.bb
-            WHERE (a1.qr < a2.qr OR (a1.q = a2.q AND a1.d < a2.d)) {ndt_p}
-            GROUP BY ALL""").df()
+        if params.max_rule_length >= 3:
+            # survivor gating via key tables (GROUP BY keys are unique, so
+            # the inner join IS a semi-join) — measurably faster than
+            # EXISTS decorrelation at these sizes. The fetched l2 rows are
+            # the l2 survivors.
+            con.register("l2_keys", l2)
+            con.execute(
+                "CREATE TEMP TABLE ms AS "
+                "SELECT m.* FROM m JOIN l2_keys USING (p, q, d)")
 
-        def atoms_l3v2(df):
-            a1 = _vv_str("?a", "?b", df["q"].to_numpy(), df["d"].to_numpy(),
-                         enc.terms)
-            a2 = _vv_str("?a", "?b", df["r"].to_numpy(), df["d2"].to_numpy(),
-                         enc.terms)
-            return list(_sorted_pair(a1, a2))
+            # l3v2: {VV, VV}
+            ndt_p = "AND a1.tid <> a2.tid" if ndt else ""
+            l3v2 = con.execute(passing(f"""
+                SELECT a1.p, a1.q, a1.d, a2.q AS r, a2.d AS d2,
+                       count(*) AS support
+                FROM ms a1 JOIN ms a2
+                  ON a1.p = a2.p AND a1.a = a2.a AND a1.bb = a2.bb
+                WHERE (a1.qr < a2.qr OR (a1.q = a2.q AND a1.d < a2.d))
+                  {ndt_p}
+                GROUP BY ALL""")).df()
 
-        finish(l3v2, "l3v2", head0, atoms_l3v2, ["q", "r"])
+            def atoms_l3v2(df):
+                a1 = _vv_str("?a", "?b", df["q"].to_numpy(),
+                             df["d"].to_numpy(), enc.terms)
+                a2 = _vv_str("?a", "?b", df["r"].to_numpy(),
+                             df["d2"].to_numpy(), enc.terms)
+                return list(_sorted_pair(a1, a2))
 
-        # l3 path (S3): gated by the dangling prefix survivors
-        ndt_d = "AND b.tid <> h0.htid" if ndt else ""
-        con.execute(f"""
-            CREATE TEMP TABLE dang_a AS
-            SELECT h0.p, h0.a, h0.bb, h0.htid, b.y AS c, b.q,
-                   b.d AS d1, b.tid AS tid1
-            FROM h0 JOIN b ON h0.a = b.x WHERE true {ndt_d}""")
-        con.execute(f"""
-            CREATE TEMP TABLE da_keys AS
-            SELECT da.p, da.q, da.d1 FROM (
-              SELECT p, q, d1, count(DISTINCT a * {N} + bb) AS sup
-              FROM dang_a GROUP BY ALL
-            ) da JOIN heads USING (p) WHERE {TH}""")
-        con.execute(
-            "CREATE TEMP TABLE dang_s AS SELECT dang_a.* FROM dang_a "
-            "JOIN da_keys USING (p, q, d1)")
-        ndt_j3 = "AND b2.tid <> j.htid AND j.tid1 <> b2.tid" if ndt else ""
-        inj_j3 = "AND j.c <> j.a AND j.c <> j.bb" if inj else ""
-        l3v3 = con.execute(f"""
-            SELECT j.p, j.q, j.d1, b2.q AS r, b2.d AS d2,
-                   count(DISTINCT j.a * {N} + j.bb) AS support
-            FROM dang_s j JOIN b b2 ON j.bb = b2.x AND j.c = b2.y
-            WHERE true {ndt_j3} {inj_j3}
-            GROUP BY ALL""").df()
+            finish(l3v2, "l3v2", head0, atoms_l3v2, ["q", "r"])
 
-        def atoms_l3v3(df):
-            a1 = _vv_str("?a", "?c", df["q"].to_numpy(), df["d1"].to_numpy(),
-                         enc.terms)
-            a2 = _vv_str("?b", "?c", df["r"].to_numpy(), df["d2"].to_numpy(),
-                         enc.terms)
-            return list(_sorted_pair(a1, a2))
+            # l3 path (S3): gated by the dangling prefix survivors
+            ndt_d = "AND b.tid <> h0.htid" if ndt else ""
+            con.execute(f"""
+                CREATE TEMP TABLE dang_a AS
+                SELECT h0.p, h0.a, h0.bb, h0.htid, b.y AS c, b.q,
+                       b.d AS d1, b.tid AS tid1
+                FROM h0 JOIN b ON h0.a = b.x WHERE true {ndt_d}""")
+            con.execute("CREATE TEMP TABLE da_keys AS " + passing(f"""
+                SELECT p, q, d1, count(DISTINCT a * {N} + bb) AS support
+                FROM dang_a GROUP BY ALL""", "p, q, d1"))
+            con.execute(
+                "CREATE TEMP TABLE dang_s AS SELECT dang_a.* FROM dang_a "
+                "JOIN da_keys USING (p, q, d1)")
+            ndt_j3 = ("AND b2.tid <> j.htid AND j.tid1 <> b2.tid"
+                      if ndt else "")
+            inj_j3 = "AND j.c <> j.a AND j.c <> j.bb" if inj else ""
+            l3v3 = con.execute(passing(f"""
+                SELECT j.p, j.q, j.d1, b2.q AS r, b2.d AS d2,
+                       count(DISTINCT j.a * {N} + j.bb) AS support
+                FROM dang_s j JOIN b b2 ON j.bb = b2.x AND j.c = b2.y
+                WHERE true {ndt_j3} {inj_j3}
+                GROUP BY ALL""")).df()
 
-        finish(l3v3, "l3v3", head0, atoms_l3v3, ["q", "r"])
+            def atoms_l3v3(df):
+                a1 = _vv_str("?a", "?c", df["q"].to_numpy(),
+                             df["d1"].to_numpy(), enc.terms)
+                a2 = _vv_str("?b", "?c", df["r"].to_numpy(),
+                             df["d2"].to_numpy(), enc.terms)
+                return list(_sorted_pair(a1, a2))
 
-        if constants != "nowhere" or cfp:
-            # S4: {VV(a,b), CAtom on a or b}
-            for role_var, key in (("?a", "a"), ("?b", "bb")):
-                ndt_s4 = (
-                    "AND ca.ctid <> ms.htid AND ca.ctid <> ms.tid"
+            finish(l3v3, "l3v3", head0, atoms_l3v3, ["q", "r"])
+
+            if constants != "nowhere" or cfp:
+                # S4: {VV(a,b), CAtom on a or b}
+                for role_var, key in (("?a", "a"), ("?b", "bb")):
+                    ndt_s4 = (
+                        "AND ca.ctid <> ms.htid AND ca.ctid <> ms.tid"
+                        if ndt else ""
+                    )
+                    qb_s4 = ""
+                    if quasi_binding:
+                        # joint(CA | VV on the shared head var) >= 2,
+                        # body-only
+                        bvar = "x" if key == "a" else "y"
+                        inj_ok = (
+                            "AND b.x <> b.y AND b.tid <> ca.ctid"
+                            if inj else ""
+                        )
+                        qb_s4 = f"""AND EXISTS (
+                          SELECT 1 FROM (
+                            SELECT b.q, b.d, ca.q2, ca.cst, ca.e
+                            FROM b JOIN ca ON b.{bvar} = ca.x
+                            WHERE true {inj_ok}
+                            GROUP BY ALL HAVING count(DISTINCT ca.x) >= 2
+                          ) ok
+                          WHERE ok.q = ms.q AND ok.d = ms.d
+                            AND ok.q2 = ca.q2 AND ok.cst = ca.cst
+                            AND ok.e = ca.e
+                        )"""
+                    agg = con.execute(passing(f"""
+                        SELECT ms.p, ms.q, ms.d, ca.q2, ca.cst, ca.e,
+                               count(DISTINCT ms.a * {N} + ms.bb) AS support
+                        FROM ms JOIN ca ON ms.{key} = ca.x
+                        WHERE true {ndt_s4} {qb_s4}
+                        GROUP BY ALL""")).df()
+
+                    def atoms_s4(df, rv=role_var):
+                        a1 = _vv_str("?a", "?b", df["q"].to_numpy(),
+                                     df["d"].to_numpy(), enc.terms)
+                        a2 = _ca_str(rv, df["q2"].to_numpy(),
+                                     df["cst"].to_numpy(),
+                                     df["e"].to_numpy(), enc.terms)
+                        return list(_sorted_pair(a1, a2))
+
+                    finish(agg, "s4", head0, atoms_s4, ["q", "q2"])
+
+                # S5: {CAtom(a), CAtom(b)} — gated by the
+                # instantiated-dangling prefix survivors
+                ndt_ia = "AND c1.ctid <> h0.htid" if ndt else ""
+                con.execute(f"""
+                    CREATE TEMP TABLE ia AS
+                    SELECT h0.p, h0.a, h0.bb, h0.htid, c1.q2 AS qa,
+                           c1.cst AS csta, c1.e AS ea, c1.ctid AS ctida
+                    FROM h0 JOIN ca_alone c1 ON h0.a = c1.x
+                    WHERE true {ndt_ia}""")
+                ndt_s5 = (
+                    "AND c2.ctid <> ia.htid AND c2.ctid <> ia.ctida"
                     if ndt else ""
                 )
-                qb_s4 = ""
-                if quasi_binding:
-                    # joint(CA | VV on the shared head var) >= 2, body-only
-                    bvar = "x" if key == "a" else "y"
-                    inj_ok = (
-                        "AND b.x <> b.y AND b.tid <> ca.ctid"
-                        if inj else ""
-                    )
-                    qb_s4 = f"""AND EXISTS (
-                      SELECT 1 FROM (
-                        SELECT b.q, b.d, ca.q2, ca.cst, ca.e
-                        FROM b JOIN ca ON b.{bvar} = ca.x
-                        WHERE true {inj_ok}
-                        GROUP BY ALL HAVING count(DISTINCT ca.x) >= 2
-                      ) ok
-                      WHERE ok.q = ms.q AND ok.d = ms.d AND ok.q2 = ca.q2
-                        AND ok.cst = ca.cst AND ok.e = ca.e
-                    )"""
-                agg = con.execute(f"""
-                    SELECT ms.p, ms.q, ms.d, ca.q2, ca.cst, ca.e,
-                           count(DISTINCT ms.a * {N} + ms.bb) AS support
-                    FROM ms JOIN ca ON ms.{key} = ca.x
-                    WHERE true {ndt_s4} {qb_s4}
-                    GROUP BY ALL""").df()
+                inj_s5 = "AND ia.a <> ia.bb" if inj else ""
+                con.execute("CREATE TEMP TABLE ia_keys AS " + passing(f"""
+                    SELECT p, qa, csta, ea,
+                           count(DISTINCT a * {N} + bb) AS support
+                    FROM ia GROUP BY ALL""", "p, qa, csta, ea"))
+                con.execute(
+                    "CREATE TEMP TABLE ia_s AS SELECT ia.* FROM ia "
+                    "JOIN ia_keys USING (p, qa, csta, ea)")
+                s5 = con.execute(passing(f"""
+                    SELECT ia.p, ia.qa, ia.csta, ia.ea,
+                           c2.q2, c2.cst, c2.e,
+                           count(DISTINCT ia.a * {N} + ia.bb) AS support
+                    FROM ia_s ia JOIN ca_alone c2 ON ia.bb = c2.x
+                    WHERE true {ndt_s5} {inj_s5}
+                    GROUP BY ALL""")).df()
+                if quasi_binding and inj and len(s5):
+                    s5 = _anti(s5, _s5_kill(ca, rank),
+                               ["qa", "csta", "ea", "q2", "cst", "e"])
 
-                def atoms_s4(df, rv=role_var):
-                    a1 = _vv_str("?a", "?b", df["q"].to_numpy(),
-                                 df["d"].to_numpy(), enc.terms)
-                    a2 = _ca_str(rv, df["q2"].to_numpy(),
+                def atoms_s5(df):
+                    a1 = _ca_str("?a", df["qa"].to_numpy(),
+                                 df["csta"].to_numpy(), df["ea"].to_numpy(),
+                                 enc.terms)
+                    a2 = _ca_str("?b", df["q2"].to_numpy(),
                                  df["cst"].to_numpy(), df["e"].to_numpy(),
                                  enc.terms)
                     return list(_sorted_pair(a1, a2))
 
-                finish(agg, "s4", head0, atoms_s4, ["q", "q2"])
+                finish(s5, "s5", head0, atoms_s5, ["qa", "q2"])
 
-            # S5: {CAtom(a), CAtom(b)} — gated by the instantiated-dangling
-            # prefix survivors
-            ndt_ia = "AND c1.ctid <> h0.htid" if ndt else ""
-            con.execute(f"""
-                CREATE TEMP TABLE ia AS
-                SELECT h0.p, h0.a, h0.bb, h0.htid, c1.q2 AS qa,
-                       c1.cst AS csta, c1.e AS ea, c1.ctid AS ctida
-                FROM h0 JOIN ca_alone c1 ON h0.a = c1.x
-                WHERE true {ndt_ia}""")
-            ndt_s5 = (
-                "AND c2.ctid <> ia.htid AND c2.ctid <> ia.ctida"
-                if ndt else ""
-            )
-            inj_s5 = "AND ia.a <> ia.bb" if inj else ""
-            con.execute(f"""
-                CREATE TEMP TABLE ia_keys AS
-                SELECT s.p, s.qa, s.csta, s.ea FROM (
-                  SELECT p, qa, csta, ea,
-                         count(DISTINCT a * {N} + bb) AS sup
-                  FROM ia GROUP BY ALL
-                ) s JOIN heads USING (p) WHERE {TH}""")
-            con.execute(
-                "CREATE TEMP TABLE ia_s AS SELECT ia.* FROM ia "
-                "JOIN ia_keys USING (p, qa, csta, ea)")
-            s5 = con.execute(f"""
-                SELECT ia.p, ia.qa, ia.csta, ia.ea,
-                       c2.q2, c2.cst, c2.e,
-                       count(DISTINCT ia.a * {N} + ia.bb) AS support
-                FROM ia_s ia JOIN ca_alone c2 ON ia.bb = c2.x
-                WHERE true {ndt_s5} {inj_s5}
-                GROUP BY ALL""").df()
-            if quasi_binding and inj and len(s5):
-                s5 = _anti(s5, _s5_kill(ca, rank),
-                           ["qa", "csta", "ea", "q2", "cst", "e"])
+        # ---------------- instantiated heads ----------------
+        if constants != "nowhere" or cfp:
+            for fixed_pos, fvar in (("s", "?b"), ("o", "?a")):
+                if cfp is None:
+                    if constants == "object" and fixed_pos == "s":
+                        continue
+                    if constants == "subject" and fixed_pos == "o":
+                        continue
+                ha, f = ("a", "bb") if fixed_pos == "s" else ("bb", "a")
+                ih = pd.DataFrame({
+                    "p": h0["p"].to_numpy(), "ha": h0[ha].to_numpy(),
+                    "f": h0[f].to_numpy(), "htid": h0["htid"].to_numpy(),
+                })
+                ih = _ih_policy_filter(ih, enc, constants, cfp, fixed_pos)
+                _mine_inst_shapes(
+                    con, ih, fixed_pos, fvar, enc, ca, params,
+                    quasi_binding, inj, ndt, passing, N, finish,
+                )
 
-            def atoms_s5(df):
-                a1 = _ca_str("?a", df["qa"].to_numpy(), df["csta"].to_numpy(),
-                             df["ea"].to_numpy(), enc.terms)
-                a2 = _ca_str("?b", df["q2"].to_numpy(), df["cst"].to_numpy(),
-                             df["e"].to_numpy(), enc.terms)
-                return list(_sorted_pair(a1, a2))
-
-            finish(s5, "s5", head0, atoms_s5, ["qa", "q2"])
-
-    # ---------------- instantiated heads ----------------
-    if constants != "nowhere" or cfp:
-        for fixed_pos, fvar in (("s", "?b"), ("o", "?a")):
-            if cfp is None:
-                if constants == "object" and fixed_pos == "s":
-                    continue
-                if constants == "subject" and fixed_pos == "o":
-                    continue
-            ih = pd.DataFrame({
-                "p": h0["p"].to_numpy(),
-                "ha": (h0["a"] if fixed_pos == "s" else h0["bb"]).to_numpy(),
-                "f": (h0["bb"] if fixed_pos == "s" else h0["a"]).to_numpy(),
-                "htid": h0["htid"].to_numpy(),
-            })
-            ih = _ih_policy_filter(ih, enc, constants, cfp, fixed_pos)
-            _mine_inst_shapes(
-                con, ih, fixed_pos, fvar, enc, ca, params,
-                quasi_binding, inj, ndt, TH, N, finish,
-            )
-
-    con.close()
     if not out_parts:
         cols = (("p", "shape", "q", "d1", "r", "d2", "head_size", "support")
                 if var_keys else
@@ -821,11 +818,19 @@ def _ih_policy_filter(ih, enc, constants, cfp, fixed_pos):
 
 
 def _mine_inst_shapes(con, ih, fixed_pos, fvar, enc, ca, params,
-                      quasi_binding, inj, ndt, TH, N, finish):
+                      quasi_binding, inj, ndt, passing, N, finish):
     """S6/S7/S8/S9 for one head-constant side (constants.py
     mine_constants instantiated-head block), DuckDB core."""
     terms = enc.terms
-    con.register("ih", ih)
+    # Head prune: every S6-S9 support counts distinct f within one
+    # instantiated head (p, ha), one ih row per head triple, so it is at
+    # most the head's row count; a head that fails the law mines no rule.
+    con.register("ih_all", ih)
+    con.execute("CREATE OR REPLACE TEMP TABLE ih AS SELECT ih_all.* FROM "
+                "ih_all JOIN (" + passing(
+                    "SELECT p, ha, count(*) AS support FROM ih_all "
+                    "GROUP BY ALL", "p, ha") + ") USING (p, ha)")
+    con.unregister("ih_all")
 
     def head_i(df):
         tp = terms[df["p"].to_numpy()]
@@ -838,18 +843,21 @@ def _mine_inst_shapes(con, ih, fixed_pos, fvar, enc, ca, params,
 
     # S6: one CAtom on the free var (gate for S9). Group size == distinct
     # f (one row per (head triple, atom) — both sides derive from
-    # distinct triples)
+    # distinct triples). Only the L3 shapes read ihca again, so at L2 it
+    # is a subquery, not a table.
     ndt_ca = "AND ca.ctid <> ih.htid" if ndt else ""
-    con.execute(f"""
-        CREATE OR REPLACE TEMP TABLE ihca AS
+    ihca = f"""
         SELECT ih.p, ih.ha, ih.f, ih.htid,
                ca.q2, ca.cst, ca.e, ca.ctid
         FROM ih JOIN ca_alone ca ON ih.f = ca.x
         WHERE NOT (ca.e = {opp_e} AND ca.q2 = ih.p AND ca.cst = ih.ha)
-          {ndt_ca}""")
-    s6 = con.execute("""
-        SELECT p, ha, q2, cst, e, count(*) AS support
-        FROM ihca GROUP BY ALL""").df()
+          {ndt_ca}"""
+    if params.max_rule_length >= 3:
+        con.execute(f"CREATE OR REPLACE TEMP TABLE ihca AS {ihca}")
+        ihca = "SELECT * FROM ihca"
+    s6 = con.execute(passing(
+        f"SELECT p, ha, q2, cst, e, count(*) AS support FROM ({ihca}) "
+        "GROUP BY ALL")).df()
 
     def atoms_s6(df):
         return [_ca_str(fvar, df["q2"].to_numpy(), df["cst"].to_numpy(),
@@ -858,14 +866,8 @@ def _mine_inst_shapes(con, ih, fixed_pos, fvar, enc, ca, params,
     finish(s6, "s6", head_i, atoms_s6, ["q2"])
 
     if params.max_rule_length < 3:
-        con.unregister("ih")
         return
-    con.execute(f"""
-        CREATE OR REPLACE TEMP TABLE s6s AS
-        SELECT s.p, s.ha, s.q2, s.cst, s.e FROM (
-          SELECT p, ha, q2, cst, e, count(*) AS sup
-          FROM ihca GROUP BY ALL
-        ) s JOIN heads USING (p) WHERE {TH}""")
+    con.register("s6s", s6)  # the fetched s6 rows are the s6 survivors
 
     # dangling prefix (head) <- VV(f, c) — gate for S7/S8
     ndt_b = "AND b.tid <> ih.htid" if ndt else ""
@@ -876,26 +878,23 @@ def _mine_inst_shapes(con, ih, fixed_pos, fvar, enc, ca, params,
                ih.htid
         FROM ih JOIN b ON ih.f = b.x
         WHERE true {ndt_b} {inj_b}""")
-    con.execute(f"""
-        CREATE OR REPLACE TEMP TABLE d7_keys AS
-        SELECT s.p, s.ha, s.q, s.d FROM (
-          SELECT p, ha, q, d, count(DISTINCT f) AS sup
-          FROM ihb GROUP BY ALL
-        ) s JOIN heads USING (p) WHERE {TH}""")
+    con.execute("CREATE OR REPLACE TEMP TABLE d7_keys AS " + passing(
+        "SELECT p, ha, q, d, count(DISTINCT f) AS support FROM ihb "
+        "GROUP BY ALL", "p, ha, q, d"))
     con.execute(
         "CREATE OR REPLACE TEMP TABLE ihb_s AS SELECT ihb.* FROM ihb "
         "JOIN d7_keys USING (p, ha, q, d)")
 
     # S7: {VV(f,c), VV(f,c)} distinct pair
     ndt_p7 = "AND a1.tid <> a2.tid" if ndt else ""
-    s7 = con.execute(f"""
+    s7 = con.execute(passing(f"""
         SELECT a1.p, a1.ha, a1.q, a1.d, a2.q AS r, a2.d AS d2,
                count(DISTINCT a1.f) AS support
         FROM ihb_s a1 JOIN ihb a2
           ON a1.p = a2.p AND a1.ha = a2.ha AND a1.f = a2.f
           AND a1.c = a2.c
         WHERE (a1.qr < a2.qr OR (a1.q = a2.q AND a1.d < a2.d)) {ndt_p7}
-        GROUP BY ALL""").df()
+        GROUP BY ALL""")).df()
 
     def atoms_s7(df):
         a1 = _vv_str(fvar, "?c", df["q"].to_numpy(), df["d"].to_numpy(),
@@ -923,12 +922,12 @@ def _mine_inst_shapes(con, ih, fixed_pos, fvar, enc, ca, params,
           WHERE ok.q = ihb_s.q AND ok.d = ihb_s.d AND ok.q2 = ca.q2
             AND ok.cst = ca.cst AND ok.e = ca.e
         )"""
-    s8 = con.execute(f"""
+    s8 = con.execute(passing(f"""
         SELECT ihb_s.p, ihb_s.ha, ihb_s.q, ihb_s.d,
                ca.q2, ca.cst, ca.e, count(DISTINCT ihb_s.f) AS support
         FROM ihb_s JOIN ca ON ihb_s.c = ca.x
         WHERE true {ndt_s8} {qb_s8}
-        GROUP BY ALL""").df()
+        GROUP BY ALL""")).df()
 
     def atoms_s8(df):
         a1 = _vv_str(fvar, "?c", df["q"].to_numpy(), df["d"].to_numpy(),
@@ -944,7 +943,6 @@ def _mine_inst_shapes(con, ih, fixed_pos, fvar, enc, ca, params,
     # compare via a rank over the distinct CA atoms present.
     dca = con.execute("SELECT DISTINCT q2, cst, e FROM ihca").df()
     if not len(dca):
-        con.unregister("ih")
         return
     astr = _ca_str(fvar, dca["q2"].to_numpy(), dca["cst"].to_numpy(),
                    dca["e"].to_numpy(), terms)
@@ -968,7 +966,7 @@ def _mine_inst_shapes(con, ih, fixed_pos, fvar, enc, ca, params,
             GROUP BY ALL HAVING count(DISTINCT k1.x) >= 2
           ) ok WHERE ok.ak1 = a1.ak AND ok.ak2 = a2.ak
         )"""
-    s9 = con.execute(f"""
+    s9 = con.execute(passing(f"""
         WITH ihk AS (
           SELECT ihca.*, akt.ak FROM ihca JOIN akt USING (q2, cst, e)
         ), r1 AS (
@@ -980,7 +978,7 @@ def _mine_inst_shapes(con, ih, fixed_pos, fvar, enc, ca, params,
         FROM r1 a1 JOIN ihk a2
           ON a1.p = a2.p AND a1.ha = a2.ha AND a1.f = a2.f
         WHERE a1.ak < a2.ak {ndt_s9} {qb_j}
-        GROUP BY ALL""").df()
+        GROUP BY ALL""")).df()
     ak_to_q2 = np.empty(len(dca), dtype=np.int64)
     ak_to_q2[dca["ak"].to_numpy()] = dca["q2"].to_numpy()
     if len(s9):
@@ -995,8 +993,6 @@ def _mine_inst_shapes(con, ih, fixed_pos, fvar, enc, ca, params,
                 astr_by_rank[df["ak2"].to_numpy()]]
 
     finish(s9, "s9", head_i, atoms_s9, ["q2a", "q2b"])
-    con.unregister("akt")
-    con.unregister("ih")
 
 
 # --------------------------------------------------------------------------

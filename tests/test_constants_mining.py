@@ -24,6 +24,19 @@ YAGO = yago_tsv()
     ("object", False), ("subject", False), ("lcs", False),
 ])
 def test_brute_equality_small_kg(spark, constants, with_dup):
+    _brute_equality(spark, constants, with_dup)
+
+
+@pytest.mark.parametrize("constants,with_dup", [
+    ("anywhere", True), ("object", False),
+])
+def test_brute_equality_small_kg_distributed(spark, constants, with_dup):
+    """The same oracle against the distributed plan (its input is below the
+    driver-local gate), which has its own instantiated-head prune."""
+    _brute_equality(spark, constants, with_dup, local_threshold=0)
+
+
+def _brute_equality(spark, constants, with_dup, **gate):
     t = synth_kg(spark, 2000, n_entities=200, n_predicates=6).distinct().cache()
     rows = [(r.s, r.p, r.o) for r in t.collect()]
     brute = mine_brute_constants(
@@ -35,7 +48,7 @@ def test_brute_equality_small_kg(spark, constants, with_dup):
     params = MiningParams(min_head_size=40, min_support=2,
                           min_head_coverage=0.02,
                           with_duplicate_predicates=with_dup)
-    out = mine_constants(t, params, constants=constants).collect()
+    out = mine_constants(t, params, constants=constants, **gate).collect()
     sset = {(r.head, tuple(sorted(r.atoms)), r.support) for r in out}
     assert sset == bset
     t.unpersist()

@@ -417,6 +417,34 @@ def test_head_coverage_boundary_local_equals_distributed(spark):
         ("?a|h|?b", ["?a|q|?b"], 7), ("?a|q|?b", ["?a|h|?b"], 7)]
 
 
+@pytest.mark.parametrize("constants", ["object", "subject"])
+@pytest.mark.parametrize("n", [7, 6])
+def test_instantiated_head_boundary_local_equals_distributed(
+        spark, constants, n):
+    """The instantiated-head prune at exactly minHC: the head (h, C=c0)
+    has n of h's 100 triples, and its s6 rule has support n. At minHC
+    0.07 the head and the rule pass with n = 7 (7 / 100 >= 0.07, though
+    100 * 0.07 is 7.000000000000001) and both are gone with n = 6."""
+    if constants == "object":
+        rows = [(f"a{i}", "h", "c0" if i < n else f"d{i}")
+                for i in range(100)]
+        rows += [(f"a{i}", "q", "k") for i in range(n)]
+        want = ("?a|h|C=c0", ["?a|q|C=k"])
+    else:
+        rows = [("c0" if i < n else f"d{i}", "h", f"b{i}")
+                for i in range(100)]
+        rows += [("k", "q", f"b{i}") for i in range(n)]
+        want = ("C=c0|h|?b", ["C=k|q|?b"])
+    t = spark.createDataFrame(rows, "s string, p string, o string")
+    params = MiningParams(min_head_size=100, min_support=1,
+                          min_head_coverage=0.07, max_rule_length=2)
+    loc = _rows(mine_constants(t, params, constants=constants))
+    assert loc == _rows(mine_constants(t, params, constants=constants,
+                                       local_threshold=0))
+    assert [(r[0], list(r[2]), r[4]) for r in loc[1]] == (
+        [(*want, 7)] if n == 7 else [])
+
+
 def test_var_only_empty_ruleset(spark, kg):
     """No head reaches minHeadSize: both paths give no rule, same types."""
     params = MiningParams(min_head_size=10_000)
