@@ -446,8 +446,7 @@ def _mine_local(triples: DataFrame, tpdf, params: MiningParams) -> DataFrame:
     """The driver-local var-only miner: ``mine_constants_local`` without
     constants, whose l2/l3v2/l3v3 laws are this module's, emitting this
     module's rule rows."""
-    pdf = mine_constants_local(tpdf.drop_duplicates(), params, "nowhere",
-                               var_keys=True)
+    pdf = mine_constants_local(tpdf, params, "nowhere", var_keys=True)
     term = triples.schema["p"].dataType.simpleString()
     return triples.sparkSession.createDataFrame(
         pdf,
@@ -474,7 +473,12 @@ def mine(
     term type, with settings the constants tier honours (``_local_ok``),
     mine on the driver, the same laws in DuckDB;
     ``top_k`` then filters the result. Otherwise the staged plan below
-    runs."""
+    runs. Cached triples are collected once per Spark cache entry and
+    kept until they are unpersisted, an over-bound probe included
+    (``local_constants.collect_spo``), so the ``confidences`` call that
+    scores these rules over the same cached triples collects none; a
+    filtered input (``only_predicates`` / ``without_predicates``) is
+    collected on each call."""
     params = params or MiningParams()
     # OnlyPredicates/WithoutPredicates constrain ALL atoms (head and body),
     # reference core:rule/RuleConstraint.scala:28-104 via

@@ -49,9 +49,13 @@ support, head_size, head_coverage) — atom string "subj|pred|obj" with vars
 Driver-local gate: at most ``local_threshold`` input triples (default
 ``local_constants.LOCAL_TRIPLES_MAX``; 0 forces this distributed plan)
 run the same algebra on the driver (mining/local_constants.py). The
-probe is the collect itself (``local_constants.collect_local``): one
-task that stops after ``local_threshold + 1`` rows, whatever the number
-of input partitions. The rule-count bound of the same gate applies in
+probe is the collect itself (``local_constants.collect_spo``): one task
+that stops after ``local_threshold + 1`` rows, whatever the number of
+input partitions. A cached input is probed once for as long as Spark
+keeps its cache: the deduplicated copy, keyed on that cache entry, or
+the largest bound it exceeded, serves the later calls of this module,
+measures_constants, amie and measures on the same triples; an
+unpersist drops it. The rule-count bound of the same gate applies in
 measures_constants.confidences_constants.
 """
 
@@ -63,7 +67,7 @@ from pyspark.sql import functions as F
 from rdfrules_spark.mining.amie import MiningParams, _b, _btid
 from rdfrules_spark.mining.local_constants import (
     LOCAL_TRIPLES_MAX,
-    collect_local,
+    collect_spo,
     mine_constants_local,
 )
 
@@ -281,15 +285,14 @@ def mine_constants(
     if params.without_predicates is not None:
         triples = triples.where(~F.col("p").isin(params.without_predicates))
 
-    # Adaptive small-input gate (local_constants.collect_local): at
+    # Adaptive small-input gate (local_constants.collect_spo): at
     # driver-sized inputs the ~60-stage staged plan below is pure
     # scheduling overhead — run the identical algebra vectorized on the
     # driver instead. Above the gate the distributed path is unchanged.
-    tpdf = collect_local(triples.select("s", "p", "o"), local_threshold)
+    tpdf = collect_spo(triples, local_threshold)
     if tpdf is not None:
         pdf = mine_constants_local(
-            tpdf.drop_duplicates(), params, constants,
-            constants_for_predicates, quasi_binding,
+            tpdf, params, constants, constants_for_predicates, quasi_binding
         )
         return triples.sparkSession.createDataFrame(
             pdf[["head", "p", "atoms", "shape", "support", "head_size",

@@ -15,7 +15,11 @@ one task whatever the number of input partitions. ``mine_constants`` /
 ``confidences_constants`` and ``amie.mine`` / ``measures.confidences``
 give it the same two bounds: ``LOCAL_TRIPLES_MAX`` input triples (their
 ``local_threshold`` parameter; 0 forces the distributed path) and, for
-confidences, ``LOCAL_RULES_MAX`` rules. ``amie.mine`` runs
+confidences, ``LOCAL_RULES_MAX`` rules. All four take their triples
+through ``collect_spo``, which holds the deduplicated (s, p, o) copy of
+a cached input, or the largest bound it was seen to exceed, for as long
+as Spark keeps that cache, so mining and then scoring one cached triple
+set crosses the Arrow boundary once. ``amie.mine`` runs
 ``mine_constants_local`` without constants, in amie's row schema
 (``var_keys``); ``measures.confidences`` sends its
 (p, q, d1, r, d2) keys straight to ``_var_sizes``, the var-only size laws
@@ -73,6 +77,7 @@ Implementation notes:
 from __future__ import annotations
 
 import os
+import threading
 
 import numpy as np
 import pandas as pd
@@ -88,8 +93,9 @@ from rdfrules_spark.mining.inst_sql import COUNTS, SQL_SHAPES
 #: peak RSS grew with the input (1.9 GB at 196k, 3.8 GB at 391k, over
 #: 5 GB at 979k) against about 0.14 GB on the staged path, whose JVM
 #: peaked at 2.9-3.4 GB. At 200k the local path's Python and JVM peaks
-#: together stay at or below the staged path's. Above the bound each
-#: gated call pays its probe (0.8-0.9 s on 245k and 979k cached triples).
+#: together stay at or below the staged path's. Above the bound a probe
+#: costs 0.8-0.9 s (245k and 979k cached triples): once per cached input
+#: and bound (``collect_spo``), on every gated call for an uncached one.
 LOCAL_TRIPLES_MAX = 200_000
 #: rules at or below which confidences_constants collects the ruleset to
 #: the driver. The largest ruleset any caller mines locally today is
@@ -122,14 +128,92 @@ def collect_local(df: DataFrame, bound: int) -> pd.DataFrame | None:
     return pdf if len(pdf) <= bound else None
 
 
-def collect_triples(triples: DataFrame, bound: int) -> pd.DataFrame | None:
-    """The var-only gate: ``triples``' (s, p, o) through ``collect_local``,
-    terms in their own type, or None when s, p and o differ in type (the
-    local codes would then not order like the staged columns)."""
-    spo = triples.select("s", "p", "o")
-    if len({t for _, t in spo.dtypes}) != 1:
+class _Held:
+    """What the gate learnt of one cached triple set: its row count and
+    deduplicated (s, p, o) copy once collected, else the largest bound
+    it was seen to exceed. ``lock`` makes concurrent callers of the same
+    input wait for one collect."""
+
+    def __init__(self):
+        self.lock = threading.Lock()
+        self.n = None
+        self.pdf = None
+        self.over = 0
+
+
+#: (application id, cached RDD id, input columns) -> _Held; process-wide,
+#: like the Spark cache whose entries it follows
+_HELD: dict[tuple, _Held] = {}
+_HELD_LOCK = threading.Lock()
+
+
+def _cache_key(df: DataFrame) -> tuple | None:
+    """``df``'s entry in Spark's cache as a ``_HELD`` key, or None when
+    its plan is not cached (a filtered view of a cached input is not).
+    The entry's RDD id is the same for every DataFrame whose plan reads
+    that cache, and new for each re-cache."""
+    spark = df.sparkSession
+    hit = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(
+        df._jdf
+    )
+    if hit.isEmpty():
         return None
-    return collect_local(spo, bound)
+    rdd = hit.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers()
+    return (spark.sparkContext.applicationId, rdd.id(), tuple(df.columns))
+
+
+def _evict(sc) -> None:
+    """Drop the ``_HELD`` entries whose RDD Spark no longer persists
+    (unpersisted, or of a stopped application); under ``_HELD_LOCK``."""
+    if not _HELD:
+        return
+    app, persisted = sc.applicationId, sc._jsc.getPersistentRDDs()
+    for key in [k for k in _HELD
+                if k[0] != app or not persisted.containsKey(k[1])]:
+        del _HELD[key]
+
+
+def collect_spo(triples: DataFrame, bound: int) -> pd.DataFrame | None:
+    """The triples gate of both tiers: ``triples``' distinct (s, p, o) as
+    pandas when ``triples`` has at most ``bound`` rows, else None (always
+    None for ``bound`` <= 0, without running a job). Callers must not
+    modify the frame: it may be shared.
+
+    An uncached ``triples`` is probed by ``collect_local`` on every call.
+    A cached one is probed once per cache entry, keyed on Spark's cache
+    (``_cache_key``): the copy is kept, and served to every later call
+    whose bound it fits, until the cache's RDD is no longer persisted;
+    the next gated call, on any input, then drops it. A probe that finds
+    more than ``bound`` rows is kept too, so a later call at that or a
+    smaller bound returns None without a job; a larger bound probes
+    again."""
+    if bound <= 0:
+        return None
+    spo = triples.select("s", "p", "o")
+    key = _cache_key(triples)
+    with _HELD_LOCK:
+        _evict(triples.sparkSession.sparkContext)
+        held = None if key is None else _HELD.setdefault(key, _Held())
+    if held is None:
+        pdf = collect_local(spo, bound)
+        return None if pdf is None else pdf.drop_duplicates()
+    with held.lock:
+        if held.pdf is None and bound > held.over:
+            pdf = collect_local(spo, bound)
+            if pdf is None:
+                held.over = bound
+            else:
+                held.n, held.pdf = len(pdf), pdf.drop_duplicates()
+        return held.pdf if held.pdf is not None and held.n <= bound else None
+
+
+def collect_triples(triples: DataFrame, bound: int) -> pd.DataFrame | None:
+    """The var-only gate: ``collect_spo``, terms in their own type, or
+    None when s, p and o differ in type (the local codes would then not
+    order like the staged columns)."""
+    if len({t for _, t in triples.select("s", "p", "o").dtypes}) != 1:
+        return None
+    return collect_spo(triples, bound)
 
 
 # --------------------------------------------------------------------------

@@ -278,7 +278,7 @@ def _confidences_local(
     if rpdf is None:
         return None
     out = confidences_local(
-        rpdf, tpdf.drop_duplicates(), cwa, pca, min_confidence, injective
+        rpdf, tpdf, cwa, pca, min_confidence, injective
     )
     out["r"] = out["r"].astype(object)
     out.loc[out["shape"] == "l2", "r"] = None
@@ -324,6 +324,9 @@ def confidences(
     the sizes are exact and ``min_confidence`` is a plain filter: at the
     bound the unpruned local count took 1.9 s where the staged pruned
     plan took 20.4 s (task9's pipeline on 196k synth_kg triples).
+    Cached triples reuse the copy (or the over-bound verdict) that an
+    earlier gated call, ``amie.mine`` say, took of the same Spark cache
+    entry, until they are unpersisted (``local_constants.collect_spo``).
     """
     if min_confidence > 0.0 and not cwa:
         raise ValueError("min_confidence pruning requires cwa=True")

@@ -23,12 +23,16 @@ DataFrame code:
     DuckDB on the driver-local path — two executors, one law.
     qpca_constants reads the raw binding sets of the same text.
 
-Driver-local gate (``local_constants.collect_local``, the same one
-mining/constants.mine_constants, amie.mine and measures.confidences use):
-the triples are collected under ``local_threshold`` (default
-``LOCAL_TRIPLES_MAX``) and then the rules under ``LOCAL_RULES_MAX``; each
-bounded collect is its own probe, one task whatever the number of input
-partitions. Within both bounds the confidences run on the driver, above
+Driver-local gate (``local_constants.collect_spo`` for the triples, the
+same one mining/constants.mine_constants, amie.mine and
+measures.confidences use; ``collect_local`` for the rules): the triples
+are collected under ``local_threshold`` (default ``LOCAL_TRIPLES_MAX``)
+and then the rules under ``LOCAL_RULES_MAX``, each bounded collect a
+probe of one task whatever the number of input partitions. Cached
+triples are probed once per cache entry: their deduplicated copy, or
+the largest bound they exceeded, is kept until Spark unpersists them,
+so scoring the rules just mined from the same cached triples collects
+no triples. Within both bounds the confidences run on the driver, above
 either the distributed plan below runs, its var-only part included (one
 decision per call). A ruleset mined on the driver therefore makes one
 Arrow round trip (createDataFrame, then this collect).
@@ -49,6 +53,7 @@ from rdfrules_spark.mining.local_constants import (
     LOCAL_TRIPLES_MAX,
     VAR_SHAPES,
     collect_local,
+    collect_spo,
     confidences_constants_local,
 )
 from rdfrules_spark.mining.measures import confidences, qpca_confidence
@@ -147,73 +152,61 @@ def to_var_schema(rules: DataFrame, keep_atoms: bool = False) -> DataFrame:
 
     Raises on instantiated atoms (prediction over instantiated rules is not
     supported — predict from a constants-free mining config). The guard is
-    IN-PLAN (F.raise_error on the offending row), not an eager count: an
+    IN-PLAN (raise_error on the offending row), not an eager count: an
     eager probe would execute the whole upstream mining plan once per
     conversion (Predict/Prune/Instantiate/Lift each call this)."""
     if "atoms" not in rules.columns:
         return rules  # already var schema
-    su = lambda a: F.split(a, r"\|")[0]  # noqa: E731
-    pr = lambda a: F.split(a, r"\|")[1]  # noqa: E731
-    ob = lambda a: F.split(a, r"\|")[2]  # noqa: E731
-    has_const = F.exists(
-        F.concat(F.array(F.col("head")), F.col("atoms")),
-        lambda a: su(a).startswith("C=") | ob(a).startswith("C="),
-    )
-    a0, a1 = F.col("atoms")[0], F.get(F.col("atoms"), 1)
-    has_c = F.exists(
-        F.col("atoms"), lambda a: (su(a) == "?c") | (ob(a) == "?c")
-    )
-    d_of = lambda a: F.when(su(a) == "?a", "f").otherwise("i")  # noqa: E731
+    # one selectExpr of SQL text: the same expressions built as a Python
+    # Column tree cost 1.4k-2.5k Py4J round trips a call
+    su, pr, ob = ("split({}, '[|]')[%d]" % i for i in range(3))
+    a0, a1 = "atoms[0]", "get(atoms, 1)"
+    # a rule with any instantiated atom, head included
+    has_const = ("exists(concat(array(head), atoms), a -> startswith("
+                 f"{su.format('a')}, 'C=') OR startswith({ob.format('a')}, "
+                 "'C='))")
+    has_c = (f"exists(atoms, a -> {su.format('a')} = '?c' OR "
+             f"{ob.format('a')} = '?c')")
+
+    def d(a, v="'?a'"):
+        return f"CASE WHEN {su.format(a)} = {v} THEN 'f' ELSE 'i' END"
+
     # l3v3 sides: the atom touching ?a vs the atom touching ?b
-    touches = lambda a, v: (su(a) == v) | (ob(a) == v)  # noqa: E731
-    a_atom = F.when(touches(a0, F.lit("?a")), a0).otherwise(a1)
-    b_atom = F.when(touches(a0, F.lit("?a")), a1).otherwise(a0)
-    d3 = lambda a, v: F.when(su(a) == v, "f").otherwise("i")  # noqa: E731
+    a0_on_a = f"({su.format(a0)} = '?a' OR {ob.format(a0)} = '?a')"
+    a_atom = f"CASE WHEN {a0_on_a} THEN {a0} ELSE {a1} END"
+    b_atom = f"CASE WHEN {a0_on_a} THEN {a1} ELSE {a0} END"
     # l3v2 canonical unordered pair sorted by the (q, d) TUPLE (struct
     # comparison -- string concat would misorder prefix predicates)
-    k0 = F.struct(pr(a0).alias("q"), d_of(a0).alias("d"))
-    k1 = F.struct(pr(a1).alias("q"), d_of(a1).alias("d"))
-    first = F.when(k0 <= k1, a0).otherwise(a1)
-    second = F.when(k0 <= k1, a1).otherwise(a0)
+    a0_first = (f"named_struct('q', {pr.format(a0)}, 'd', {d(a0)}) <= "
+                f"named_struct('q', {pr.format(a1)}, 'd', {d(a1)})")
+    first = f"CASE WHEN {a0_first} THEN {a0} ELSE {a1} END"
+    second = f"CASE WHEN {a0_first} THEN {a1} ELSE {a0} END"
+
+    def by_shape(l2, l3v3, l3v2, name):
+        return (f"CASE WHEN size(atoms) = 1 THEN {l2} WHEN {has_c} THEN "
+                f"{l3v3} ELSE {l3v2} END AS {name}")
+
+    none = "CAST(NULL AS STRING)"
     # mine_constants rows already carry p/shape (its own shape taxonomy) —
     # the derived var-key columns replace them
     measures = [
-        c for c in rules.columns
+        f"`{c}`" for c in rules.columns
         if c not in ("head", "atoms", "p", "shape", "q", "d1", "r", "d2")
     ]
     if keep_atoms:
         measures = ["head", "atoms"] + measures
-    out = rules.select(
-        F.when(
-            has_const,
-            F.raise_error(F.lit(
-                "instantiated rules can not be converted to the var-rule "
-                "schema; mine with WithoutConstants for prediction"
-            )),
-        ).otherwise(F.split(F.col("head"), r"\|")[1]).alias("p"),
-        F.when(F.size("atoms") == 1, "l2")
-        .when(has_c, "l3v3")
-        .otherwise("l3v2")
-        .alias("shape"),
-        F.when(F.size("atoms") == 1, pr(a0))
-        .when(has_c, pr(a_atom))
-        .otherwise(pr(first))
-        .alias("q"),
-        F.when(F.size("atoms") == 1, d_of(a0))
-        .when(has_c, d3(a_atom, F.lit("?a")))
-        .otherwise(d_of(first))
-        .alias("d1"),
-        F.when(F.size("atoms") == 1, F.lit(None).cast("string"))
-        .when(has_c, pr(b_atom))
-        .otherwise(pr(second))
-        .alias("r"),
-        F.when(F.size("atoms") == 1, F.lit(None).cast("string"))
-        .when(has_c, d3(b_atom, F.lit("?b")))
-        .otherwise(d_of(second))
-        .alias("d2"),
+    return rules.selectExpr(
+        f"CASE WHEN {has_const} THEN raise_error('instantiated rules can "
+        "not be converted to the var-rule schema; mine with "
+        f"WithoutConstants for prediction') ELSE {pr.format('head')} END "
+        "AS p",
+        by_shape("'l2'", "'l3v3'", "'l3v2'", "shape"),
+        by_shape(pr.format(a0), pr.format(a_atom), pr.format(first), "q"),
+        by_shape(d(a0), d(a_atom), d(first), "d1"),
+        by_shape(none, pr.format(b_atom), pr.format(second), "r"),
+        by_shape(none, d(b_atom, "'?b'"), d(second), "d2"),
         *measures,
     )
-    return out
 
 
 def _rules(rules: DataFrame, t: DataFrame) -> DataFrame:
@@ -266,16 +259,14 @@ def confidences_constants(
     Within the driver-local gate (module docstring) the same laws run on
     the driver — at tiny inputs the ~40-stage distributed plan below is
     pure scheduling overhead."""
-    tpdf = collect_local(triples.select("s", "p", "o"), local_threshold)
+    tpdf = collect_spo(triples, local_threshold)
     rules_pdf = None if tpdf is None else collect_local(
         rules.select("head", "p", "atoms", "shape", "support", "head_size",
                      "head_coverage"),
         LOCAL_RULES_MAX,
     )
     if rules_pdf is not None:
-        out = confidences_constants_local(
-            rules_pdf, tpdf.drop_duplicates(), injective
-        )
+        out = confidences_constants_local(rules_pdf, tpdf, injective)
         return triples.sparkSession.createDataFrame(
             out, schema=_CONF_SCHEMA
         )

@@ -165,6 +165,52 @@ def test_confidence_filter_sort_shrink(spark, yago_triples):
     assert abs(top["cwa_confidence"] - mx) < 1e-12
 
 
+def test_cached_index_collects_its_triples_once(spark, monkeypatch):
+    """Index -> CacheIndex -> Mine -> ComputeConfidence: the driver-local
+    miner and the confidences share one collect of the cached triples,
+    and the rules are those of the uncached pipeline."""
+    from rdfrules_spark import http_pipeline
+    from rdfrules_spark.mining import local_constants
+
+    collects, cached = [], []
+    collect_local, cache = local_constants.collect_local, http_pipeline._cache
+
+    def spy_collect(*args):
+        collects.append(1)
+        return collect_local(*args)
+
+    def spy_cache(df, params):
+        cached.append(cache(df, params))
+        return cached[-1]
+
+    monkeypatch.setattr(local_constants, "collect_local", spy_collect)
+    monkeypatch.setattr(http_pipeline, "_cache", spy_cache)
+    tasks = [
+        {"name": "LoadGraph", "parameters": {"path": YAGO, "settings": "tsvRaw"}},
+        {"name": "Index"},
+        {"name": "CacheIndex", "parameters": {"inMemory": True}},
+        {"name": "Mine", "parameters": {
+            "thresholds": [{"name": "MinHeadCoverage", "value": 0.01}],
+            "constraints": [{"name": "WithoutDuplicitPredicates"},
+                            {"name": "WithoutConstants"}],
+        }},
+        {"name": "ComputeConfidence",
+         "parameters": {"name": "StandardConfidence"}},
+        {"name": "GetRules"},
+    ]
+    cols = ["head", "atoms", "support", "body_size", "cwa_confidence"]
+    try:
+        res = _rows(run_pipeline_json(spark, tasks).select(*cols))
+        assert len(collects) == 1 and len(cached) == 1
+    finally:
+        for df in cached:
+            df.unpersist()
+    assert res
+    assert res == _rows(run_pipeline_json(
+        spark, [t for t in tasks if t["name"] != "CacheIndex"]
+    ).select(*cols))
+
+
 def test_invalid_bindings_raise(spark):
     with pytest.raises(PipelineError, match="Invalid first task"):
         run_pipeline_json(spark, [{"name": "Mine", "parameters": {}}])

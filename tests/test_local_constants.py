@@ -12,17 +12,24 @@ injectivity modes.
 from __future__ import annotations
 
 import random
+import sys
 
 import pytest
+from pyspark import InheritableThread
 from pyspark.sql import functions as F
 
 from rdfrules_spark.dictionary import encode_triples
 from rdfrules_spark.mining import amie as amie_mod
 from rdfrules_spark.mining import constants as constants_mod
+from rdfrules_spark.mining import local_constants as local_mod
 from rdfrules_spark.mining import measures_constants as measures_constants_mod
 from rdfrules_spark.mining.amie import MiningParams, mine
 from rdfrules_spark.mining.constants import mine_constants
-from rdfrules_spark.mining.local_constants import collect_local
+from rdfrules_spark.mining.local_constants import (
+    LOCAL_TRIPLES_MAX,
+    collect_local,
+    collect_spo,
+)
 from rdfrules_spark.mining.measures import confidences
 from rdfrules_spark.mining.measures_constants import (
     confidences_constants,
@@ -453,3 +460,152 @@ def test_var_only_empty_ruleset(spark, kg):
     assert _rows(loc)[1] == []
     assert _rows(confidences(loc, kg)) == _rows(
         confidences(loc, kg, local_threshold=0))
+
+
+# ------------------------------------------------- held triples (memo)
+
+
+def _in_group(sc, group, fn, *args):
+    """``fn(*args)`` and the Spark jobs it ran, counted by job group."""
+    sc.setJobGroup(group, group)
+    try:
+        out = fn(*args)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def held(spark, kg, monkeypatch):
+    """A freshly cached copy of the KG, a spy on the gate's bounded
+    collect, and the copy's row count; unpersisted afterwards."""
+    t = kg.select("s", "p", "o").repartition(4).cache()
+    n = t.count()
+    calls = _spy(monkeypatch, local_mod, "collect_local")
+    yield t, calls, n
+    t.unpersist()
+
+
+def test_gate_holds_a_cached_input(spark, held):
+    """A second gated call on a cached input gets the same frame and runs
+    no Spark job; the mining then scoring pair collects it once."""
+    t, calls, n = held
+    sc = spark.sparkContext
+    first, jobs = _in_group(sc, "held_first", collect_spo, t, n)
+    assert jobs >= 1 and len(calls) == 1
+    assert len(first) == n
+    again, jobs = _in_group(sc, "held_again", collect_spo,
+                            t.select("s", "p", "o"), n)
+    assert again is first and jobs == 0 and len(calls) == 1
+    params = MiningParams(min_head_size=5, min_support=2,
+                          min_head_coverage=0.05)
+    rules = mine(t, params).cache()
+    assert confidences(rules, t).count() == rules.count() > 0
+    rules.unpersist()
+    crules = mine_constants(t, params, constants="object")
+    assert confidences_constants(crules, t).count() == crules.count() > 0
+    assert len(calls) == 1
+
+
+def test_unpersist_drops_the_held_copy(spark, held):
+    """``unpersist`` makes the next gated call collect again, and the
+    copy it held is gone."""
+    t, calls, n = held
+    before = set(local_mod._HELD)
+    collect_spo(t, n)
+    keys = set(local_mod._HELD) - before
+    assert len(keys) == 1
+    t.unpersist()
+    assert collect_spo(t, n) is not None and len(calls) == 2
+    assert not keys & set(local_mod._HELD)
+
+
+def test_recached_new_data_is_not_stale(spark, tmp_path, monkeypatch):
+    """After an unpersist, new data at the same path and a re-cache, the
+    gate returns the new rows."""
+    calls = _spy(monkeypatch, local_mod, "collect_local")
+    path = str(tmp_path / "t")
+
+    def cached(rows):
+        spark.createDataFrame(rows, "s string, p string, o string") \
+            .write.mode("overwrite").parquet(path)
+        t = spark.read.parquet(path).cache()
+        t.count()
+        return t
+
+    t = cached([("a", "p", "b"), ("b", "p", "c")])
+    assert sorted(map(tuple, collect_spo(t, 10).to_numpy())) == [
+        ("a", "p", "b"), ("b", "p", "c")]
+    t.unpersist()
+    t = cached([("x", "q", "y")])
+    assert sorted(map(tuple, collect_spo(t, 10).to_numpy())) == [
+        ("x", "q", "y")]
+    assert len(calls) == 2
+    t.unpersist()
+
+
+def test_uncached_input_is_collected_each_call(spark, kg, monkeypatch):
+    """An uncached or filtered input is probed on every call."""
+    calls = _spy(monkeypatch, local_mod, "collect_local")
+    uncached = kg.select("s", "p", "o").repartition(3)
+    filtered = kg.where(F.col("p") != "p0")
+    for t in (uncached, uncached, filtered, filtered):
+        assert collect_spo(t, LOCAL_TRIPLES_MAX) is not None
+    assert len(calls) == 4
+
+
+def test_over_bound_is_reprobed_at_a_larger_bound(spark, held):
+    """An over-bound probe is kept: the same or a smaller bound returns
+    None without a job, a larger one probes again."""
+    t, calls, n = held
+    sc = spark.sparkContext
+    assert collect_spo(t, n - 1) is None and len(calls) == 1
+    for bound in (n - 1, n // 2):
+        out, jobs = _in_group(sc, f"over_{bound}", collect_spo, t, bound)
+        assert out is None and jobs == 0
+    assert len(calls) == 1
+    assert len(collect_spo(t, n)) == n and len(calls) == 2
+    assert collect_spo(t, n - 1) is None and len(calls) == 2
+
+
+def test_held_input_still_forces_distributed(spark, held, monkeypatch):
+    """``local_threshold=0`` runs the distributed plan on a held input,
+    and its rows are the driver-local ones."""
+    t, calls, n = held
+    local = _spy(monkeypatch, constants_mod, "mine_constants_local")
+    params = MiningParams(min_head_size=5, min_support=2,
+                          min_head_coverage=0.05, injective=True)
+    loc = {_rule_key(r): (r["support"], r["head_size"])
+           for r in mine_constants(t, params, constants="object").collect()}
+    assert len(local) == 1 and len(calls) == 1
+    dist = {_rule_key(r): (r["support"], r["head_size"])
+            for r in mine_constants(t, params, constants="object",
+                                    local_threshold=0).collect()}
+    assert len(local) == 1 and len(calls) == 1
+    assert loc and loc == dist
+
+
+def test_threads_share_one_collect(spark, held):
+    """Threads gating the same cached input (HTTP tasks run on
+    InheritableThreads), more of them than cores, get one frame from one
+    collect."""
+    t, calls, n = held
+    out = [None] * 8
+
+    def gate(i):
+        out[i] = collect_spo(t, n)
+
+    threads = [InheritableThread(target=gate, args=(i,))
+               for i in range(len(out))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(th.is_alive() for th in threads)
+    assert out[0] is not None and len(out[0]) == n
+    assert all(o is out[0] for o in out) and len(calls) == 1
