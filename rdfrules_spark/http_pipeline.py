@@ -974,10 +974,10 @@ def _ruleset_task(spark, state: PipelineState, name: str, params: dict):
         preds = predict_triples(var_rules, state.triples, conf_col=conf)
         kept = cba_prune(preds, var_rules.drop("head", "atoms"))
         # null-safe semi-join back (r/d2 are null for l2 rules)
-        from rdfrules_spark.prediction import _null_safe_join
+        from rdfrules_spark.mining.measures import _combo_join
 
         keys = ["p", "shape", "q", "d1", "r", "d2"]
-        back = _null_safe_join(
+        back = _combo_join(
             var_rules.select("head", "atoms", *keys),
             kept.select(*keys), keys, "left_semi",
         )

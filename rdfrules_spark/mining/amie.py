@@ -41,7 +41,7 @@ Rule row schema:
 Driver-local gate: one gate serves both tiers. Below
 ``local_constants.LOCAL_TRIPLES_MAX`` triples ``mine`` runs the constants
 tier's driver-local miner without constants (the same l2/l3v2/l3v3 laws
-in DuckDB), as mining/measures.confidences does with its combo laws; the
+in DuckDB), as mining/measures.confidences runs its SQL text there; the
 staged jobs above stay the path for larger inputs and for the settings
 that miner does not honour (see ``_local_ok``).
 """
@@ -324,6 +324,21 @@ def _finish(agg: DataFrame, heads: DataFrame, params: MiningParams) -> DataFrame
     )
 
 
+def _head_atoms(triples: DataFrame, params: MiningParams) -> DataFrame:
+    """The atoms over a head triple's pair, m = head ⋈ B: (x, y, p, q, d,
+    tid), which l2 aggregates and l3v2 self-joins. The head atom itself
+    and atoms binding the head triple are excluded (distinct-triple
+    support, see mine_l2)."""
+    h = _head_rel(triples, params, "x", "y")
+    return (
+        h.join(_b(triples), ["x", "y"])
+        .where((F.col("q") != F.col("p")) | (F.col("d") != "f"))
+        .withColumn("tid", _btid())
+        .where(F.col("tid") != F.xxhash64(F.col("x"), F.col("p"), F.col("y")))
+        .select("x", "y", "p", "q", "d", "tid")
+    )
+
+
 def mine_l2(triples: DataFrame, heads: DataFrame, params: MiningParams) -> DataFrame:
     """(?a p ?b) <- (?a q ?b) | (?b q ?a): one self-join on the head pair.
 
@@ -333,16 +348,15 @@ def mine_l2(triples: DataFrame, heads: DataFrame, params: MiningParams) -> DataF
     (RuleFilter.scala NoRepeatedGroups deprecation note, VariableMap.scala
     :5-12; pinned by the AmieSpec dup-predicate goldens 124/51143). Only
     same-predicate (duplicate-predicate) atoms can collide, so the filters
-    below are no-ops for constraint-free configs."""
-    h = _head_rel(triples, params, "x", "y")
-    b = _b(triples)
-    j = h.join(b, ["x", "y"]).where(
-        (F.col("q") != F.col("p")) | (F.col("d") != "f")  # exclude head atom
-    ).where(
-        _btid() != F.xxhash64(F.col("x"), F.col("p"), F.col("y"))
-    )
+    are no-ops for constraint-free configs."""
+    return _l2_rules(_head_atoms(triples, params), triples, heads, params)
+
+
+def _l2_rules(m: DataFrame, triples: DataFrame, heads: DataFrame,
+              params: MiningParams) -> DataFrame:
+    """mine_l2 over the head-atom relation ``m`` (``_head_atoms``)."""
     agg = _scale_support(
-        j.groupBy("p", "q", F.col("d").alias("d1")).agg(
+        m.groupBy("p", "q", F.col("d").alias("d1")).agg(
             F.count(F.lit(1)).alias("support")  # head triples are distinct pairs
         ),
         params,
@@ -360,14 +374,13 @@ def mine_l2(triples: DataFrame, heads: DataFrame, params: MiningParams) -> DataF
 def mine_l3_2var(triples: DataFrame, heads: DataFrame, params: MiningParams) -> DataFrame:
     """(?a p ?b) <- A1, A2 over the same var pair: per head triple collect
     matching atoms, count unordered atom pairs."""
-    h = _head_rel(triples, params, "x", "y")
-    b = _b(triples)
-    m = h.join(b, ["x", "y"]).where(
-        (F.col("q") != F.col("p")) | (F.col("d") != "f")
-    ).withColumn("tid", _btid()).where(
-        F.col("tid") != F.xxhash64(F.col("x"), F.col("p"), F.col("y"))
-    )
-    m1 = m.select("x", "y", "p", F.col("q").alias("q"), F.col("d").alias("d1"),
+    return _l3v2_rules(_head_atoms(triples, params), triples, heads, params)
+
+
+def _l3v2_rules(m: DataFrame, triples: DataFrame, heads: DataFrame,
+                params: MiningParams) -> DataFrame:
+    """mine_l3_2var over the head-atom relation ``m`` (``_head_atoms``)."""
+    m1 = m.select("x", "y", "p", "q", F.col("d").alias("d1"),
                   F.col("tid").alias("tid1"))
     m2 = m.select("x", "y", "p", F.col("q").alias("r"), F.col("d").alias("d2"),
                   F.col("tid").alias("tid2"))
@@ -513,48 +526,12 @@ def mine(
         return rules
     if params.max_rule_length >= 3:
         # l2 and l3v2 both derive from the SAME head-joined atom relation
-        # m = head ⋈ B (l2 aggregates it, l3v2 self-joins it) — materialize
-        # m once instead of recomputing the 1M⋈2M join three times
-        h = _head_rel(triples, params, "x", "y")
-        m = (
-            h.join(_b(triples), ["x", "y"])
-            .where((F.col("q") != F.col("p")) | (F.col("d") != "f"))
-            .withColumn("tid", _btid())
-            .where(F.col("tid") != F.xxhash64(F.col("x"), F.col("p"), F.col("y")))
-            .select("x", "y", "p", "q", "d", "tid")
-            .localCheckpoint(eager=True)
-        )
-        p_type = dict(triples.dtypes)["p"]
-        agg2 = _scale_support(
-            m.groupBy("p", "q", F.col("d").alias("d1")).agg(
-                F.count(F.lit(1)).alias("support")
-            ),
-            params,
-            triples,
-        ).select(
-            "p", F.lit("l2").alias("shape"), "q", "d1",
-            F.lit(None).cast(p_type).alias("r"),
-            F.lit(None).cast("string").alias("d2"), "support",
-        )
-        rules = _finish(agg2, heads, params)
-        m1 = m.select("x", "y", "p", "q", F.col("d").alias("d1"),
-                      F.col("tid").alias("tid1"))
-        m2 = m.select("x", "y", "p", F.col("q").alias("r"),
-                      F.col("d").alias("d2"), F.col("tid").alias("tid2"))
-        pairs = m1.join(m2, ["x", "y", "p"]).where(
-            (F.col("q") < F.col("r"))
-            | ((F.col("q") == F.col("r")) & (F.col("d1") < F.col("d2")))
-        ).where(F.col("tid1") != F.col("tid2"))
-        agg3 = _scale_support(
-            pairs.groupBy("p", "q", "d1", "r", "d2").agg(
-                F.count(F.lit(1)).alias("support")
-            ),
-            params,
-            triples,
-        ).select("p", F.lit("l3v2").alias("shape"), "q", "d1", "r", "d2",
-                 "support")
-        rules = rules.unionByName(_finish(agg3, heads, params))
-        rules = rules.unionByName(mine_l3_3var(triples, heads, params))
+        # (l2 aggregates it, l3v2 self-joins it) — materialize it once
+        # instead of recomputing the 1M⋈2M join three times
+        m = _head_atoms(triples, params).localCheckpoint(eager=True)
+        rules = _l2_rules(m, triples, heads, params).unionByName(
+            _l3v2_rules(m, triples, heads, params)
+        ).unionByName(mine_l3_3var(triples, heads, params))
     else:
         rules = mine_l2(triples, heads, params)
     return _top_k(rules, params.top_k)

@@ -1,22 +1,39 @@
-"""The confidence laws of the constants shapes s4-s9 as one SQL text, run
-by two executors:
+"""The confidence laws of every rule shape as SQL text, run by two
+executors:
 
   * below the driver-local gate, DuckDB over the integer-coded tables of
     mining/local_constants.py (``text.format(T=..., R=..., inj=...)``
     naming registered frames); binding sets never leave DuckDB;
-  * above it, Spark SQL in mining/measures_constants.py
+  * above it, Spark SQL through mining/measures.spark_sql
     (``spark.sql(text, T=df, R=df, inj=bool)``, which names the frames by
     temporary views dropped after analysis).
 
 Inputs:
   {T}    the triples (s, p, o);
+  {inj}  True for injective mappings (Ruleset.computeConfidence default).
+  {R}    the rule table, one row per rule, of the text's shape family.
+
+The var-only shapes l2/l3v2/l3v3 (VAR_COUNTS, VAR_PAIRS; RuleCounting.scala
+:66-96 and :235-296): {R} holds rid, shape, p, q, d1, r, d2 in
+mining/amie.py's key schema with 0/1 directions (d = 1 for 'i': the atom
+binds (x, y) as (o, s)). An l2 row carries r = q and d2 = d1, so every key
+is non-null and both dialects join on plain equality. Body pairs (P) are
+the distinct (?a, ?b) bindings, found once per distinct (shape, q, d1, r,
+d2) combo; under ``inj`` the variables bind pairwise-distinct values.
+body_size counts the pairs; for l2 it is the size of its predicate (PS:
+the facts, only the non-reflexive ones under ``inj``). pca_body_size
+counts the pairs whose head entity on p's higherCardinalitySide (HS) is
+an entity of p there. A size is a count of at least 1 or NULL (no pair,
+no fact of the l2 predicate, or a head predicate without facts), never
+0, so a division by it cannot raise under ANSI mode.
+
+The constants shapes s4-s9 (COUNTS, RAW_PREDICTIONS):
   {R}    one row per s4-s9 rule: rid, shape, p, hside, fvpos, hA (the head
          constant), a1q/a1d and a2q/a2d (the variable-variable atoms, d = 0
          when the free variable, or ?a in a variable head, is their
          subject), c1u/c1q2/c1cst/c1e and c2u/c2q2/c2cst/c2e (the
          instantiated atoms, u = 0 when their variable is ?a, e = 0 when it
          is the subject). Columns a shape does not use hold anything.
-  {inj}  True for injective mappings (Ruleset.computeConfidence default).
 Position tags are 0 = subject, 1 = object throughout (hside, fvpos, e).
 
 Semantics (RuleCounting.scala:235-296, AtomCounting.scala:159-216):
@@ -60,12 +77,11 @@ from __future__ import annotations
 #: rule shapes whose laws this text holds
 SQL_SHAPES = ("s4", "s5", "s6", "s7", "s8", "s9")
 
-_BINDINGS = """
+#: the relations of the triples both families read: BB the
+#: direction-tagged atoms, PS the predicate sizes (non-reflexive facts
+#: under ``inj``), SE the distinct entities of each predicate side
+_TRIPLES = """
 WITH
-E AS (
-  SELECT p AS q2, o AS cst, 0 AS e, s AS x FROM {T}
-  UNION ALL
-  SELECT p AS q2, s AS cst, 1 AS e, o AS x FROM {T}),
 BB AS (
   SELECT s AS x, o AS y, p AS q, 0 AS d FROM {T}
   UNION ALL
@@ -73,6 +89,16 @@ BB AS (
 PS AS (
   SELECT p AS q, count(*) AS n FROM {T}
   WHERE NOT {inj} OR s <> o GROUP BY p),
+SE AS (
+  SELECT p, 0 AS pos, s AS x FROM {T}
+  UNION
+  SELECT p, 1 AS pos, o AS x FROM {T})"""
+
+_BINDINGS = _TRIPLES + """,
+E AS (
+  SELECT p AS q2, o AS cst, 0 AS e, s AS x FROM {T}
+  UNION ALL
+  SELECT p AS q2, s AS cst, 1 AS e, o AS x FROM {T}),
 CS AS (
   SELECT q2, cst, e, count(*) AS n FROM E
   WHERE x <> cst GROUP BY q2, cst, e),
@@ -165,7 +191,6 @@ def _s5_law(p: str) -> str:
 #: (module docstring); rules without one are absent (null sizes after a
 #: left join)
 COUNTS = _BINDINGS + f""",
-SE AS (SELECT DISTINCT q2 AS p, e AS pos, x FROM E),
 NE AS (SELECT p, pos, count(*) AS n FROM SE GROUP BY p, pos),
 G AS (SELECT rid, v, w, bool_or(keep) AS k FROM B GROUP BY rid, v, w),
 M AS (
@@ -246,4 +271,62 @@ SELECT a.rid, a.x AS s, b.x AS o
 FROM X a
 JOIN X b ON b.rid = a.rid AND b.side = 1
 WHERE a.side = 0 AND (NOT {inj} OR a.x <> b.x)
+"""
+
+#: the var-only body pairs P(shape, q, d1, r, d2, a, b) (module docstring)
+_PAIRS = _TRIPLES + """,
+K AS (SELECT DISTINCT shape, q, d1, r, d2 FROM {R}),
+P AS (
+  SELECT k.shape, k.q, k.d1, k.r, k.d2, b1.x AS a, b1.y AS b
+  FROM K k JOIN BB b1 ON b1.q = k.q AND b1.d = k.d1
+  WHERE k.shape = 'l2' AND (NOT {inj} OR b1.x <> b1.y)
+  UNION
+  SELECT k.shape, k.q, k.d1, k.r, k.d2, b1.x AS a, b1.y AS b
+  FROM K k
+  JOIN BB b1 ON b1.q = k.q AND b1.d = k.d1
+  JOIN BB b2 ON b2.q = k.r AND b2.d = k.d2
+            AND b2.x = b1.x AND b2.y = b1.y
+  WHERE k.shape = 'l3v2' AND (NOT {inj} OR b1.x <> b1.y)
+  UNION
+  SELECT k.shape, k.q, k.d1, k.r, k.d2, b1.x AS a, b2.x AS b
+  FROM K k
+  JOIN BB b1 ON b1.q = k.q AND b1.d = k.d1
+  JOIN BB b2 ON b2.q = k.r AND b2.d = k.d2 AND b2.y = b1.y
+  WHERE k.shape = 'l3v3' AND (NOT {inj}
+        OR (b1.x <> b2.x AND b1.y <> b1.x AND b1.y <> b2.x)))"""
+
+#: (shape, q, d1, r, d2, a, b): the distinct body pairs of the var-only
+#: combos of {R} (prediction, QPCA and support recounts read them)
+VAR_PAIRS = _PAIRS + """
+SELECT shape, q, d1, r, d2, a, b FROM P
+"""
+
+#: (rid, body_size, pca_body_size) for every var-only rule of {R}; C
+#: counts each combo's pairs once per head predicate, all of them (body)
+#: and those inside the PCA restriction (pca)
+VAR_COUNTS = _PAIRS + """,
+HS AS (
+  SELECT p, CASE WHEN count(*) FILTER (WHERE pos = 0)
+                      >= count(*) FILTER (WHERE pos = 1)
+                 THEN 0 ELSE 1 END AS hside
+  FROM SE GROUP BY p),
+KP AS (
+  SELECT DISTINCT f.shape, f.p, f.q, f.d1, f.r, f.d2, h.hside
+  FROM {R} f LEFT JOIN HS h ON h.p = f.p),
+C AS (
+  SELECT kp.shape, kp.p, kp.q, kp.d1, kp.r, kp.d2,
+         count(*) AS body, count(se.x) AS pca
+  FROM KP kp
+  JOIN P pr ON pr.shape = kp.shape AND pr.q = kp.q AND pr.d1 = kp.d1
+           AND pr.r = kp.r AND pr.d2 = kp.d2
+  LEFT JOIN SE se ON se.p = kp.p AND se.pos = kp.hside
+       AND se.x = CASE WHEN kp.hside = 0 THEN pr.a ELSE pr.b END
+  GROUP BY kp.shape, kp.p, kp.q, kp.d1, kp.r, kp.d2)
+SELECT f.rid,
+       CASE WHEN f.shape = 'l2' THEN ps.n ELSE c.body END AS body_size,
+       nullif(c.pca, 0) AS pca_body_size
+FROM {R} f
+LEFT JOIN PS ps ON ps.q = f.q
+LEFT JOIN C c ON c.shape = f.shape AND c.p = f.p AND c.q = f.q
+             AND c.d1 = f.d1 AND c.r = f.r AND c.d2 = f.d2
 """

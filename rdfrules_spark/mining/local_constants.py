@@ -21,15 +21,15 @@ a cached input, or the largest bound it was seen to exceed, for as long
 as Spark keeps that cache, so mining and then scoring one cached triple
 set crosses the Arrow boundary once. ``amie.mine`` runs
 ``mine_constants_local`` without constants, in amie's row schema
-(``var_keys``); ``measures.confidences`` sends its
-(p, q, d1, r, d2) keys straight to ``_var_sizes``, the var-only size laws
-``confidences_constants_local`` applies after parsing canonical rules
-(``_var_combos``). Within the bounds they run the
-IDENTICAL staged algebra — same survivor-set gating, same distinct-triple
-/ injective laws, same PCA branch machinery — as DuckDB SQL over
-integer-coded terms, with numpy for the per-rule law assembly and the
-canonical-string emission. Above either bound the distributed path is
-untouched — the 100 TB posture always takes the distributed loop.
+(``var_keys``); ``measures.confidences`` sends its rules to
+``confidences_local``, which codes their (p, q, d1, r, d2) keys into the
+var rule table of mining/inst_sql.py, as ``confidences_constants_local``
+does for canonical var-only rules (``_var_combos``). Within the bounds
+the miner runs the IDENTICAL staged algebra — same survivor-set gating,
+same distinct-triple / injective laws — as DuckDB SQL over
+integer-coded terms, with numpy for the canonical-string emission. Above
+either bound the distributed path is untouched — the 100 TB posture
+always takes the distributed loop.
 
 Engine choice, measured: a pure pandas-merge transliteration of the same
 algebra ran 245 s on the task13 input (single-threaded block copies at
@@ -41,16 +41,17 @@ oracle for the registry remains the independent DuckDB SQL written per
 query, and the hard parity anchors are the executed-reference dumps, not
 any SQL engine.
 
-One SQL text, two executors: the constants shapes s4-s9 have no twin
-confidence code here. Their binding sets, injective exclusions, s5's
-factorized product law and the PCA laws are the SQL text of
+One SQL text, two executors: no confidence law has a twin here. The
+body pairs and sizes of the var-only shapes (VAR_COUNTS) and the binding
+sets, injective exclusions, s5's factorized product law and PCA laws of
+the constants shapes s4-s9 (COUNTS) are the SQL text of
 mining/inst_sql.py, which DuckDB runs below the gate over the
-integer-coded triples (``_inst_sizes``) and Spark SQL runs above it
-(measures_constants.confidences_constants / qpca_constants).
+integer-coded triples (``_sql_local``) and Spark SQL runs above it
+(measures.confidences, measures_constants.confidences_constants /
+qpca_constants).
 
-The miner and the var-only confidences are a 1:1 transliteration of the
-Spark expressions (reference cites live in mining/constants.py and
-mining/measures.py; RuleRefinement.scala / RuleCounting.scala /
+The miner is a 1:1 transliteration of the Spark expressions (reference
+cites live in mining/constants.py; RuleRefinement.scala /
 AtomCounting.scala). Parity is pinned three ways: the existing golden /
 brute-oracle (tests/oracles) / executed-reference suites
 (tests/test_constants_mining.py, test_refexec_parity.py,
@@ -70,8 +71,8 @@ Implementation notes:
     equality is ever tested, so any injective id is equivalent);
   * a missing or zero size gives a NULL confidence on both paths
     (distributed confidences_constants divides with try_divide, since
-    ANSI division by zero raises; measures.confidences sizes are never
-    zero).
+    ANSI division by zero raises; a var-only size is a count of at least
+    1 or NULL, never zero).
 """
 
 from __future__ import annotations
@@ -83,7 +84,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from rdfrules_spark.mining.inst_sql import COUNTS, SQL_SHAPES
+from rdfrules_spark.mining.inst_sql import COUNTS, SQL_SHAPES, VAR_COUNTS
 
 #: input triples at or below which mining and confidences run on the driver.
 #: The bound is set by driver memory, not time: on bench.py's synth_kg
@@ -284,9 +285,8 @@ def _group(*arrays: np.ndarray):
         np.int64
     )
     for c in arrays[1:]:
-        # factorize each column first: compacts the range AND maps
-        # negative sentinel values (e.g. the l2 combos' r = d2 = -1)
-        # to valid codes, keeping the pack bijective
+        # factorize each column first: compacts the range, keeping the
+        # pack bijective
         cc = pd.factorize(np.asarray(c, dtype=np.int64))[0].astype(np.int64)
         m = int(cc.max()) + 1 if len(cc) else 1
         key = pd.factorize(key * m + cc)[0].astype(np.int64)
@@ -294,19 +294,6 @@ def _group(*arrays: np.ndarray):
         return key, np.empty(0, dtype=np.int64)
     _, first = np.unique(key, return_index=True)
     return key, first
-
-
-def _nunique(gid: np.ndarray, n_groups: int, sub: np.ndarray) -> np.ndarray:
-    """countDistinct(sub) per group -> int64 array of length n_groups."""
-    subc = pd.factorize(sub)[0].astype(np.int64)
-    pack = int(subc.max()) + 1 if len(subc) else 1
-    uk = np.unique(gid * pack + subc)
-    return np.bincount(uk // pack, minlength=n_groups).astype(np.int64)
-
-
-def _pair(a: np.ndarray, b: np.ndarray, n: int) -> np.ndarray:
-    """Pack an entity pair into one int64 (n = size of the code space)."""
-    return a * np.int64(n) + b
 
 
 def _cat(*parts) -> np.ndarray:
@@ -344,33 +331,11 @@ def _sorted_pair(a1: np.ndarray, a2: np.ndarray):
     return lo, hi
 
 
-def _semi(left: pd.DataFrame, right: pd.DataFrame, on: list[str]):
-    return left.merge(right[on].drop_duplicates(), on=on, how="inner")
-
-
 def _anti(left: pd.DataFrame, right: pd.DataFrame, on: list[str]):
     m = left.merge(
         right[on].drop_duplicates(), on=on, how="left", indicator=True
     )
     return m[m["_merge"] == "left_only"].drop(columns="_merge")
-
-
-def _gcount(df: pd.DataFrame, cols: list[str]) -> pd.DataFrame:
-    """Row count per group (F.count) -> unique key rows + 'support'."""
-    gid, first = _group(*[df[c].to_numpy() for c in cols])
-    out = df.iloc[first][cols].reset_index(drop=True)
-    out["support"] = np.bincount(gid, minlength=len(first)).astype(np.int64)
-    return out
-
-
-def _gcount_distinct(
-    df: pd.DataFrame, cols: list[str], sub: np.ndarray
-) -> pd.DataFrame:
-    """countDistinct(sub) per group -> unique key rows + 'support'."""
-    gid, first = _group(*[df[c].to_numpy() for c in cols])
-    out = df.iloc[first][cols].reset_index(drop=True)
-    out["support"] = _nunique(gid, len(first), sub)
-    return out
 
 
 def _b_local(enc: _Enc) -> pd.DataFrame:
@@ -1215,56 +1180,10 @@ def _vv_fields(R: pd.DataFrame, col: str, primary, prefix: str):
     }, index=R.index)
 
 
-class _Rel:
-    """Shared var-only confidence relations over the coded triple set:
-    entities per predicate side (SE), hside per predicate, the body
-    relation and predicate sizes, plus packed-key membership tests."""
-
-    def __init__(self, enc: _Enc, injective: bool):
-        self.enc = enc
-        n = len(enc.sc)
-        self.N = enc.n_terms  # NOTE: may grow via map_terms; pack later
-        se = pd.DataFrame({
-            "p": np.concatenate([enc.pc, enc.pc]),
-            "pos": np.concatenate([np.zeros(n, np.int64),
-                                   np.ones(n, np.int64)]),
-            "x": np.concatenate([enc.sc, enc.oc]),
-        }).drop_duplicates()
-        self.SE = se.reset_index(drop=True)
-        g = pd.DataFrame({"p": enc.pc, "s": enc.sc, "o": enc.oc}).groupby(
-            "p", sort=False
-        ).agg(ns=("s", "nunique"), no=("o", "nunique"))
-        self.hside_by_code = np.full(self.N, -1, dtype=np.int64)
-        self.hside_by_code[g.index.to_numpy()] = np.where(
-            g["ns"].to_numpy() >= g["no"].to_numpy(), 0, 1
-        )
-        self.b = _b_local(enc).drop(columns="tid")
-        # psize: scoreAtom for 2-var atoms (non-reflexive under injective)
-        mask = (enc.sc != enc.oc) if injective else np.ones(n, dtype=bool)
-        self.psz_by_code = np.zeros(self.N, dtype=np.int64)
-        np.add.at(self.psz_by_code, enc.pc[mask], 1)
-        # plain predicate sizes (body_sizes l2 uses the same mask)
-        self._se_keys = None
-
-    def se_member(self, p, pos, x) -> np.ndarray:
-        """Membership in SE(p, pos, x) — vectorized."""
-        if self._se_keys is None:
-            k = (self.SE["p"].to_numpy() * 2 + self.SE["pos"].to_numpy()
-                 ) * np.int64(self.N) + self.SE["x"].to_numpy()
-            self._se_keys = np.sort(k)
-        q = (np.asarray(p) * 2 + np.asarray(pos)) * np.int64(self.N) + \
-            np.asarray(x)
-        idx = np.searchsorted(self._se_keys, q)
-        idx = np.minimum(idx, len(self._se_keys) - 1)
-        if not len(self._se_keys):
-            return np.zeros(len(q), dtype=bool)
-        return self._se_keys[idx] == q
-
-
 def _var_combos(R: pd.DataFrame) -> pd.DataFrame:
-    """The l2 / l3v2 / l3v3 rules of parsed canonical rules as coded
-    (rid, p, shape, q, d1, r, d2) in mining/amie.py's key schema: d = 0
-    for 'f', 1 for 'i'; r = d2 = -1 for l2."""
+    """The l2 / l3v2 / l3v3 rules of parsed canonical rules as
+    mining/inst_sql.py's coded var rule table (rid, p, shape, q, d1, r,
+    d2): d = 0 for 'f', 1 for 'i'; r = q and d2 = d1 for l2."""
     ua = R.attrs["ua"]
     vv = R[R["shape"].isin(VAR_SHAPES)]
     sh = vv["shape"].to_numpy()
@@ -1285,12 +1204,12 @@ def _var_combos(R: pd.DataFrame) -> pd.DataFrame:
         np.where(ua["s_var"][np.maximum(av, 0)] == "?a", 0, 1),
         np.where(s0 == "?a", 0, 1),
     ).astype(np.int64)
-    r = np.where(sh == "l2", -1, ua["q"][np.maximum(bv, 0)])
+    r = np.where(sh == "l2", q, ua["q"][np.maximum(bv, 0)])
     d2 = np.select(
         [sh == "l3v3", sh == "l3v2"],
         [np.where(ua["s_var"][np.maximum(bv, 0)] == "?b", 0, 1),
          np.where(s1 == "?a", 0, 1)],
-        -1,
+        d1,
     ).astype(np.int64)
     return pd.DataFrame({
         "rid": vv["rid"].to_numpy(), "p": vv["p"].to_numpy(),
@@ -1298,134 +1217,57 @@ def _var_combos(R: pd.DataFrame) -> pd.DataFrame:
     })
 
 
-def _var_sizes(comp: pd.DataFrame, rel: _Rel,
-               injective: bool) -> pd.DataFrame:
-    """body_size / pca_body_size of coded var-only rules (``_var_combos``
-    rows) — the measures.confidences combo-level laws, vectorized.
-    Returns (rid, body_size, pca_body_size) with NaN where the distributed
-    plan gives NULL: an l2 body predicate without (non-reflexive) facts, a
-    combo without body pairs, a head predicate without facts."""
-    N = rel.N
-    b = rel.b
-    outs = []
-    for shape in VAR_SHAPES:
-        cs = comp[comp["shape"] == shape]
-        if not len(cs):
-            continue
-        combos = cs[["q", "d1", "r", "d2"]].drop_duplicates()
-        if shape == "l2":
-            qs = combos["q"].drop_duplicates().to_numpy()
-            psz = rel.psz_by_code[qs]
-            bs = pd.DataFrame({
-                "q": qs, "body_size": np.where(psz > 0, psz, np.nan),
-            })
-            sized = cs.merge(bs, on="q", how="left")
-            pr = b.rename(columns={"d": "d1", "x": "a", "y": "bb"}).merge(
-                combos[["q", "d1"]].drop_duplicates(), on=["q", "d1"]
-            )
-            if injective:
-                pr = pr[pr["a"] != pr["bb"]]
-            pr = pr.reset_index(drop=True)
-        elif shape == "l3v2":
-            b1 = b.rename(columns={"x": "a", "y": "bb", "d": "d1"}).merge(
-                combos[["q", "d1"]].drop_duplicates(), on=["q", "d1"]
-            )
-            b2 = b.rename(columns={"x": "a", "y": "bb", "q": "r",
-                                   "d": "d2"}).merge(
-                combos[["r", "d2"]].drop_duplicates(), on=["r", "d2"]
-            )
-            j = b1.merge(b2, on=["a", "bb"])
-            j = _semi(j, combos, ["q", "d1", "r", "d2"])
-            if injective:
-                j = j[j["a"] != j["bb"]]
-            pr = j.drop_duplicates(
-                subset=["q", "d1", "r", "d2", "a", "bb"]
-            ).reset_index(drop=True)
-            sized = cs.merge(
-                _gcount(pr, ["q", "d1", "r", "d2"]).rename(
-                    columns={"support": "body_size"}
-                ), on=["q", "d1", "r", "d2"], how="left",
-            )
-        else:  # l3v3
-            b1 = b.rename(columns={"x": "a", "y": "c", "d": "d1"}).merge(
-                combos[["q", "d1"]].drop_duplicates(), on=["q", "d1"]
-            )
-            b2 = b.rename(columns={"x": "bb", "y": "c", "q": "r",
-                                   "d": "d2"}).merge(
-                combos[["r", "d2"]].drop_duplicates(), on=["r", "d2"]
-            )
-            j = b1.merge(b2, on="c")
-            j = _semi(j, combos, ["q", "d1", "r", "d2"])
-            if injective:
-                j = j[(j["a"] != j["bb"]) & (j["c"] != j["a"])
-                      & (j["c"] != j["bb"])]
-            pr = j.drop_duplicates(
-                subset=["q", "d1", "r", "d2", "a", "bb"]
-            ).reset_index(drop=True)
-            sized = cs.merge(
-                _gcount_distinct(
-                    j.reset_index(drop=True), ["q", "d1", "r", "d2"],
-                    _pair(j["a"].to_numpy(), j["bb"].to_numpy(), N),
-                ).rename(columns={"support": "body_size"}),
-                on=["q", "d1", "r", "d2"], how="left",
-            )
-        # pca: expand distinct pairs to the combo's head predicates and
-        # keep pairs whose head entity on hside exists for p
-        ph = cs[["p", "q", "d1", "r", "d2"]].drop_duplicates()
-        ph = ph.assign(hside=rel.hside_by_code[ph["p"].to_numpy()])
-        ph = ph[ph["hside"] >= 0]
-        ex = pr.merge(ph, on=[c for c in ("q", "d1", "r", "d2")
-                              if c in pr.columns])
-        hv = np.where(ex["hside"].to_numpy() == 0, ex["a"].to_numpy(),
-                      ex["bb"].to_numpy())
-        keep = rel.se_member(ex["p"].to_numpy(), ex["hside"].to_numpy(), hv)
-        ex = ex[keep].reset_index(drop=True)
-        ps = _gcount(ex, ["p", "q", "d1", "r", "d2"]).rename(
-            columns={"support": "pca_body_size"}
+def _sql_local(text: str, R: pd.DataFrame, enc: _Enc,
+               injective: bool) -> pd.DataFrame | None:
+    """A text of mining/inst_sql.py in DuckDB over the coded triples and
+    the rule table ``R`` (None when ``R`` is empty). The binding sets stay
+    inside DuckDB (shipping them to Python measured 13 s of the task13
+    confidence pass); only rule-table sized counts come back, NULL sizes
+    as NaN."""
+    if not len(R):
+        return None
+    with _duck() as con:
+        con.register("r", R)
+        con.register(
+            "t", pd.DataFrame({"s": enc.sc, "p": enc.pc, "o": enc.oc})
         )
-        sized = sized.merge(ps, on=["p", "q", "d1", "r", "d2"], how="left")
-        outs.append(sized[["rid", "body_size", "pca_body_size"]])
-    if not outs:
-        return pd.DataFrame(columns=["rid", "body_size", "pca_body_size"])
-    return pd.concat(outs, ignore_index=True)
+        return con.execute(text.format(T="t", R="r", inj=injective)).df()
 
 
 def confidences_local(
     rules_pdf: pd.DataFrame, tpdf: pd.DataFrame, cwa: bool = True,
     pca: bool = True, min_confidence: float = 0.0, injective: bool = False,
 ) -> pd.DataFrame:
-    """Pandas replica of measures.confidences: the l2 / l3v2 / l3v3 rows
-    of var-schema rules (mining/amie.py; p/q/r of the triples' term type;
-    an l2 row's r is not read) with body_size, pca_body_size, cwa_confidence and
-    pca_confidence appended in that order, each only when its measure is
-    asked for. The sizes are exact, so ``min_confidence`` filters
-    cwa_confidence directly."""
+    """Driver-local replica of measures.confidences: the l2 / l3v2 /
+    l3v3 rows of var-schema rules (mining/amie.py; p/q/r of the triples'
+    term type; an l2 row's r must equal its q) with body_size,
+    pca_body_size, cwa_confidence and pca_confidence appended in that
+    order, each only when its measure is asked for. The sizes are
+    mining/inst_sql.py's VAR_COUNTS; they are exact, so
+    ``min_confidence`` filters cwa_confidence directly."""
     out = rules_pdf[rules_pdf["shape"].isin(VAR_SHAPES)].reset_index(
         drop=True
     )
     enc = _Enc(tpdf)
-    l2 = (out["shape"] == "l2").to_numpy()
-    r = np.full(len(out), -1, dtype=np.int64)
-    r[~l2] = enc.map_terms(out["r"].to_numpy(dtype=object)[~l2])
-    comp = pd.DataFrame({
+    d1 = (out["d1"] == "i").to_numpy()
+    R = pd.DataFrame({
         "rid": np.arange(len(out), dtype=np.int64),
-        "p": enc.map_terms(out["p"].to_numpy(dtype=object)),
         "shape": out["shape"].to_numpy(),
-        "q": enc.map_terms(out["q"].to_numpy(dtype=object)),
-        "d1": (out["d1"] == "i").to_numpy().astype(np.int64),
-        "r": r,
-        "d2": np.where(l2, -1, out["d2"] == "i").astype(np.int64),
+        **{c: enc.map_terms(out[c].to_numpy(dtype=object))
+           for c in ("p", "q", "r")},
+        "d1": d1.astype(np.int64),
+        "d2": np.where(out["shape"] == "l2", d1,
+                       out["d2"] == "i").astype(np.int64),
     })
-    # _Rel is built after map_terms so its code space covers rule-only terms
-    sizes = _var_sizes(comp, _Rel(enc, injective), injective).set_index(
-        "rid"
-    )
+    sizes = _sql_local(VAR_COUNTS, R, enc, injective)
     sup = out["support"].to_numpy(dtype=np.float64)
     measured = {}
     for size, conf, wanted in (("body_size", "cwa_confidence", cwa),
                                ("pca_body_size", "pca_confidence", pca)):
         if wanted:
-            n = sizes[size].reindex(comp["rid"]).to_numpy(dtype=np.float64)
+            n = (np.full(len(out), np.nan) if sizes is None else
+                 sizes.set_index("rid")[size].reindex(R["rid"])
+                 .to_numpy(dtype=np.float64))
             out[size] = pd.Series(n).astype("Int64")
             measured[conf] = sup / n
     out = out.assign(**measured)
@@ -1436,24 +1278,15 @@ def confidences_local(
 
 def _inst_sizes(R, enc, injective):
     """s4-s9 body/pca sizes: mining/inst_sql.py's COUNTS over the coded
-    triples. The binding sets stay inside DuckDB (shipping them to Python
-    measured 13 s of the task13 confidence pass); only the rule-table
-    sized counts come back, NULL sizes as NaN."""
+    triples."""
     ir = R[R["shape"].isin(SQL_SHAPES)]
-    if not len(ir):
-        return None
     fv = np.where(ir["fvpos"].to_numpy() == 0, "?a", "?b")
-    with _duck() as con:
-        con.register("ir", pd.concat([
-            ir[["rid", "shape", "p", "hside", "fvpos", "hA"]],
-            _vv_fields(ir, "_vv0", fv, "a1"),
-            _vv_fields(ir, "_vv1", fv, "a2"),
-            _ca_fields(ir, "_inst0", "c1"), _ca_fields(ir, "_inst1", "c2"),
-        ], axis=1))
-        con.register(
-            "t", pd.DataFrame({"s": enc.sc, "p": enc.pc, "o": enc.oc})
-        )
-        return con.execute(COUNTS.format(T="t", R="ir", inj=injective)).df()
+    return _sql_local(COUNTS, pd.concat([
+        ir[["rid", "shape", "p", "hside", "fvpos", "hA"]],
+        _vv_fields(ir, "_vv0", fv, "a1"),
+        _vv_fields(ir, "_vv1", fv, "a2"),
+        _ca_fields(ir, "_inst0", "c1"), _ca_fields(ir, "_inst1", "c2"),
+    ], axis=1), enc, injective)
 
 
 def confidences_constants_local(
@@ -1464,16 +1297,16 @@ def confidences_constants_local(
     pca_confidence); a zero size gives a NULL confidence, as there."""
     enc = _Enc(tpdf)
     R = _parse_rules(rules_pdf, enc)
-    # _Rel is built AFTER parsing so its code space (and hside table)
-    # covers codes added for rule-only terms
-    rel = _Rel(enc, injective)
     # R joins broadcast(side) INNER in the distributed path: rules whose
     # head predicate is absent from `triples` drop out entirely
-    R["hside"] = rel.hside_by_code[R["p"].to_numpy()]
+    side = _cpos_local(enc)
+    hside = np.full(enc.n_terms, -1, dtype=np.int64)
+    hside[side["p"].to_numpy()] = 1 - side["cpos"].to_numpy()
+    R["hside"] = hside[R["p"].to_numpy()]
     keep_mask = R["hside"].to_numpy() >= 0
     R = R[keep_mask].reset_index(drop=True)
     parts = [
-        _var_sizes(_var_combos(R), rel, injective),
+        _sql_local(VAR_COUNTS, _var_combos(R), enc, injective),
         _inst_sizes(R, enc, injective),
     ]
     parts = [p for p in parts if p is not None and len(p)]

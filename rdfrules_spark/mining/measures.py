@@ -11,8 +11,16 @@ definitions README.md:227-241):
 bodySize = #distinct (?a,?b) bindings of the body alone. The reference caps
 counting at support/minConf+1 (perf trick, RuleCounting.scala:79-83); we
 compute exact counts but only for the rules that survived mining — the
-body-pair joins are semi-filtered by the surviving (q,d1,r,d2) combos, so
+body pairs are found once per surviving (shape, q, d1, r, d2) combo, so
 the heavy path join never runs for pruned rules.
+
+One law, two executors: the body pairs and both sizes are the var-only
+SQL text of mining/inst_sql.py (VAR_PAIRS, VAR_COUNTS). Above the
+driver-local gate ``spark_sql`` runs it over the triples and the rules'
+var rule table (``_var_table``). Below ``local_constants.LOCAL_TRIPLES_MAX``
+triples and ``LOCAL_RULES_MAX`` rules, ``confidences()`` hands the rules
+to ``local_constants.confidences_local``, where DuckDB runs the same
+text, as it does for the constants tier's var-only rules.
 
 Join discipline: every rule-key join goes through _combo_join, which renames
 the right side's key columns before the null-safe equi-join. Joining two
@@ -20,17 +28,6 @@ DataFrames that share rule-table lineage on `left[k] == right[k]` silently
 degenerates (Spark resolves both sides to one attribute -> trivially-true
 predicate -> broadcast nested loop); the rename keeps the attributes
 distinct so Catalyst plans a proper hash join.
-
-`confidences()` computes CWA + PCA in ONE pass: body pairs per shape are
-materialized once (cached) and both sizes are derived from them — halves
-the dominant path-join cost vs calling the two functions separately.
-
-Driver-local gate: one gate serves both tiers. Below
-``local_constants.LOCAL_TRIPLES_MAX`` triples and ``LOCAL_RULES_MAX``
-rules, ``confidences()`` sends the rules' (p, q, d1, r, d2) keys to
-``local_constants._var_sizes``, the same combo laws the constants tier's
-driver-local confidences apply to its var-only rules; the plans below run
-above either bound.
 """
 
 from __future__ import annotations
@@ -40,9 +37,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rdfrules_spark.mining.amie import _b
+from rdfrules_spark.mining.inst_sql import VAR_COUNTS, VAR_PAIRS
 from rdfrules_spark.mining.local_constants import (
     LOCAL_RULES_MAX,
     LOCAL_TRIPLES_MAX,
+    VAR_SHAPES,
     collect_local,
     collect_triples,
     confidences_local,
@@ -74,145 +73,64 @@ def _combo_join(
     return left.join(ren, cond, how).drop(*["_" + k for k in keys])
 
 
-def _body_rel(
-    triples: DataFrame, rules: DataFrame, shape: str,
-    injective: bool = False,
-) -> DataFrame:
-    """Raw (?a,?b) body bindings per surviving rule combo of a shape
-    (NOT deduplicated — callers either .distinct() for the pair relation
-    or aggregate countDistinct for sizes)."""
-    b = _b(triples)
-    combos = rules.where(F.col("shape") == shape).select(*COMBO).distinct()
-    if shape == "l2":
-        bb = _combo_join(
-            b.withColumnRenamed("d", "d1"),
-            combos.select("q", "d1"), ["q", "d1"], broadcast_right=True,
-        )
-        if injective:
-            bb = bb.where(F.col("x") != F.col("y"))
-        p_type = dict(triples.dtypes)["p"]
-        return bb.select(
-            "q", "d1", F.lit(None).cast(p_type).alias("r"),
-            F.lit(None).cast("string").alias("d2"),
-            F.col("x").alias("a"), F.col("y").alias("b"),
-        )
-    if shape == "l3v2":
-        b1 = _combo_join(
-            b.select(F.col("x").alias("a"), F.col("y").alias("b"),
-                     "q", F.col("d").alias("d1")),
-            combos.select("q", "d1").distinct(), ["q", "d1"],
-            broadcast_right=True,
-        )
-        b2 = _combo_join(
-            b.select(F.col("x").alias("a"), F.col("y").alias("b"),
-                     F.col("q").alias("r"), F.col("d").alias("d2")),
-            combos.select("r", "d2").distinct(), ["r", "d2"],
-            broadcast_right=True,
-        )
-        j = _combo_join(b1.join(b2, ["a", "b"]), combos, COMBO,
-                        broadcast_right=True)
-        if injective:
-            j = j.where(F.col("a") != F.col("b"))
-        return j.select(*COMBO, "a", "b")
-    if shape == "l3v3":
-        b1 = _combo_join(
-            b.select(F.col("x").alias("a"), F.col("y").alias("c"),
-                     "q", F.col("d").alias("d1")),
-            combos.select("q", "d1").distinct(), ["q", "d1"],
-            broadcast_right=True,
-        )
-        b2 = _combo_join(
-            b.select(F.col("x").alias("b"), F.col("y").alias("c"),
-                     F.col("q").alias("r"), F.col("d").alias("d2")),
-            combos.select("r", "d2").distinct(), ["r", "d2"],
-            broadcast_right=True,
-        )
-        j = _combo_join(b1.join(b2, "c"), combos, COMBO, broadcast_right=True)
-        if injective:
-            j = j.where(
-                (F.col("a") != F.col("b"))
-                & (F.col("c") != F.col("a")) & (F.col("c") != F.col("b"))
-            )
-        return j.select(*COMBO, "a", "b")
-    raise ValueError(shape)
+def _side(triples: DataFrame) -> DataFrame:
+    """higherCardinalitySide per predicate ('s' or 'o';
+    TripleIndex.scala:155-169)."""
+    return triples.groupBy("p").agg(
+        F.countDistinct("s").alias("ns"), F.countDistinct("o").alias("no")
+    ).select(
+        "p", F.when(F.col("ns") >= F.col("no"), "s").otherwise("o").alias("hside")
+    )
+
+
+def spark_sql(text: str, triples: DataFrame, R: DataFrame,
+              injective: bool) -> DataFrame:
+    """A text of mining/inst_sql.py through ``spark.sql`` over the triples
+    and the rule table ``R``. spark.sql drops the temporary views it names
+    its DataFrame arguments by, and dropping a view uncaches every cached
+    plan with the same result — the caller's cached triples among them.
+    The marker column makes the triples argument a different plan, which
+    still reads that cache."""
+    return triples.sparkSession.sql(
+        text, T=triples.select("s", "p", "o").withColumn("_arg", F.lit(1)),
+        R=R, inj=injective,
+    )
+
+
+def _var_table(rules: DataFrame, rid: str) -> DataFrame:
+    """The var-only rows of ``rules`` as mining/inst_sql.py's var rule
+    table, rid from the SQL expression ``rid``: directions 0 = 'f',
+    1 = 'i'; an l2 row's r = q and d2 = d1."""
+    return rules.where(F.col("shape").isin(*VAR_SHAPES)).selectExpr(
+        f"{rid} AS rid", "shape", "p", "q",
+        "CASE WHEN d1 = 'i' THEN 1 ELSE 0 END AS d1", "coalesce(r, q) AS r",
+        "CASE WHEN coalesce(d2, d1) = 'i' THEN 1 ELSE 0 END AS d2",
+    )
 
 
 def body_pairs(
     triples: DataFrame, rules: DataFrame, shape: str,
     injective: bool = False,
 ) -> DataFrame:
-    """Distinct (?a,?b) body bindings per surviving rule combo of a shape.
+    """Distinct (?a,?b) body bindings per surviving rule combo of a shape:
+    (q, d1, r, d2, a, b), r and d2 null for l2 — mining/inst_sql.py's
+    VAR_PAIRS.
 
     ``injective``: pairwise-distinct variable bindings (reference
     Ruleset.computeConfidence defaults injectiveMapping=true even though
     mining counts support non-injectively — Ruleset.scala:186).
     """
-    return _body_rel(triples, rules, shape, injective=injective).distinct()
-
-
-def body_sizes(
-    triples: DataFrame, rules: DataFrame, shape: str,
-    injective: bool = False,
-) -> DataFrame:
-    """(combo, body_size) per surviving rule combo — bodySize = #distinct
-    (?a,?b) body bindings (RuleCounting.scala:66-96).
-
-    l2 fast path: the body is ONE atom, so its distinct (a,b) bindings are
-    exactly the predicate's distinct facts — body_size = |q| (direction is
-    a bijection; injective drops reflexive facts). No join, no shuffle of
-    the pair relation: a predicate-size aggregation broadcast onto the
-    combos. l3v2/l3v3 aggregate countDistinct over the raw body join
-    (one partial-aggregated shuffle — never a materialized pair set)."""
+    pairs = spark_sql(
+        VAR_PAIRS, triples,
+        _var_table(rules.where(F.col("shape") == shape), "0"), injective,
+    )
     if shape == "l2":
-        combos = rules.where(F.col("shape") == "l2").select(*COMBO).distinct()
-        base = (
-            triples.where(F.col("s") != F.col("o")) if injective else triples
-        )
-        psz = base.groupBy(F.col("p").alias("q")).agg(
-            F.count(F.lit(1)).alias("body_size")
-        )
-        return combos.join(F.broadcast(psz), "q").select(*COMBO, "body_size")
-    rel = _body_rel(triples, rules, shape, injective=injective)
-    return rel.groupBy(*COMBO).agg(
-        F.countDistinct("a", "b").alias("body_size")
-    )
-
-
-def _head_side(triples: DataFrame) -> DataFrame:
-    """higherCardinalitySide per predicate (TripleIndex.scala:155-169)."""
-    return triples.groupBy("p").agg(
-        F.countDistinct("s").alias("ns"), F.countDistinct("o").alias("no")
-    ).select(
-        "p",
-        F.when(F.col("ns") >= F.col("no"), "subject").otherwise("object")
-        .alias("side"),
-    )
-
-
-def _pca_sizes(
-    pairs: DataFrame, shaped: DataFrame, triples: DataFrame, side: DataFrame
-) -> DataFrame:
-    """pca_body_size per (shape, p, combo): expand pairs to the combo's
-    head predicates (tiny broadcast), keep pairs whose head entity on the
-    higherCardinalitySide exists for p, count."""
-    combo_heads = shaped.select("shape", "p", *COMBO).distinct().join(
-        F.broadcast(side), "p"
-    )
-    expanded = _combo_join(
-        pairs, combo_heads, ["shape", *COMBO], broadcast_right=True
-    )
-    subs = triples.select("p", F.col("s").alias("a")).distinct()
-    objs = triples.select("p", F.col("o").alias("b")).distinct()
-    sub_side = expanded.where(F.col("side") == "subject").join(
-        subs, ["p", "a"], "left_semi"
-    )
-    obj_side = expanded.where(F.col("side") == "object").join(
-        objs, ["p", "b"], "left_semi"
-    )
-    return (
-        sub_side.unionByName(obj_side)
-        .groupBy("shape", "p", *COMBO)
-        .agg(F.count(F.lit(1)).alias("pca_body_size"))
+        r = f"CAST(NULL AS {dict(triples.dtypes)['p']}) AS r"
+        d2 = "CAST(NULL AS STRING) AS d2"
+    else:
+        r, d2 = "r", "CASE WHEN d2 = 1 THEN 'i' ELSE 'f' END AS d2"
+    return pairs.selectExpr(
+        "q", "CASE WHEN d1 = 1 THEN 'i' ELSE 'f' END AS d1", r, d2, "a", "b"
     )
 
 
@@ -298,10 +216,11 @@ def confidences(
     injective: bool = False,
     local_threshold: int = LOCAL_TRIPLES_MAX,
 ) -> DataFrame:
-    """Attach body_size/cwa_confidence and/or pca_body_size/pca_confidence.
+    """Attach body_size/cwa_confidence and/or pca_body_size/pca_confidence
+    to the l2/l3v2/l3v3 rules.
 
-    One pass: per shape the body-pair relation is computed once (cached) and
-    both measures read it.
+    One pass: mining/inst_sql.py's VAR_COUNTS finds each combo's body
+    pairs once and both sizes read them.
 
     ``min_confidence > 0`` (requires ``cwa``) is the distributed analog of
     the reference's capped counting (RuleCounting.scala:79-83: stop counting
@@ -319,11 +238,12 @@ def confidences(
     amie.mine; the constants tier uses the same bounds): at most
     ``local_threshold`` triples of one term type (0 forces the plan
     below) and ``LOCAL_RULES_MAX`` rules with terms of that type are
-    scored on the driver by the same combo laws
-    (``local_constants._var_sizes``), with the same output columns. There
-    the sizes are exact and ``min_confidence`` is a plain filter: at the
-    bound the unpruned local count took 1.9 s where the staged pruned
-    plan took 20.4 s (task9's pipeline on 196k synth_kg triples).
+    scored on the driver by the same SQL text in DuckDB
+    (``local_constants.confidences_local``), with the same output
+    columns. There the sizes are exact and ``min_confidence`` is a plain
+    filter: at the bound the unpruned local count took 1.9 s where the
+    staged pruned plan took 20.4 s (task9's pipeline on 196k synth_kg
+    triples).
     Cached triples reuse the copy (or the over-bound verdict) that an
     earlier gated call, ``amie.mine`` say, took of the same Spark cache
     entry, until they are unpersisted (``local_constants.collect_spo``).
@@ -334,67 +254,40 @@ def confidences(
                                injective, local_threshold)
     if local is not None:
         return local
-    # materialize the ruleset ONCE: rules is usually a lazy mining DAG, and
-    # every downstream derivation (per-shape combos for body_pairs, the
-    # l3v3 lower bounds, the final measure join) would otherwise re-execute
-    # the full mining self-joins — measured ~4x redundant mining work on
-    # the 1M-triple flagship (57 s -> ~20 s for the confidence pass)
-    rules = rules.localCheckpoint(eager=True)
-    side = _head_side(triples) if pca else None
-    # ONE materialization for the whole measure pass: every shape's body
-    # pairs are computed in a single union job (shape-tagged), then both
-    # measures aggregate the checkpointed relation. The per-shape /
-    # per-measure eager checkpoints this replaces cost ~10 job barriers —
-    # pure driver latency on small rulesets (VERDICT r01 perf note).
-    shaped_parts = []
-    for shape in ("l2", "l3v2", "l3v3"):
-        shaped = rules.where(F.col("shape") == shape)
-        if shape == "l3v3" and min_confidence > 0.0:
-            combos = shaped.select(*COMBO).distinct()
-            lbs = _l3v3_lower_bounds(triples, combos, injective=injective)
-            shaped = _combo_join(shaped, lbs, COMBO, "left").where(
-                F.coalesce(F.col("lb_body_size"), F.lit(0))
-                <= F.col("support") / min_confidence
-            ).drop("lb_body_size")
-            shaped = shaped.localCheckpoint(eager=True)
-        shaped_parts.append(shaped)
-    out = shaped_parts[0]
-    for part in shaped_parts[1:]:
-        out = out.unionByName(part)
-    if cwa:
-        # body sizes per shape: l2 is a broadcast-joined predicate-size
-        # lookup (no pair shuffle at all); l3v2/l3v3 one partial-aggregated
-        # countDistinct each — all three branches fuse into one union job
-        size_parts = [
-            body_sizes(triples, shaped, shape, injective=injective)
-            .withColumn("shape", F.lit(shape))
-            for shape, shaped in zip(("l2", "l3v2", "l3v3"), shaped_parts)
-        ]
-        sizes = size_parts[0]
-        for part in size_parts[1:]:
-            sizes = sizes.unionByName(part)
-        out = _combo_join(out, sizes, ["shape", *COMBO], "left")
-    if pca:
-        pair_parts = [
-            body_pairs(triples, shaped, shape, injective=injective)
-            .withColumn("shape", F.lit(shape))
-            for shape, shaped in zip(("l2", "l3v2", "l3v3"), shaped_parts)
-        ]
-        pairs = pair_parts[0]
-        for part in pair_parts[1:]:
-            pairs = pairs.unionByName(part)
-        psizes = _pca_sizes(pairs, out, triples, side)
-        out = _combo_join(out, psizes, ["shape", "p", *COMBO], "left")
+    # materialize the ruleset ONCE, each rule with its rid: rules is
+    # usually a lazy mining DAG, which the SQL text, the lower bounds and
+    # the final join would each run again
+    rules = rules.where(F.col("shape").isin(*VAR_SHAPES)).withColumn(
+        "_rid", F.monotonically_increasing_id()
+    ).localCheckpoint(eager=True)
+    if min_confidence > 0.0:
+        combos = rules.where(F.col("shape") == "l3v3").select(*COMBO)
+        lbs = _l3v3_lower_bounds(triples, combos.distinct(),
+                                 injective=injective)
+        rules = _combo_join(rules, lbs, COMBO, "left").where(
+            (F.col("shape") != "l3v3")
+            | (F.coalesce(F.col("lb_body_size"), F.lit(0))
+               <= F.col("support") / min_confidence)
+        ).drop("lb_body_size").localCheckpoint(eager=True)
+    sizes = spark_sql(VAR_COUNTS, triples, _var_table(rules, "_rid"),
+                      injective).withColumnRenamed("rid", "_rid")
+    out = rules.join(sizes, "_rid", "left").drop("_rid")
+    # a size is a count of at least 1 or NULL (mining/inst_sql.py), so
+    # the divisions below never divide by zero
     if cwa:
         out = out.withColumn(
             "cwa_confidence", F.col("support") / F.col("body_size")
         )
         if min_confidence > 0.0:
             out = out.where(F.col("cwa_confidence") >= min_confidence)
+    else:
+        out = out.drop("body_size")
     if pca:
         out = out.withColumn(
             "pca_confidence", F.col("support") / F.col("pca_body_size")
         )
+    else:
+        out = out.drop("pca_body_size")
     return out
 
 
@@ -416,21 +309,21 @@ def qpca_confidence(
       qpca_body_size = sum over entities of
         pos_e + max(0, neg_e - max(0, A - e_card))
     """
-    side = _head_side(triples)  # higherCardinalitySide per predicate
+    side = _side(triples)
     # per-(p, side-entity) existing cardinality + per-p average cardinality
     scard = triples.groupBy("p", F.col("s").alias("ent")).agg(
         F.countDistinct("o").alias("ecard")
-    ).withColumn("eside", F.lit("subject"))
+    ).withColumn("eside", F.lit("s"))
     ocard = triples.groupBy("p", F.col("o").alias("ent")).agg(
         F.countDistinct("s").alias("ecard")
-    ).withColumn("eside", F.lit("object"))
+    ).withColumn("eside", F.lit("o"))
     ecards = scard.unionByName(ocard)
     avg_c = triples.groupBy("p").agg(
         F.round(F.count(F.lit(1)) / F.countDistinct("s")).cast("long").alias("avg_s"),
         F.round(F.count(F.lit(1)) / F.countDistinct("o")).cast("long").alias("avg_o"),
     ).join(side, "p").select(
         "p",
-        F.when(F.col("side") == "subject", F.col("avg_s"))
+        F.when(F.col("hside") == "s", F.col("avg_s"))
         .otherwise(F.col("avg_o")).alias("avg_card"),
     )
     head = triples.select("p", F.col("s").alias("a"), F.col("o").alias("b"))
@@ -443,9 +336,9 @@ def qpca_confidence(
         tagged = expanded.join(
             head.withColumn("_pos", F.lit(True)), ["p", "a", "b"], "left"
         ).withColumn("_pos", F.coalesce(F.col("_pos"), F.lit(False)))
-        ent = F.when(F.col("side") == "subject", F.col("a")).otherwise(F.col("b"))
+        ent = F.when(F.col("hside") == "s", F.col("a")).otherwise(F.col("b"))
         per_ent = tagged.groupBy(
-            "p", *COMBO, F.col("side").alias("eside"), ent.alias("ent")
+            "p", *COMBO, F.col("hside").alias("eside"), ent.alias("ent")
         ).agg(
             F.sum(F.when(F.col("_pos"), 1).otherwise(0)).alias("pos"),
             F.sum(F.when(F.col("_pos"), 0).otherwise(1)).alias("neg"),

@@ -12,16 +12,18 @@ Reference semantics (core:algorithm/amie/RuleCounting.scala):
                   side), scaling pcaBodySize to bodySize or 0.
 
 Rules are keyed by `rid` (head + canonical body). CWA =
-support/body_size; PCA = support/pca_body_size. Two laws, no per-shape
-DataFrame code:
-  * the var-only shapes l2/l3v2/l3v3 go through ``to_var_schema`` to
-    mining/measures.py, which counts body pairs once per (q,d1,r,d2)
-    combo rather than once per rule;
-  * the constants shapes s4-s9 are the one SQL text of
-    mining/inst_sql.py, run here through ``spark.sql`` over the triples
-    and a rule table with 0/1 position tags (``_inst_rules``), and by
-    DuckDB on the driver-local path — two executors, one law.
-    qpca_constants reads the raw binding sets of the same text.
+support/body_size; PCA = support/pca_body_size. Both families are SQL
+text of mining/inst_sql.py, run here through ``measures.spark_sql`` over
+the triples and a rule table, and by DuckDB on the driver-local path —
+two executors, one law per family, no per-shape DataFrame code:
+  * the var-only shapes l2/l3v2/l3v3 (VAR_COUNTS) go through
+    ``to_var_schema`` to the var rule table (``measures._var_table``),
+    which counts body pairs once per (shape, q, d1, r, d2) combo rather
+    than once per rule; qpca_constants hands them to
+    ``measures.qpca_confidence``;
+  * the constants shapes s4-s9 (COUNTS) take a rule table with 0/1
+    position tags (``_inst_rules``); qpca_constants reads the raw binding
+    sets of the same text (RAW_PREDICTIONS).
 
 Driver-local gate (``local_constants.collect_spo`` for the triples, the
 same one mining/constants.mine_constants, amie.mine and
@@ -47,6 +49,7 @@ from rdfrules_spark.mining.inst_sql import (
     COUNTS,
     RAW_PREDICTIONS,
     SQL_SHAPES,
+    VAR_COUNTS,
 )
 from rdfrules_spark.mining.local_constants import (
     LOCAL_RULES_MAX,
@@ -56,7 +59,12 @@ from rdfrules_spark.mining.local_constants import (
     collect_spo,
     confidences_constants_local,
 )
-from rdfrules_spark.mining.measures import confidences, qpca_confidence
+from rdfrules_spark.mining.measures import (
+    _side,
+    _var_table,
+    qpca_confidence,
+    spark_sql,
+)
 
 
 def _split(col, i):
@@ -84,15 +92,6 @@ def _parsed(rules: DataFrame) -> DataFrame:
         "_ats", lambda a: a["s"].startswith("?") & a["o"].startswith("?")
     )
     return out.withColumn("_inst", inst).withColumn("_vv", vv)
-
-
-def _side(triples: DataFrame) -> DataFrame:
-    """higherCardinalitySide per predicate ('s' or 'o')."""
-    return triples.groupBy("p").agg(
-        F.countDistinct("s").alias("ns"), F.countDistinct("o").alias("no")
-    ).select(
-        "p", F.when(F.col("ns") >= F.col("no"), "s").otherwise("o").alias("hside")
-    )
 
 
 def _inst_rules(R: DataFrame) -> DataFrame:
@@ -124,19 +123,6 @@ def _inst_rules(R: DataFrame) -> DataFrame:
         F.when(var_head_s, 0).otherwise(1).alias("fvpos"),
         F.substring(head_const, 3, 1_000_000).alias("hA"),
         *vv(0, "a1"), *vv(1, "a2"), *ca(0, "c1"), *ca(1, "c2"),
-    )
-
-
-def _inst_sql(text: str, t: DataFrame, R: DataFrame,
-              injective: bool) -> DataFrame:
-    """A text of mining/inst_sql.py through ``spark.sql``. spark.sql drops
-    the temporary views it names its DataFrame arguments by, and dropping
-    a view uncaches every cached plan with the same result — the caller's
-    cached triples among them. The marker column makes the triples
-    argument a different plan, which still reads that cache."""
-    return t.sparkSession.sql(
-        text, T=t.withColumn("_arg", F.lit(1)), R=_inst_rules(R),
-        inj=injective,
     )
 
 
@@ -276,12 +262,10 @@ def confidences_constants(
     present = {r["shape"] for r in R.select("shape").distinct().collect()}
     parts = []
     if present & set(VAR_SHAPES):
-        # the gate above decided: the var-only laws run distributed too
-        parts.append(confidences(_var_rules(R), t, injective=injective,
-                                 local_threshold=0)
-                     .select("rid", "body_size", "pca_body_size"))
+        parts.append(spark_sql(VAR_COUNTS, t,
+                               _var_table(_var_rules(R), "rid"), injective))
     if present & set(SQL_SHAPES):
-        parts.append(_inst_sql(COUNTS, t, R, injective))
+        parts.append(spark_sql(COUNTS, t, _inst_rules(R), injective))
     out = _sizes(
         R, parts, "rid string, body_size long, pca_body_size long"
     ).select(
@@ -389,7 +373,7 @@ def qpca_constants(
     # the constants shapes: the raw binding sets of mining/inst_sql.py,
     # every row before the keep flag
     if present & set(SQL_SHAPES):
-        preds = _inst_sql(RAW_PREDICTIONS, t, R, injective).join(
+        preds = spark_sql(RAW_PREDICTIONS, t, _inst_rules(R), injective).join(
             R.select("rid", "p", "hside"), "rid"
         )
         parts.append(budget(preds))

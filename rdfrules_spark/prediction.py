@@ -22,7 +22,8 @@ evaluate_completeness  TP/FP/FN + precision/recall/F1 vs a test set
 
 Scale notes:
   * prediction is ONE job per rule *shape*, not per rule: body bindings are
-    computed once per surviving (q,d1,r,d2) combo (measures.body_pairs) and
+    computed once per surviving (q,d1,r,d2) combo (measures.body_pairs,
+    the var-only SQL text of mining/inst_sql.py through spark.sql) and
     joined to the rule table — no driver-side per-rule loop;
   * the Positive/Pca tagging joins are left-semi/left-anti against the
     (deduplicated) triple relation — no row explosion;
@@ -35,22 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from rdfrules_spark.mining.measures import body_pairs
+from rdfrules_spark.mining.measures import _combo_join, body_pairs
 
 RULE_KEY = ["p", "shape", "q", "d1", "r", "d2"]
-
-
-def _null_safe_join(left: DataFrame, right: DataFrame, keys: list[str], how="inner"):
-    """Null-safe equi-join; right's key columns are renamed first so the two
-    sides never share attribute ids (both may derive from the same rules DF)."""
-    renamed = right
-    for k in keys:
-        renamed = renamed.withColumnRenamed(k, "_" + k)
-    cond = None
-    for k in keys:
-        c = F.col(k).eqNullSafe(F.col("_" + k))
-        cond = c if cond is None else cond & c
-    return left.join(renamed, cond, how).drop(*["_" + k for k in keys])
 
 
 def predict_triples(
@@ -77,9 +65,7 @@ def predict_triples(
         shaped = rules.where(F.col("shape") == shape)
         pairs = body_pairs(t, shaped, shape, injective=injective)
         rs = shaped.select(*RULE_KEY, F.col(conf_col).alias("conf"))
-        cand = _null_safe_join(
-            pairs, rs, ["q", "d1", "r", "d2"]
-        ).select(
+        cand = _combo_join(pairs, rs, ["q", "d1", "r", "d2"]).select(
             F.col("a").alias("s"), "p", F.col("b").alias("o"),
             "shape", "q", "d1", "r", "d2", "conf",
         )
@@ -412,7 +398,7 @@ def non_redundant_top_rules(
     global shuffle beyond the (s,p,o) hash partitioning.
     """
     clusters = rule_clusters.select(*RULE_KEY, "cluster")
-    tagged = _null_safe_join(predictions, clusters, RULE_KEY, "left")
+    tagged = _combo_join(predictions, clusters, RULE_KEY, "left")
     tagged = tagged.withColumn(
         "cluster", F.coalesce(F.col("cluster"), F.lit("-1"))
     )

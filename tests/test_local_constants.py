@@ -30,11 +30,12 @@ from rdfrules_spark.mining.local_constants import (
     collect_local,
     collect_spo,
 )
-from rdfrules_spark.mining.measures import confidences
+from rdfrules_spark.mining.measures import confidences, qpca_confidence
 from rdfrules_spark.mining.measures_constants import (
     confidences_constants,
     qpca_constants,
 )
+from rdfrules_spark.prediction import predict_triples
 
 
 @pytest.fixture(scope="module")
@@ -292,17 +293,29 @@ def test_confidences_rule_bound(spark, kg, monkeypatch):
 def test_distributed_measures_keep_the_triples_cached(spark, kg):
     """spark.sql drops the views it makes for its DataFrame arguments, and
     dropping a view uncaches a cached plan with the same result: the
-    caller's cached triples must stay cached through both measures."""
+    caller's cached triples must stay cached through every measure that
+    reaches spark.sql, for constants and var-only rules alike."""
+    params = MiningParams(min_head_size=5, min_support=2,
+                          min_head_coverage=0.05)
     rules = mine_constants(
-        kg,
-        MiningParams(min_head_size=5, min_support=2, min_head_coverage=0.05),
-        constants="anywhere", quasi_binding=True,
+        kg, params, constants="anywhere", quasi_binding=True,
     ).where(F.col("shape") == "s8").limit(50).cache()
     assert kg.storageLevel.useMemory
     assert confidences_constants(rules, kg, local_threshold=0).count() == 50
     assert qpca_constants(rules, kg).count() == 50
     assert kg.storageLevel.useMemory
     rules.unpersist()
+    vrules = mine(kg, params, local_threshold=0).cache()
+    n = vrules.count()
+    scored = confidences(vrules, kg, local_threshold=0).cache()
+    assert scored.count() == n
+    assert kg.storageLevel.useMemory
+    assert qpca_confidence(vrules, kg).count() == n
+    assert kg.storageLevel.useMemory
+    assert predict_triples(scored, kg).count() > 0
+    assert kg.storageLevel.useMemory
+    scored.unpersist()
+    vrules.unpersist()
 
 
 # ------------------------------------------------------------- var-only
@@ -325,6 +338,9 @@ VAR_CASES = {
                          only_predicates=["p0", "p1", "p3"]), {}, False),
     "without-top-k": (dict(without_predicates=["p2"], top_k=7), {}, False),
     "min-confidence": ({}, dict(min_confidence=0.1), False),
+    "l3-injective-min-confidence": (dict(injective=True),
+                                    dict(injective=True, min_confidence=0.1),
+                                    False),
 }
 
 
