@@ -5,8 +5,11 @@ executors:
     mining/local_constants.py (``text.format(T=..., R=..., inj=...)``
     naming registered frames); binding sets never leave DuckDB;
   * above it, Spark SQL through mining/measures.spark_sql
-    (``spark.sql(text, T=df, R=df, inj=bool)``, which names the frames by
-    temporary views dropped after analysis).
+    (``spark_sql(text, T=df, R=df, inj=bool)``; spark.sql names the frames
+    by temporary views dropped after analysis).
+
+The mining statements that produce the rules are mining/mine_sql.py,
+run by the same two executors.
 
 Inputs:
   {T}    the triples (s, p, o);
@@ -273,6 +276,18 @@ JOIN X b ON b.rid = a.rid AND b.side = 1
 WHERE a.side = 0 AND (NOT {inj} OR a.x <> b.x)
 """
 
+#: each predicate's higherCardinalitySide (TripleIndex.scala:155-169)
+_HS = """HS AS (
+  SELECT p, CASE WHEN count(*) FILTER (WHERE pos = 0)
+                      >= count(*) FILTER (WHERE pos = 1)
+                 THEN 0 ELSE 1 END AS hside
+  FROM SE GROUP BY p)"""
+
+#: (p, hside) for every predicate of {T}
+HSIDE = _TRIPLES + ",\n" + _HS + """
+SELECT p, hside FROM HS
+"""
+
 #: the var-only body pairs P(shape, q, d1, r, d2, a, b) (module docstring)
 _PAIRS = _TRIPLES + """,
 K AS (SELECT DISTINCT shape, q, d1, r, d2 FROM {R}),
@@ -304,12 +319,7 @@ SELECT shape, q, d1, r, d2, a, b FROM P
 #: (rid, body_size, pca_body_size) for every var-only rule of {R}; C
 #: counts each combo's pairs once per head predicate, all of them (body)
 #: and those inside the PCA restriction (pca)
-VAR_COUNTS = _PAIRS + """,
-HS AS (
-  SELECT p, CASE WHEN count(*) FILTER (WHERE pos = 0)
-                      >= count(*) FILTER (WHERE pos = 1)
-                 THEN 0 ELSE 1 END AS hside
-  FROM SE GROUP BY p),
+VAR_COUNTS = _PAIRS + ",\n" + _HS + """,
 KP AS (
   SELECT DISTINCT f.shape, f.p, f.q, f.d1, f.r, f.d2, h.hside
   FROM {R} f LEFT JOIN HS h ON h.p = f.p),

@@ -83,18 +83,19 @@ def _side(triples: DataFrame) -> DataFrame:
     )
 
 
-def spark_sql(text: str, triples: DataFrame, R: DataFrame,
-              injective: bool) -> DataFrame:
-    """A text of mining/inst_sql.py through ``spark.sql`` over the triples
-    and the rule table ``R``. spark.sql drops the temporary views it names
-    its DataFrame arguments by, and dropping a view uncaches every cached
-    plan with the same result — the caller's cached triples among them.
-    The marker column makes the triples argument a different plan, which
-    still reads that cache."""
-    return triples.sparkSession.sql(
-        text, T=triples.select("s", "p", "o").withColumn("_arg", F.lit(1)),
-        R=R, inj=injective,
-    )
+def spark_sql(text: str, **args) -> DataFrame:
+    """A SQL text of mining/inst_sql.py or mining/mine_sql.py through
+    ``spark.sql``: ``args`` names its relations (DataFrames) and scalars.
+    spark.sql drops the temporary views it names its DataFrame arguments
+    by, and dropping a view uncaches every cached plan with the same
+    result — the caller's cached triples among them. A marker column
+    makes each relation argument a different plan, which still reads
+    that cache."""
+    frames = [v for v in args.values() if isinstance(v, DataFrame)]
+    return frames[0].sparkSession.sql(text, **{
+        k: v.withColumn("_arg", F.lit(1)) if isinstance(v, DataFrame) else v
+        for k, v in args.items()
+    })
 
 
 def _var_table(rules: DataFrame, rid: str) -> DataFrame:
@@ -121,8 +122,9 @@ def body_pairs(
     mining counts support non-injectively — Ruleset.scala:186).
     """
     pairs = spark_sql(
-        VAR_PAIRS, triples,
-        _var_table(rules.where(F.col("shape") == shape), "0"), injective,
+        VAR_PAIRS, T=triples,
+        R=_var_table(rules.where(F.col("shape") == shape), "0"),
+        inj=injective,
     )
     if shape == "l2":
         r = f"CAST(NULL AS {dict(triples.dtypes)['p']}) AS r"
@@ -269,8 +271,8 @@ def confidences(
             | (F.coalesce(F.col("lb_body_size"), F.lit(0))
                <= F.col("support") / min_confidence)
         ).drop("lb_body_size").localCheckpoint(eager=True)
-    sizes = spark_sql(VAR_COUNTS, triples, _var_table(rules, "_rid"),
-                      injective).withColumnRenamed("rid", "_rid")
+    sizes = spark_sql(VAR_COUNTS, T=triples, R=_var_table(rules, "_rid"),
+                      inj=injective).withColumnRenamed("rid", "_rid")
     out = rules.join(sizes, "_rid", "left").drop("_rid")
     # a size is a count of at least 1 or NULL (mining/inst_sql.py), so
     # the divisions below never divide by zero
@@ -291,74 +293,90 @@ def confidences(
     return out
 
 
-def qpca_confidence(
-    rules: DataFrame, triples: DataFrame, injective: bool = False
-) -> DataFrame:
-    """Attach qpca_body_size + qpca_confidence (RuleCounting.scala:298-380).
+def qpca_budget(preds: DataFrame, triples: DataFrame,
+                keys: list[str]) -> DataFrame:
+    """(keys..., qpca_body_size) of the distinct predicted head triples
+    ``preds`` (keys..., p, hside, s, o), hside the head predicate's
+    higherCardinalitySide ('s' or 'o'; RuleCounting.scala:298-380).
 
-    QPCA counts the distinct predicted head pairs of the body, but caps the
-    NEGATIVE examples per head entity on the higherCardinalitySide by that
-    entity's remaining "cardinality budget": an entity with existing
-    cardinality e (distinct partners for the head predicate) absorbs
-    max(0, A - e) negatives for free, where A = averageCardinality of the
-    predicate on that side (round(size / #distinct entities),
-    TripleIndex.scala:97-109); positives always count. The reference's
-    sequential budget loop is order-independent, so the whole measure is
-    one aggregation:
+    QPCA counts the predictions but caps the NEGATIVE examples per entity
+    at that side by the entity's remaining "cardinality budget": an entity
+    with existing cardinality e (distinct partners for the head
+    predicate) absorbs max(0, A - e) negatives for free, where A =
+    averageCardinality of the predicate on that side (round(size /
+    #distinct entities), TripleIndex.scala:97-109); positives always
+    count. The reference's sequential budget loop is order-independent,
+    so the whole measure is one aggregation:
 
       qpca_body_size = sum over entities of
         pos_e + max(0, neg_e - max(0, A - e_card))
-    """
-    side = _side(triples)
+
+    For an instantiated head whose constant occupies that side, every
+    prediction shares the constant's single budget (incrementNegatives,
+    RuleCounting.scala:334-355)."""
+    t = triples.select("s", "p", "o")
     # per-(p, side-entity) existing cardinality + per-p average cardinality
-    scard = triples.groupBy("p", F.col("s").alias("ent")).agg(
+    ecards = t.groupBy("p", F.col("s").alias("ent")).agg(
         F.countDistinct("o").alias("ecard")
-    ).withColumn("eside", F.lit("s"))
-    ocard = triples.groupBy("p", F.col("o").alias("ent")).agg(
-        F.countDistinct("s").alias("ecard")
-    ).withColumn("eside", F.lit("o"))
-    ecards = scard.unionByName(ocard)
-    avg_c = triples.groupBy("p").agg(
-        F.round(F.count(F.lit(1)) / F.countDistinct("s")).cast("long").alias("avg_s"),
-        F.round(F.count(F.lit(1)) / F.countDistinct("o")).cast("long").alias("avg_o"),
-    ).join(side, "p").select(
+    ).withColumn("eside", F.lit("s")).unionByName(
+        t.groupBy("p", F.col("o").alias("ent")).agg(
+            F.countDistinct("s").alias("ecard")
+        ).withColumn("eside", F.lit("o"))
+    )
+    avg_c = t.groupBy("p").agg(
+        F.round(F.count(F.lit(1)) / F.countDistinct("s")).cast("long")
+        .alias("avg_s"),
+        F.round(F.count(F.lit(1)) / F.countDistinct("o")).cast("long")
+        .alias("avg_o"),
+    ).join(_side(t), "p").select(
         "p",
         F.when(F.col("hside") == "s", F.col("avg_s"))
         .otherwise(F.col("avg_o")).alias("avg_card"),
     )
-    head = triples.select("p", F.col("s").alias("a"), F.col("o").alias("b"))
+    ent = F.when(F.col("hside") == "s", F.col("s")).otherwise(F.col("o"))
+    per_ent = preds.join(
+        t.withColumn("_pos", F.lit(True)), ["s", "p", "o"], "left"
+    ).groupBy(
+        *dict.fromkeys([*keys, "p"]), F.col("hside").alias("eside"),
+        ent.alias("ent"),
+    ).agg(
+        F.sum(F.when(F.col("_pos"), 1).otherwise(0)).alias("pos"),
+        F.sum(F.when(F.col("_pos"), 0).otherwise(1)).alias("neg"),
+    )
+    return (
+        per_ent.join(ecards, ["p", "eside", "ent"], "left")
+        .withColumn("ecard", F.coalesce(F.col("ecard"), F.lit(0)))
+        .join(F.broadcast(avg_c), "p")
+        .withColumn(
+            "counted",
+            F.col("pos") + F.greatest(
+                F.lit(0),
+                F.col("neg") - F.greatest(
+                    F.lit(0), F.col("avg_card") - F.col("ecard")
+                ),
+            ),
+        )
+        .groupBy(*keys)
+        .agg(F.sum("counted").alias("qpca_body_size"))
+    )
+
+
+def qpca_confidence(
+    rules: DataFrame, triples: DataFrame, injective: bool = False
+) -> DataFrame:
+    """Attach qpca_body_size + qpca_confidence (``qpca_budget`` over each
+    rule combo's body pairs as predicted head pairs)."""
+    side = _side(triples)
     out = None
     for shape in ("l2", "l3v2", "l3v3"):
         shaped = rules.where(F.col("shape") == shape)
         pairs = body_pairs(triples, shaped, shape, injective=injective)
         combo_heads = shaped.select("p", *COMBO).join(F.broadcast(side), "p")
-        expanded = _combo_join(pairs, combo_heads, COMBO, broadcast_right=True)
-        tagged = expanded.join(
-            head.withColumn("_pos", F.lit(True)), ["p", "a", "b"], "left"
-        ).withColumn("_pos", F.coalesce(F.col("_pos"), F.lit(False)))
-        ent = F.when(F.col("hside") == "s", F.col("a")).otherwise(F.col("b"))
-        per_ent = tagged.groupBy(
-            "p", *COMBO, F.col("hside").alias("eside"), ent.alias("ent")
-        ).agg(
-            F.sum(F.when(F.col("_pos"), 1).otherwise(0)).alias("pos"),
-            F.sum(F.when(F.col("_pos"), 0).otherwise(1)).alias("neg"),
-        )
-        sized = (
-            per_ent.join(ecards, ["p", "eside", "ent"], "left")
-            .withColumn("ecard", F.coalesce(F.col("ecard"), F.lit(0)))
-            .join(F.broadcast(avg_c), "p")
-            .withColumn(
-                "counted",
-                F.col("pos") + F.greatest(
-                    F.lit(0),
-                    F.col("neg") - F.greatest(
-                        F.lit(0), F.col("avg_card") - F.col("ecard")
-                    ),
-                ),
-            )
-            .groupBy("p", *COMBO)
-            .agg(F.sum("counted").alias("qpca_body_size"))
-            .localCheckpoint(eager=True)
+        preds = _combo_join(
+            pairs, combo_heads, COMBO, broadcast_right=True
+        ).withColumnRenamed("a", "s").withColumnRenamed("b", "o")
+        sized = qpca_budget(preds, triples, ["p", *COMBO]).localCheckpoint(
+            eager=True
         )
         withsize = _combo_join(shaped, sized, ["p", *COMBO], "left")
         out = withsize if out is None else out.unionByName(withsize)

@@ -62,6 +62,7 @@ from rdfrules_spark.mining.local_constants import (
 from rdfrules_spark.mining.measures import (
     _side,
     _var_table,
+    qpca_budget,
     qpca_confidence,
     spark_sql,
 )
@@ -262,10 +263,11 @@ def confidences_constants(
     present = {r["shape"] for r in R.select("shape").distinct().collect()}
     parts = []
     if present & set(VAR_SHAPES):
-        parts.append(spark_sql(VAR_COUNTS, t,
-                               _var_table(_var_rules(R), "rid"), injective))
+        parts.append(spark_sql(VAR_COUNTS, T=t,
+                               R=_var_table(_var_rules(R), "rid"),
+                               inj=injective))
     if present & set(SQL_SHAPES):
-        parts.append(spark_sql(COUNTS, t, _inst_rules(R), injective))
+        parts.append(spark_sql(COUNTS, T=t, R=_inst_rules(R), inj=injective))
     out = _sizes(
         R, parts, "rid string, body_size long, pca_body_size long"
     ).select(
@@ -286,22 +288,8 @@ def qpca_constants(
     rules: DataFrame, triples: DataFrame, injective: bool = False
 ) -> DataFrame:
     """Attach qpca_body_size + qpca_confidence to every canonical rule row
-    (all 9 shapes) — RuleCounting.scala:298-380 re-expressed declaratively.
-
-    QPCA counts the body's distinct predicted head triples but caps
-    NEGATIVE examples per entity at the head predicate's
-    higherCardinalitySide by that entity's remaining cardinality budget
-    (avg_card - ecard, floored at 0); positives always count. The
-    reference's sequential loop is order-independent, so per rule this is
-    one aggregation over the predicted-binding relation:
-
-      qpca_body_size = sum over entities of
-        pos_e + max(0, neg_e - max(0, avg_card - ecard_e))
-
-    The entity is the value at the higher-cardinality position of the
-    predicted triple (for instantiated heads whose constant occupies that
-    side, every prediction shares the head constant's single budget —
-    incrementNegatives, RuleCounting.scala:334-355).
+    (all 9 shapes) — RuleCounting.scala:298-380 re-expressed declaratively:
+    ``measures.qpca_budget`` per rule over its predicted head triples.
 
     Scale note: s5 materializes the per-rule entity-set product (the
     reference enumerates the same bindings); every other shape's relation
@@ -309,60 +297,8 @@ def qpca_constants(
     executed reference in tests/test_refexec_confidences.py.
     """
     t = triples.select("s", "p", "o")
-    side = _side(t)
     R = _rules(rules, t)
     present = {r["shape"] for r in R.select("shape").distinct().collect()}
-
-    # ---- budget inputs ----
-    scard = t.groupBy("p", F.col("s").alias("ent")).agg(
-        F.countDistinct("o").alias("ecard")
-    ).withColumn("eside", F.lit("s"))
-    ocard = t.groupBy("p", F.col("o").alias("ent")).agg(
-        F.countDistinct("s").alias("ecard")
-    ).withColumn("eside", F.lit("o"))
-    ecards = scard.unionByName(ocard)
-    avg_c = t.groupBy("p").agg(
-        F.round(F.count(F.lit(1)) / F.countDistinct("s")).cast("long")
-        .alias("avg_s"),
-        F.round(F.count(F.lit(1)) / F.countDistinct("o")).cast("long")
-        .alias("avg_o"),
-    ).join(side, "p").select(
-        "p",
-        F.when(F.col("hside") == "s", F.col("avg_s"))
-        .otherwise(F.col("avg_o")).alias("avg_card"),
-    )
-    known = t.withColumn("_pos", F.lit(True))
-
-    def budget(preds):
-        """preds: (rid, p, hside, s, o) distinct predicted head triples.
-        Returns (rid, qpca_body_size)."""
-        tagged = preds.join(known, ["s", "p", "o"], "left").withColumn(
-            "_pos", F.coalesce(F.col("_pos"), F.lit(False))
-        ).withColumn(
-            "ent",
-            F.when(F.col("hside") == "s", F.col("s")).otherwise(F.col("o")),
-        ).withColumn("eside", F.col("hside"))
-        per_ent = tagged.groupBy("rid", "p", "eside", "ent").agg(
-            F.sum(F.when(F.col("_pos"), 1).otherwise(0)).alias("pos"),
-            F.sum(F.when(F.col("_pos"), 0).otherwise(1)).alias("neg"),
-        )
-        return (
-            per_ent.join(ecards, ["p", "eside", "ent"], "left")
-            .withColumn("ecard", F.coalesce(F.col("ecard"), F.lit(0)))
-            .join(F.broadcast(avg_c), "p")
-            .withColumn(
-                "counted",
-                F.col("pos") + F.greatest(
-                    F.lit(0),
-                    F.col("neg") - F.greatest(
-                        F.lit(0), F.col("avg_card") - F.col("ecard")
-                    ),
-                ),
-            )
-            .groupBy("rid")
-            .agg(F.sum("counted").alias("qpca_body_size"))
-        )
-
     parts = []
     if present & set(VAR_SHAPES):
         # qpca_confidence reads its rules several times per shape and,
@@ -373,10 +309,11 @@ def qpca_constants(
     # the constants shapes: the raw binding sets of mining/inst_sql.py,
     # every row before the keep flag
     if present & set(SQL_SHAPES):
-        preds = spark_sql(RAW_PREDICTIONS, t, _inst_rules(R), injective).join(
+        preds = spark_sql(RAW_PREDICTIONS, T=t, R=_inst_rules(R),
+                          inj=injective).join(
             R.select("rid", "p", "hside"), "rid"
         )
-        parts.append(budget(preds))
+        parts.append(qpca_budget(preds, t, ["rid"]))
     out = _sizes(R, parts, "rid string, qpca_body_size long").select(
         "rid", "head", "p", "atoms", "shape", "support", "head_size",
         "head_coverage", "qpca_body_size",

@@ -122,13 +122,24 @@ def test_yago_lcs_constants_7595(spark):
 @pytest.mark.skipif(not os.path.exists(YAGO), reason="yago fixture absent")
 def test_yago_object_constants_74993(spark):
     # AmieSpec.scala:175-193 ("mine only with object instances")
+    _yago_object_constants(spark)
+
+
+@pytest.mark.skipif(not os.path.exists(YAGO), reason="yago fixture absent")
+def test_yago_object_constants_74993_distributed(spark):
+    """The same golden through the distributed plan, the only golden of
+    that plan above 2,000 triples."""
+    _yago_object_constants(spark, local_threshold=0)
+
+
+def _yago_object_constants(spark, **gate):
     from rdfrules_spark.sources.tsv import read_tsv
 
     t = read_tsv(spark, YAGO).select("s", "p", "o").distinct().cache()
     params = MiningParams(min_head_size=100, min_support=1,
                           min_head_coverage=0.01,
                           with_duplicate_predicates=False)
-    out = mine_constants(t, params, constants="object").cache()
+    out = mine_constants(t, params, constants="object", **gate).cache()
     assert out.count() == 74993
     hcs = [r.head_coverage for r in
            out.orderBy(F.desc("head_coverage")).limit(2).collect()]

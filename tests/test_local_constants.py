@@ -56,30 +56,51 @@ def _rule_key(r):
     return (r["head"], tuple(r["atoms"]), r["shape"])
 
 
-def _mine_both(kg, constants, quasi_binding, injective):
+def _mine_both(kg, constants, quasi_binding, injective, cfp=None, **kw):
     params = MiningParams(min_head_size=5, min_support=2,
-                          min_head_coverage=0.05, injective=injective)
+                          min_head_coverage=0.05, injective=injective, **kw)
     loc = mine_constants(kg, params, constants=constants,
+                         constants_for_predicates=cfp,
                          quasi_binding=quasi_binding)
     dist = mine_constants(kg, params, constants=constants,
+                          constants_for_predicates=cfp,
                           quasi_binding=quasi_binding, local_threshold=0)
     return loc, dist
 
 
-@pytest.mark.parametrize("constants,qb,inj", [
-    ("anywhere", False, False),
-    ("anywhere", True, True),
-    ("object", True, True),
-    ("lcs", True, False),
+def _case(constants, qb, inj, kw=None, n=None, tag=""):
+    return pytest.param(constants, qb, inj, kw or {}, n,
+                        id=f"{constants}-{qb}-{inj}{tag}")
+
+
+@pytest.mark.parametrize("constants,qb,inj,kw,n", [
+    _case("anywhere", False, False),
+    _case("anywhere", True, True),
+    _case("object", True, True),
+    _case("lcs", True, False),
+    # the modes the SQL text toggles; n = the rule count both paths gave
+    # before the miner became one text
+    _case("anywhere", True, False, n=5154),  # distinct-triple law off
+    _case("subject", False, True, n=1157),
+    _case("anywhere", False, False, {"max_rule_length": 2}, 44, "-l2"),
+    _case("lcs", False, True, {"with_duplicate_predicates": False}, 663,
+          "-nodup"),
+    _case("nowhere", True, False, n=909),
+    _case("nowhere", False, False,
+          {"cfp": {"p0": "object", "p1": "both", "p2": "lcs"}}, 989, "-cfp"),
+    _case("subject", True, True, {"cfp": {"p0": "object", "p3": "lcs"}},
+          1157, "-cfp"),
 ])
-def test_miner_local_equals_distributed(spark, kg, constants, qb, inj):
-    loc, dist = _mine_both(kg, constants, qb, inj)
+def test_miner_local_equals_distributed(spark, kg, constants, qb, inj, kw,
+                                        n):
+    loc, dist = _mine_both(kg, constants, qb, inj, **kw)
     lrows = {_rule_key(r): (r["support"], r["head_size"])
              for r in loc.collect()}
     drows = {_rule_key(r): (r["support"], r["head_size"])
              for r in dist.collect()}
     assert lrows, "empty ruleset would make the test vacuous"
     assert lrows == drows
+    assert n is None or len(lrows) == n
 
 
 @pytest.mark.parametrize("inj", [False, True])

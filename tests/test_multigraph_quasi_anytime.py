@@ -259,6 +259,15 @@ def test_without_quasi_binding_matches_brute(spark):
 
 
 def test_constants_for_predicates_matches_brute(spark):
+    _constants_for_predicates(spark)
+
+
+def test_constants_for_predicates_matches_brute_distributed(spark):
+    """The per-predicate dispatch of the distributed plan."""
+    _constants_for_predicates(spark, local_threshold=0)
+
+
+def _constants_for_predicates(spark, **gate):
     from oracles.brute import _atom_str, mine_brute_constants
     from rdfrules_spark.mining.constants import mine_constants
 
@@ -279,7 +288,7 @@ def test_constants_for_predicates_matches_brute(spark):
                               min_head_coverage=0.02)
         out = mine_constants(
             t, params, constants=global_policy,
-            constants_for_predicates=cfp,
+            constants_for_predicates=cfp, **gate,
         ).collect()
         sset = {(r.head, tuple(sorted(r.atoms)), r.support) for r in out}
         assert sset == bset, global_policy
