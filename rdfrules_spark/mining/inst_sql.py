@@ -83,6 +83,10 @@ SQL_SHAPES = ("s4", "s5", "s6", "s7", "s8", "s9")
 #: the relations of the triples both families read: BB the
 #: direction-tagged atoms, PS the predicate sizes (non-reflexive facts
 #: under ``inj``), SE the distinct entities of each predicate side
+_SE = """SE AS (
+  SELECT p, 0 AS pos, s AS x FROM {T}
+  UNION
+  SELECT p, 1 AS pos, o AS x FROM {T})"""
 _TRIPLES = """
 WITH
 BB AS (
@@ -92,10 +96,7 @@ BB AS (
 PS AS (
   SELECT p AS q, count(*) AS n FROM {T}
   WHERE NOT {inj} OR s <> o GROUP BY p),
-SE AS (
-  SELECT p, 0 AS pos, s AS x FROM {T}
-  UNION
-  SELECT p, 1 AS pos, o AS x FROM {T})"""
+""" + _SE
 
 _BINDINGS = _TRIPLES + """,
 E AS (
@@ -283,8 +284,8 @@ _HS = """HS AS (
                  THEN 0 ELSE 1 END AS hside
   FROM SE GROUP BY p)"""
 
-#: (p, hside) for every predicate of {T}
-HSIDE = _TRIPLES + ",\n" + _HS + """
+#: (p, hside) for every predicate of {T} (it reads no other input)
+HSIDE = "\nWITH\n" + _SE + ",\n" + _HS + """
 SELECT p, hside FROM HS
 """
 

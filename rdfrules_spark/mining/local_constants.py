@@ -60,9 +60,10 @@ constants shape included; and the full task13 pipeline reproduces the
 executed reference's 951,333 rules.
 
 Implementation notes:
-  * all terms (s/p/o/constants) share one integer code space; the codes
-    of the triple terms are their ranks, so the order-dependent laws
-    (q < r tie-breaks) compare codes as Spark compares the strings;
+  * all terms (s/p/o/constants) share one integer code space; in the
+    miner the codes of the triple terms are their ranks, so the
+    order-dependent laws (q < r tie-breaks) compare codes as Spark
+    compares the strings;
   * triple identity = row index over the distinct triple set (the
     distributed path uses xxhash64 for shuffle-width reasons; only
     equality is ever tested, so any injective id is equivalent);
@@ -228,15 +229,17 @@ def collect_triples(triples: DataFrame, bound: int) -> pd.DataFrame | None:
 
 class _Enc:
     """Shared integer code space over the triple terms (+ any extra terms
-    mapped later, e.g. rule constants absent from the KG). The codes of
-    the triple terms are their ranks, so they order like the terms."""
+    mapped later, e.g. rule constants absent from the KG). With ``sort``
+    the codes of the triple terms are their ranks, so they order like the
+    terms (the miner's order-dependent laws need that; the confidence
+    laws only test equality)."""
 
-    def __init__(self, tpdf: pd.DataFrame):
+    def __init__(self, tpdf: pd.DataFrame, sort: bool = False):
         s = tpdf["s"].to_numpy()
         p = tpdf["p"].to_numpy()
         o = tpdf["o"].to_numpy()
         codes, uniques = pd.factorize(
-            np.concatenate([s, p, o]), sort=True, use_na_sentinel=False
+            np.concatenate([s, p, o]), sort=sort, use_na_sentinel=False
         )
         n = len(tpdf)
         self.terms = np.asarray(uniques, dtype=object)
@@ -315,6 +318,17 @@ def _atom(rules: pd.DataFrame, i: int, terms) -> np.ndarray:
                     _cat(u, "|", q, "|", other), _cat(other, "|", q, "|", u))
 
 
+def _reads(stmts, i: int) -> int:
+    """How often the statements after ``stmts[i]`` read its relation, up
+    to the one that replaces it."""
+    name, n = stmts[i][0], 0
+    for later, text in stmts[i + 1:]:
+        n += text.count("{" + name + "}")
+        if later == name:
+            break
+    return n
+
+
 def mine_constants_local(
     tpdf: pd.DataFrame,
     params,
@@ -327,14 +341,15 @@ def mine_constants_local(
     head_size, head_coverage) rows identical to the distributed miner
     (`tpdf` must be distinct (s,p,o) rows; callers dedupe). DuckDB runs
     the statements of mining/mine_sql.py over the coded triples, one
-    temporary table each; only the RULES rows come back, and numpy turns
-    their codes into the canonical strings.
+    temporary table each, or a view (a subquery of its one reader) when a
+    single later statement reads it; only the RULES rows come back, and
+    numpy turns their codes into the canonical strings.
 
     ``var_keys`` (with ``constants="nowhere"``): rows in mining/amie.py's
     schema instead (p, shape, q, d1, r, d2, head_size, support,
     head_coverage), terms of the input's type. The l3v2 pair is already in
     amie's (q, d) order, by the terms' order, and the l3v3 ?a atom first."""
-    enc = _Enc(tpdf)
+    enc = _Enc(tpdf, sort=True)
     stmts, args = mine_sql.plan(params, constants, constants_for_predicates,
                                 quasi_binding)
     cfp = constants_for_predicates or {}
@@ -353,7 +368,8 @@ def mine_constants_local(
         for i, (name, text) in enumerate(stmts[:-1]):
             sql = text.format(**rel, **args)
             rel[name] = f"{name.lower()}_{i}"
-            con.execute(f"CREATE TEMP TABLE {rel[name]} AS {sql}")
+            kind = "VIEW" if _reads(stmts, i) <= 1 else "TABLE"
+            con.execute(f"CREATE TEMP {kind} {rel[name]} AS {sql}")
         rules = con.execute(stmts[-1][1].format(**rel, **args)).df()
     terms = enc.terms
     sup = rules["support"].to_numpy()

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rdfrules_spark.mining.amie import _b
-from rdfrules_spark.mining.inst_sql import VAR_COUNTS, VAR_PAIRS
+from rdfrules_spark.mining.inst_sql import HSIDE, VAR_COUNTS, VAR_PAIRS
 from rdfrules_spark.mining.local_constants import (
     LOCAL_RULES_MAX,
     LOCAL_TRIPLES_MAX,
@@ -74,13 +74,9 @@ def _combo_join(
 
 
 def _side(triples: DataFrame) -> DataFrame:
-    """higherCardinalitySide per predicate ('s' or 'o';
-    TripleIndex.scala:155-169)."""
-    return triples.groupBy("p").agg(
-        F.countDistinct("s").alias("ns"), F.countDistinct("o").alias("no")
-    ).select(
-        "p", F.when(F.col("ns") >= F.col("no"), "s").otherwise("o").alias("hside")
-    )
+    """(p, hside): mining/inst_sql.py's HSIDE, each predicate's
+    higherCardinalitySide (0 subject, 1 object)."""
+    return spark_sql(HSIDE, T=triples)
 
 
 def spark_sql(text: str, **args) -> DataFrame:
@@ -297,7 +293,7 @@ def qpca_budget(preds: DataFrame, triples: DataFrame,
                 keys: list[str]) -> DataFrame:
     """(keys..., qpca_body_size) of the distinct predicted head triples
     ``preds`` (keys..., p, hside, s, o), hside the head predicate's
-    higherCardinalitySide ('s' or 'o'; RuleCounting.scala:298-380).
+    higherCardinalitySide (``_side``; RuleCounting.scala:298-380).
 
     QPCA counts the predictions but caps the NEGATIVE examples per entity
     at that side by the entity's remaining "cardinality budget": an entity
@@ -318,10 +314,10 @@ def qpca_budget(preds: DataFrame, triples: DataFrame,
     # per-(p, side-entity) existing cardinality + per-p average cardinality
     ecards = t.groupBy("p", F.col("s").alias("ent")).agg(
         F.countDistinct("o").alias("ecard")
-    ).withColumn("eside", F.lit("s")).unionByName(
+    ).withColumn("eside", F.lit(0)).unionByName(
         t.groupBy("p", F.col("o").alias("ent")).agg(
             F.countDistinct("s").alias("ecard")
-        ).withColumn("eside", F.lit("o"))
+        ).withColumn("eside", F.lit(1))
     )
     avg_c = t.groupBy("p").agg(
         F.round(F.count(F.lit(1)) / F.countDistinct("s")).cast("long")
@@ -330,10 +326,10 @@ def qpca_budget(preds: DataFrame, triples: DataFrame,
         .alias("avg_o"),
     ).join(_side(t), "p").select(
         "p",
-        F.when(F.col("hside") == "s", F.col("avg_s"))
+        F.when(F.col("hside") == 0, F.col("avg_s"))
         .otherwise(F.col("avg_o")).alias("avg_card"),
     )
-    ent = F.when(F.col("hside") == "s", F.col("s")).otherwise(F.col("o"))
+    ent = F.when(F.col("hside") == 0, F.col("s")).otherwise(F.col("o"))
     per_ent = preds.join(
         t.withColumn("_pos", F.lit(True)), ["s", "p", "o"], "left"
     ).groupBy(

@@ -119,8 +119,7 @@ def _inst_rules(R: DataFrame) -> DataFrame:
 
     head_const = F.when(var_head_s, _split(F.col("head"), 2)).otherwise(head_s)
     return R.where(F.col("shape").isin(*SQL_SHAPES)).select(
-        "rid", "shape", "p",
-        F.when(F.col("hside") == "s", 0).otherwise(1).alias("hside"),
+        "rid", "shape", "p", "hside",
         F.when(var_head_s, 0).otherwise(1).alias("fvpos"),
         F.substring(head_const, 3, 1_000_000).alias("hA"),
         *vv(0, "a1"), *vv(1, "a2"), *ca(0, "c1"), *ca(1, "c2"),

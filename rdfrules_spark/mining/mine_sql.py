@@ -82,6 +82,8 @@ Spark compares. Canonical atom order is each executor's emission.
 
 from __future__ import annotations
 
+from rdfrules_spark.mining.inst_sql import HSIDE
+
 _LAW = ("g.support >= {ms} AND "
         "g.support / hd.head_size >= CAST({mhc} AS DOUBLE)")
 
@@ -119,23 +121,22 @@ GROUP BY ALL HAVING count(DISTINCT b.{v}) >= 2"""
 def _s4(col: str) -> str:
     """S4 with the instantiated atom on the head variable ``col``."""
     return _passing(f"""
-SELECT m.p, m.q, m.d, ca.q2, ca.cst, ca.e, count(DISTINCT m.htid) AS support
+SELECT m.p, m.q, m.d, ca.q2, ca.cst, ca.e, count(DISTINCT (m.a, m.bb)) AS support
 FROM {{MS}} m JOIN {{CA}} ca ON ca.x = m.{col}
 WHERE NOT {{ndt}} OR (ca.ctid <> m.htid AND ca.ctid <> m.tid)
 GROUP BY ALL""")
 
 
-#: lcs predicates: is their lower-cardinality side the object (ns >=
-#: no)? Only computed when some predicate follows lcs ({lcs})
-_LCS = """
-SELECT p, count(DISTINCT s) >= count(DISTINCT o) AS lo
-FROM {T} WHERE {lcs} GROUP BY p"""
+#: the lcs predicates' higherCardinalitySide (p, hside: 0 subject), the
+#: other side being where a constant may stand; only computed when some
+#: predicate follows lcs ({lcs})
+_LCS = HSIDE + "WHERE {lcs}"
 
 
 def _allowed(side: str) -> str:
     """May a constant stand at ``side`` ('subject' / 'object') of a
     predicate, given its CFP row c and LCS row l (both left-joined)?"""
-    lcs = "l.lo" if side == "object" else "NOT l.lo"
+    lcs = f"l.hside = {'0' if side == 'object' else '1'}"
     return (f"CASE WHEN coalesce(c.pos, {{constants}}) = 'lcs' THEN {lcs} "
             f"ELSE coalesce(c.pos, {{constants}}) IN ('{side}', 'both', "
             "'anywhere') END")
@@ -199,11 +200,11 @@ SELECT h.p, h.a, h.bb, h.htid, b.y AS c, b.q, b.d AS d1, b.tid AS tid1
 FROM {H0} h JOIN {B} b ON b.x = h.a
 WHERE NOT {ndt} OR b.tid <> h.htid"""),
     ("DANG_K", ("l3",), _passing(
-        "SELECT p, q, d1, count(DISTINCT htid) AS support FROM {DANG} "
+        "SELECT p, q, d1, count(DISTINCT (a, bb)) AS support FROM {DANG} "
         "GROUP BY ALL", "g.p, g.q, g.d1")),
     ("L3V3", ("l3",), _passing("""
 SELECT /*+ BROADCAST(k) */ j.p, j.q, j.d1, b.q AS r, b.d AS d2,
-       count(DISTINCT j.htid) AS support
+       count(DISTINCT (j.a, j.bb)) AS support
 FROM {DANG} j
 JOIN {DANG_K} k ON k.p = j.p AND k.q = j.q AND k.d1 = j.d1
 JOIN {B} b ON b.x = j.bb AND b.y = j.c
@@ -211,9 +212,8 @@ WHERE (NOT {ndt} OR (b.tid <> j.htid AND b.tid <> j.tid1))
   AND (NOT {inj} OR (j.c <> j.a AND j.c <> j.bb))
 GROUP BY ALL""")),
     *[(name, ("const",), text) for name, text in POLICY],
-    ("CA_ALONE", ("const", "nqb"), "SELECT * FROM {CA}"),
     # quasi-binding: alone(CA) >= 2 (one CA row per triple, so the group
-    # size is the number of distinct x)
+    # size is the number of distinct x); without it {CA_ALONE} reads CA
     ("CA_ALONE", ("const", "qb"), """
 SELECT ca.* FROM {CA} ca
 JOIN (SELECT q2, cst, e FROM {CA} GROUP BY q2, cst, e
@@ -233,11 +233,11 @@ SELECT h.p, h.a, h.bb, h.htid, c.q2 AS qa, c.cst AS csta, c.e AS ea,
 FROM {H0} h JOIN {CA_ALONE} c ON c.x = h.a
 WHERE NOT {ndt} OR c.ctid <> h.htid"""),
     ("IA_K", ("const", "l3"), _passing(
-        "SELECT p, qa, csta, ea, count(DISTINCT htid) AS support FROM {IA} "
+        "SELECT p, qa, csta, ea, count(DISTINCT (a, bb)) AS support FROM {IA} "
         "GROUP BY ALL", "g.p, g.qa, g.csta, g.ea")),
     ("S5", ("const", "l3"), _passing("""
 SELECT i.p, i.qa, i.csta, i.ea, c.q2, c.cst, c.e,
-       count(DISTINCT i.htid) AS support
+       count(DISTINCT (i.a, i.bb)) AS support
 FROM {IA} i
 JOIN {IA_K} k ON k.p = i.p AND k.qa = i.qa AND k.csta = i.csta
              AND k.ea = i.ea
@@ -388,8 +388,9 @@ def plan(params, constants: str, constants_for_predicates: dict | None,
         else "var",
         "qb" if quasi_binding else "nqb",
     }
-    stmts = [(name, text) for name, need, text in _STATEMENTS
-             if tags.issuperset(need)]
+    stmts = [(name, text if quasi_binding
+              else text.replace("{CA_ALONE}", "{CA}"))
+             for name, need, text in _STATEMENTS if tags.issuperset(need)]
     ran = list(dict.fromkeys(n for n, _ in stmts if n in _EMIT))
     stmts.append(("RULES", _rules(ran)))
     return stmts, {
