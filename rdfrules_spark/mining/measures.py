@@ -86,12 +86,12 @@ def spark_sql(text: str, **args) -> DataFrame:
     by, and dropping a view uncaches every cached plan with the same
     result — the caller's cached triples among them. A marker column
     makes each relation argument a different plan, which still reads
-    that cache."""
-    frames = [v for v in args.values() if isinstance(v, DataFrame)]
-    return frames[0].sparkSession.sql(text, **{
-        k: v.withColumn("_arg", F.lit(1)) if isinstance(v, DataFrame) else v
-        for k, v in args.items()
-    })
+    that cache. Only the relations the text reads are marked: each mark
+    is a JVM call that re-analyzes that relation's plan."""
+    frames = {k: v.withColumn("_arg", F.lit(1)) for k, v in args.items()
+              if isinstance(v, DataFrame) and "{" + k + "}" in text}
+    return next(iter(frames.values())).sparkSession.sql(
+        text, **{**args, **frames})
 
 
 def _var_table(rules: DataFrame, rid: str) -> DataFrame:
